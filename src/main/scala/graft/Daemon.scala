@@ -88,15 +88,16 @@ object Daemon {
       ds -> (() => {
         // a query before the first micro-batch commits must fail LOUD with
         // the real reason, not a raw PATH_NOT_FOUND 500 (the task-store
-        // route already guards this; review finding r7)
-        val p = new org.apache.hadoop.fs.Path(s"$workDir/stores/$ds")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        require(fs.exists(p) && fs.listStatus(p).exists(_.isDirectory),
-          s"dataSource '$ds' has no committed segments yet — post events " +
-            "and wait for the first micro-batch")
-        graft.sink.SegmentStore
-          .read(spark, s"$workDir/stores/$ds", spec)
-          .drop(graft.pipeline.Pipeline.SegmentCol)
+        // route already guards this; review finding r7) — the store read's
+        // own footer listing finds no data files then
+        val store = try graft.sink.SegmentStore
+            .read(spark, s"$workDir/stores/$ds", spec)
+          catch { case _: graft.sink.Footers.NoDataFiles =>
+            throw new IllegalArgumentException(
+              s"dataSource '$ds' has no committed segments yet — post " +
+                "events and wait for the first micro-batch")
+          }
+        store.drop(graft.pipeline.Pipeline.SegmentCol)
           .withColumnRenamed(graft.pipeline.Pipeline.TsCol, "__time")
       })
     }.toMap

@@ -54,18 +54,13 @@ object Parallelism {
   private def disabled(df: DataFrame): Boolean =
     validated(df, "spark.graft.fanout", Set("on", "off")).contains("off")
 
-  /** parquet footer row counts, keyed by (path, size, mtime) — pure file
-    * METADATA (the same facts Spark's own footer reads consult), never a
-    * query result: a regenerated or rewritten file misses the cache. */
-  private val footerRows =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   /** (nFiles, totalBytes, totalRows) of the frame's leaf scan files, from
-    * file status + parquet footers only — never a Spark job (advice r10:
-    * the old `.rdd`-based planned() could materialize whole AQE query
-    * stages when a caller passed a frame with upstream exchanges). Rows is
-    * None when a leaf is not readable parquet; callers then fall back to
-    * the full-width fan-out this helper shipped before r11. */
+    * file status + [[graft.sink.Footers]] row counts only — never a Spark
+    * job (advice r10: the old `.rdd`-based planned() could materialize
+    * whole AQE query stages when a caller passed a frame with upstream
+    * exchanges). Rows is None when a leaf is not readable parquet; callers
+    * then fall back to the full-width fan-out this helper shipped before
+    * r11. */
   private def scanMeta(df: DataFrame): (Int, Long, Option[Long]) = {
     val files = df.inputFiles
     val hconf = df.sparkSession.sparkContext.hadoopConfiguration
@@ -78,19 +73,7 @@ object Parallelism {
         val fs = p.getFileSystem(hconf)
         val st = fs.getFileStatus(p)
         bytes += st.getLen
-        val key = s"$f:${st.getLen}:${st.getModificationTime}"
-        val cached = footerRows.get(key)
-        val n =
-          if (cached != null) cached.longValue()
-          else {
-            val in = org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromStatus(st, hconf)
-            val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-            val c = try reader.getRecordCount finally reader.close()
-            footerRows.put(key, c)
-            c
-          }
-        rows += n
+        rows += graft.sink.Footers.footer(st, hconf).rows
       } catch { case _: Throwable => rowsKnown = false }
     }
     (files.length, bytes, if (rowsKnown && files.nonEmpty) Some(rows) else None)
@@ -98,10 +81,10 @@ object Parallelism {
 
   /** The scan's planned partition count, approximated from the SAME
     * formula Spark's FilePartition planning uses (maxSplitBytes +
-    * open-cost packing) over file metadata — no `.rdd`, no job. Slight
-    * over-estimates are safe: they only make the no-op guard fire a bit
-    * earlier, and the guard exists precisely for multi-file inputs whose
-    * scan is already wide. */
+    * open-cost packing) over file metadata — no `.rdd`, no job. Err low:
+    * an UNDER-estimate only adds an exchange the scan did not need, while
+    * an OVER-estimate makes the no-op guard fire on a scan that is really
+    * narrow and silently disables the fan-out it needed. */
   private def plannedApprox(df: DataFrame, nFiles: Int, bytes: Long): Int = {
     val conf = df.sparkSession.conf
     def sizeConf(key: String, dflt: Long): Long =

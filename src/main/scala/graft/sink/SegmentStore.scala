@@ -92,17 +92,23 @@ object SegmentStore {
     }
 
   /** Read a segment store written in per-batch mode and produce the final
-    * rollup (one row per bucket × dims). `mergeSchema=true` tolerates schema
-    * evolution across chunks (new dims appear as nulls in old segments —
-    * SURVEY §2.9 schema-evolution row).
+    * rollup (one row per bucket × dims). The footer-merged schema
+    * ([[Footers.schema]], what `mergeSchema` infers, without its Spark job)
+    * tolerates schema evolution across chunks (new dims appear as nulls in
+    * old segments — SURVEY §2.9 schema-evolution row).
     */
   def read(spark: SparkSession, path: String, spec: IngestionSpec,
       baseFilter: DataFrame => DataFrame = identity,
       finalizeSketches: Boolean = true): DataFrame = {
     graft.functions.GraftFunctions.register(spark) // sketch merge functions
-    val df = baseFilter(spark.read.option("mergeSchema", "true").parquet(path))
+    val df = baseFilter(open(spark, path))
     mergePartials(df, spec, finalizeSketches)
   }
+
+  /** The stored rows of `paths` under their footer-merged schema: 0 Spark
+    * jobs to build. */
+  private[graft] def open(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.schema(Footers.schema(spark, paths: _*)).parquet(paths: _*)
 
   /** Shared partial→final merge for [[read]] and [[readUnion]] (one
     * definition so the dim-classification and implicit-count rules cannot
@@ -192,30 +198,32 @@ object SegmentStore {
   /** Shared prune scaffold: list segment dirs, read the sidecar (absent →
     * keep all), apply `admit` to per-segment merged stats, and keep any
     * segment the sidecar has never covered. `_`-prefixed dirs are hidden
-    * from Spark's listing even as an explicit root — hence the part-file
-    * glob — which is exactly what keeps the sidecar out of normal store
-    * reads. Driver state is the segment list (bounded by time chunks).
+    * from Spark's listing even as an explicit root — hence the explicit
+    * part files — which is exactly what keeps the sidecar out of normal
+    * store reads. Driver state is the segment list (bounded by time chunks).
     */
-  /** True iff the zone-map sidecar exists AND holds at least one parquet
-    * file. A crash during appendStats can leave an empty dir (or only a
+  /** The zone-map sidecar's parquet files, empty when there is no sidecar.
+    * A crash during appendStats can leave an empty dir (or only a
     * _temporary child); every sidecar consumer must degrade conservatively
-    * (keep-all / null ranges) instead of failing the read on the empty
-    * glob — one shared check so no consumer forgets (review finding r7). */
-  private def hasStatsSidecar(spark: SparkSession, path: String): Boolean = {
+    * (keep-all / null ranges) instead of failing the read on no files — one
+    * shared listing so no consumer forgets (review finding r7). */
+  private def statsFiles(spark: SparkSession, path: String): Seq[String] = {
     val statsPath = new org.apache.hadoop.fs.Path(s"$path/${SegmentSink.StatsDir}")
     val fs = statsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(statsPath) &&
-      fs.listStatus(statsPath).exists(_.getPath.getName.endsWith(".parquet"))
+    if (!fs.exists(statsPath)) Nil
+    else fs.listStatus(statsPath).toSeq.map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).map(_.toString)
   }
 
   private def pruneWith(spark: SparkSession, path: String)(
       admit: DataFrame => DataFrame): Seq[String] = {
     val segDirs = listSegmentDirs(spark, path)
-    if (!hasStatsSidecar(spark, path)) return segDirs
-    // mergeSchema: a store written across sidecar versions keeps old rows
-    // readable (missing typed columns surface as nulls → conservative)
-    val stats = spark.read.option("mergeSchema", "true")
-      .parquet(s"$path/${SegmentSink.StatsDir}/*.parquet")
+    val sidecar = statsFiles(spark, path)
+    if (sidecar.isEmpty) return segDirs
+    // footer-merged schema: a store written across sidecar versions keeps
+    // old rows readable (missing typed columns surface as nulls →
+    // conservative)
+    val stats = open(spark, sidecar: _*)
     val admitted = admit(stats)
       .select(col(Pipeline.SegmentCol)).collect().map(_.getString(0))
     val covered = stats.select(col(Pipeline.SegmentCol)).distinct()
@@ -362,18 +370,18 @@ object SegmentStore {
     * sidecar. Input is already-reduced partials, so this is a cheap scan.
     */
   def metadata(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.option("mergeSchema", "true").parquet(path)
+    val df = open(spark, path)
     // batch-mode stores (writeBatch) carry no __batch_id partition key
     val batches = if (df.columns.contains("__batch_id"))
       count_distinct(col("__batch_id")) else lit(1L)
     val rows = df
       .groupBy(col(Pipeline.SegmentCol))
       .agg(count(lit(1)).as("rows"), batches.as("batches"))
-    if (!hasStatsSidecar(spark, path)) // stats-less store: dim_ranges = null
+    val sidecar = statsFiles(spark, path)
+    if (sidecar.isEmpty) // stats-less store: dim_ranges = null
       return rows.withColumn("dim_ranges", lit(null).cast(
         "array<struct<column:string,min_val:string,max_val:string>>"))
-    val raw = spark.read.option("mergeSchema", "true")
-      .parquet(s"$path/${SegmentSink.StatsDir}/*.parquet")
+    val raw = open(spark, sidecar: _*)
     // merge bounds per family FIRST (lexicographic min over stringified
     // numbers would say "10" < "9"), then render to strings for the report
     val typed = raw.columns.contains("min_lng")
@@ -460,8 +468,7 @@ object SegmentStore {
       finalizeSketches: Boolean = true): DataFrame = {
     require(paths.nonEmpty, "readUnion needs at least one store path")
     graft.functions.GraftFunctions.register(spark)
-    val parts = paths.map(p =>
-      spark.read.option("mergeSchema", "true").parquet(p).drop("__batch_id"))
+    val parts = paths.map(p => open(spark, p).drop("__batch_id"))
     mergePartials(parts.reduce(_ unionByName (_, allowMissingColumns = true)),
       spec, finalizeSketches)
   }

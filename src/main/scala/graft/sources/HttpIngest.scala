@@ -79,6 +79,17 @@ final class HttpIngestServer(
   /** queryId → Spark job group of an in-flight query (native or SQL), for
     * `DELETE /druid/v2/{queryId}` / `DELETE /druid/v2/sql/{sqlQueryId}`. */
   private val running = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** Per routed dataSource: files this server spooled, and the spooled
+    * count a finished drain of its stream covered. Starts at (1, 0), so the
+    * first query after start-up still drains any backlog already in the
+    * spool. */
+  private final class SpoolCount {
+    val spooled = new java.util.concurrent.atomic.AtomicLong(1L)
+    val drained = new java.util.concurrent.atomic.AtomicLong(0L)
+  }
+  private val spoolCounts: Map[String, SpoolCount] =
+    routes.map { case (ds, _) => ds -> new SpoolCount }
   @volatile private var server: Option[HttpServer] = None
   @volatile private var pool: Option[java.util.concurrent.ExecutorService] = None
 
@@ -168,7 +179,8 @@ final class HttpIngestServer(
         if (async || target.isEmpty) (lines.size.toLong, 0L)
         else {
           val ingest = target.get
-          ingest.activeQuery.foreach(_.processAllAvailable())
+          if (routes.contains(dataSource)) drain(dataSource)
+          else ingest.activeQuery.foreach(_.processAllAvailable())
           // the drain may also flush BACKLOG from earlier async posts; the
           // reply is per-request (servlet contract: sent ≤ received), so cap
           // — the cumulative engine counters report the backlog
@@ -187,9 +199,12 @@ final class HttpIngestServer(
     * documented delta vs Druid's per-queryType result envelopes; the row
     * CONTENT matches the compiler's oracle-checked output.
     *
-    * Read-your-writes: if the queried dataSource also has an ingest route,
-    * its stream drains before the store read, so a sync post followed by a
-    * query sees the posted rows (tighter than upstream's handoff window).
+    * Read-your-writes: if the queried dataSource also has an ingest route
+    * and this server spooled files for it since the last finished drain,
+    * its stream drains before the store read ([[drain]]), so a query sees
+    * every post (sync or async) that returned before it arrived — tighter
+    * than upstream's handoff window. Files that reach the spool by other
+    * means are visible after the stream's next trigger.
     * Result size is capped (`context.maxQueryRows`, default 10000) — a
     * query endpoint must never OOM the server on an unbounded scan.
     */
@@ -214,7 +229,7 @@ final class HttpIngestServer(
           Option(c.get("timeout"))).map(_.asLong).getOrElse(0L)
         withJobGroup(queryId, timeoutMs) {
           val df = graft.queries.DruidQueryCompiler.compile(body, name => {
-            routes.get(name).foreach(_.activeQuery.foreach(_.processAllAvailable()))
+            drain(name)
             // routed streams first, then SQL-ingested / batch-task stores —
             // one namespace, same as the SQL endpoint's resolution
             val qs = allQueryables()
@@ -335,7 +350,7 @@ final class HttpIngestServer(
       .filter { case (ds, _) =>
         referenced(ds.toLowerCase(java.util.Locale.ROOT)) }
       .map { case (ds, thunk) =>
-        routes.get(ds).foreach(_.activeQuery.foreach(_.processAllAvailable()))
+        drain(ds)
         ds -> thunk()
       }
     // a statement that references NO table at all (SELECT 1 — the JDBC
@@ -1389,7 +1404,7 @@ final class HttpIngestServer(
         case None =>
           reply(ex, 404, s"""{"error":${quote(s"unknown dataSource '$ds'")}}""")
         case Some(thunk) =>
-          routes.get(ds).foreach(_.activeQuery.foreach(_.processAllAvailable()))
+          drain(ds)
           val schema = thunk().schema
           import org.apache.spark.sql.types._
           def isDim(f: StructField) = f.dataType match {
@@ -1601,7 +1616,24 @@ final class HttpIngestServer(
     Files.write(tmp, lines.mkString("", "\n", "\n").getBytes(UTF_8))
     Files.move(tmp, dir.resolve(s"post-${UUID.randomUUID()}.json"),
       StandardCopyOption.ATOMIC_MOVE)
+    spoolCounts.get(dataSource).foreach(_.spooled.incrementAndGet())
   }
+
+  /** Read-your-writes for a routed dataSource: drain its stream only when
+    * this server spooled files after the last finished drain. The count is
+    * read BEFORE the drain starts, so the drain covers every file it names;
+    * a query that finds nothing new pays no trigger wait (a drain returns
+    * only after a trigger that finds no data). A dead stream still fails
+    * the caller with its cause. Unrouted names are no-ops. */
+  private def drain(ds: String): Unit =
+    for (stream <- routes.get(ds); q <- stream.activeQuery) {
+      val count = spoolCounts(ds)
+      val covered = count.spooled.get
+      if (covered > count.drained.get) {
+        q.processAllAvailable()
+        count.drained.accumulateAndGet(covered, (a: Long, b: Long) => math.max(a, b))
+      } else q.exception.foreach(e => throw e)
+    }
 
   private def quote(s: String): String = mapper.writeValueAsString(s)
 

@@ -112,7 +112,7 @@ object IndexTask {
     // ingest pipeline, and the whole-store merge read before it grew
     // linearly with store size on every append (review findings r7 ×2)
     val (segments, rows) = {
-      val agg = spark.read.option("mergeSchema", "true").parquet(target)
+      val agg = graft.sink.SegmentStore.open(spark, target)
         .filter(col("__batch_id") === batchId)
         .agg(count_distinct(col(Pipeline.SegmentCol)).as("segs"),
           count(lit(1)).as("rows")).head()

@@ -709,6 +709,66 @@ class HttpIngestSpec extends SparkSpec {
     } finally handle.close()
   }
 
+  /** One routed dataSource `ryw_ds` on a daemon whose trigger fires only
+    * every 5 s — long enough that a query paying a trigger wait shows. */
+  private def slowTriggerDaemon(): graft.Daemon.Handle = {
+    val tmp = Files.createTempDirectory("graft-ryw").toString
+    val spec = graft.config.SpecLoader.fromJson(
+      """{"dataSchema": {"dataSource": "ryw_ds",
+            "parser": {"parseSpec": {
+              "timestampSpec": {"column": "ts", "format": "auto"},
+              "dimensionsSpec": {"dimensions": ["etype"]}}},
+            "metricsSpec": [{"type": "count", "name": "cnt"}],
+            "granularitySpec": {"segmentGranularity": "HOUR", "queryGranularity": "HOUR"}},
+           "tuning": {"windowPeriod": "PT30M"}}""")
+    val schema = StructType(Seq(StructField("ts", StringType),
+      StructField("etype", StringType), StructField("value", DoubleType)))
+    graft.Daemon.run(spark, tmp, schema, Seq(spec),
+      trigger = Trigger.ProcessingTime(5000),
+      now = lit(Timestamp.valueOf("2024-03-01 12:00:00")))
+  }
+
+  private val rywCount =
+    """{"queryType": "timeseries", "dataSource": "ryw_ds", "granularity": "all",
+        "aggregations": [{"type": "longSum", "name": "n", "fieldName": "cnt"}]}"""
+
+  test("read-your-writes without a trigger wait: a query right after a sync " +
+      "post sees its rows and does not wait for the next trigger") {
+    val handle = slowTriggerDaemon()
+    try {
+      val (pc, pb) = post(handle.port, "/v1/post/ryw_ds",
+        """[{"ts":"2024-03-01 12:01:00","etype":"c","value":1.0},
+            {"ts":"2024-03-01 12:02:00","etype":"d","value":2.0}]""")
+      assert(pc == 200 && pb == """{"result":{"received":2,"sent":2}}""", pb)
+      val t0 = System.nanoTime()
+      val (qc, qb) = post(handle.port, "/druid/v2", rywCount)
+      val ms = (System.nanoTime() - t0) / 1e6
+      assert(qc == 200 && qb.contains("\"n\":2"), qb)
+      // the sync post's drain already covered every spooled file, so the
+      // query skips the drain; paying one would cost up to a 5 s trigger
+      assert(ms < 2000, f"query after a drained sync post took $ms%.0f ms")
+    } finally handle.close()
+  }
+
+  test("read-your-writes after an async post: the next query drains it") {
+    val handle = slowTriggerDaemon()
+    try {
+      val (pc, pb) = post(handle.port, "/v1/post/ryw_ds",
+        """{"ts":"2024-03-01 12:01:00","etype":"c","value":1.0}""")
+      assert(pc == 200 && pb == """{"result":{"received":1,"sent":1}}""", pb)
+      val (ac, ab) = post(handle.port, "/v1/post/ryw_ds?async=true",
+        """[{"ts":"2024-03-01 12:03:00","etype":"c","value":1.0},
+            {"ts":"2024-03-01 12:04:00","etype":"e","value":1.0}]""")
+      assert(ac == 200 && ab == """{"result":{"received":2,"sent":0}}""", ab)
+      // no trigger is due for seconds: only a drain makes the rows visible
+      val (qc, qb) = post(handle.port, "/druid/v2", rywCount)
+      assert(qc == 200 && qb.contains("\"n\":3"), qb)
+      val (sc, sb) = post(handle.port, "/druid/v2/sql",
+        """{"query": "SELECT SUM(cnt) AS k FROM ryw_ds"}""")
+      assert(sc == 200 && sb.contains("\"k\":3"), sb)
+    } finally handle.close()
+  }
+
   private def delete(port: Int, path: String): (Int, String) = {
     val req = HttpRequest.newBuilder()
       .uri(URI.create(s"http://127.0.0.1:$port$path")).DELETE().build()
