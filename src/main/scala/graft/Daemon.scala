@@ -16,8 +16,9 @@ import graft.streaming.IngestStream
   *
   * Wiring: per spec file → [[IngestStream.startRouted]] (mode picked from
   * the spec) tailing the dataSource's spool dir, all registered in one
-  * [[HttpIngestServer]] routing map. `run` is the testable core; `main`
-  * parses args and blocks until terminated.
+  * [[HttpIngestServer]] routing map, which also serves each stream's store
+  * to the query endpoints. `run` is the testable core; `main` parses args
+  * and blocks until terminated.
   *
   * Usage:
   *   runMain graft.Daemon <workDir> <valueSchemaDDL> <spec.json> [spec2.json ...]
@@ -77,38 +78,12 @@ object Daemon {
         throw e
     }
     val streams = started.toMap
-    // broker-style query endpoint: each dataSource resolves to its store's
-    // merged, finalized rollup view (fresh read per query; Druid's __time
-    // envelope; the segment/bookkeeping columns are storage detail). Sketch
-    // metrics arrive FINALIZED — the query edge's rendering, like the
-    // broker; programmatic callers wanting re-mergeable binaries use
-    // SegmentStore.read(finalizeSketches = false) directly.
-    val queryRoutes = specs.map { spec =>
-      val ds = spec.dataSchema.dataSource
-      ds -> (() => {
-        // a query before the first micro-batch commits must fail LOUD with
-        // the real reason, not a raw PATH_NOT_FOUND 500 (the task-store
-        // route already guards this; review finding r7) — the store read's
-        // own footer listing finds no data files then
-        val store = try graft.sink.SegmentStore
-            .read(spark, s"$workDir/stores/$ds", spec)
-          catch { case _: graft.sink.Footers.NoDataFiles =>
-            throw new IllegalArgumentException(
-              s"dataSource '$ds' has no committed segments yet — post " +
-                "events and wait for the first micro-batch")
-          }
-        store.drop(graft.pipeline.Pipeline.SegmentCol)
-          .withColumnRenamed(graft.pipeline.Pipeline.TsCol, "__time")
-      })
-    }.toMap
+    // each routed stream serves its own store on the query endpoints.
     // SQL ingestion (INSERT/REPLACE INTO … PARTITIONED BY) lands segments
     // beside the streaming stores, under its own namespace so a SQL-written
     // dataSource can never corrupt a stream's rollup store
     val server = new HttpIngestServer(s"$workDir/spool", routes = streams,
-      queryRoutes = queryRoutes,
-      sqlIngestRoot = Some(s"$workDir/sql_stores"),
-      storeRoots = specs.map(sp => sp.dataSchema.dataSource ->
-        s"$workDir/stores/${sp.dataSchema.dataSource}").toMap)
+      sqlIngestRoot = Some(s"$workDir/sql_stores"))
     val boundPort = server.start(port)
     Handle(server, boundPort, streams)
   }

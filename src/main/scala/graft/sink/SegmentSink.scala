@@ -189,51 +189,42 @@ object SegmentSink {
 
   private def writeData(out: DataFrame, path: String, batchId: Long): Unit = {
     writeTzMarker(out.sparkSession, path) // zone check BEFORE any data lands
-    // Append-commit fast path, DEFAULT since r11 (verdict r10 #5): when no
-    // (segment, __batch_id=N) dir exists yet — every batch except a
-    // replay-after-crash or a batch-id collision across checkpoint-fresh
-    // queries on one store — a plain APPEND is semantically identical to
-    // the dynamic partition overwrite and skips its whole staging dance
-    // (stage every file under a job dir, list + match existing partitions,
-    // delete + move per partition). When a dir for this batch id DOES
-    // exist, fall back to dynamic overwrite, which reproduces the exact
-    // pre-r11 semantics: only partitions present in the INCOMING batch are
-    // replaced (a blanket delete of __batch_id=N dirs would eat other
-    // queries' same-numbered batches — caught by StreamingSpec's schema-
-    // evolution/retention/kill tests when tried). Before appending, any
-    // stale $path/_temporary from a crashed append attempt is removed —
-    // v1 commits stage under that SHARED dir and a later job's commit
-    // would merge the dead attempt's committed task dirs beside its own
-    // output; foreachBatch writers are serial per store, so the delete
-    // can never race a live job. Measured (set-mode A/B, quiet window,
-    // min-of-6): streaming_rollup_replay 2.115 → 1.946 s. The always-
-    // dynamic arm stays under spark.graft.sink.appendCommit=false.
-    val appendCommit = !out.sparkSession.conf
-      .getOption("spark.graft.sink.appendCommit").contains("false")
+    // Append commit: when no (segment, __batch_id=N) dir exists yet — every
+    // batch except a replay-after-crash or a batch-id collision across
+    // checkpoint-fresh queries on one store — a plain APPEND is
+    // semantically identical to the dynamic partition overwrite and skips
+    // its whole staging dance (stage every file under a job dir, list +
+    // match existing partitions, delete + move per partition). When a dir
+    // for this batch id DOES exist, fall back to dynamic overwrite: only
+    // partitions present in the INCOMING batch are replaced (a blanket
+    // delete of __batch_id=N dirs would eat other queries' same-numbered
+    // batches — caught by StreamingSpec's schema-evolution/retention/kill
+    // tests when tried). Before appending, any stale $path/_temporary from
+    // a crashed append attempt is removed — v1 commits stage under that
+    // SHARED dir and a later job's commit would merge the dead attempt's
+    // committed task dirs beside its own output; foreachBatch writers are
+    // serial per store, so the delete can never race a live job. Measured
+    // (set-mode A/B, quiet window, min-of-6): streaming_rollup_replay
+    // 2.115 → 1.946 s against always-dynamic.
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(out.sparkSession.sparkContext.hadoopConfiguration)
-    val batchDirExists = appendCommit && fs.exists(root) &&
+    val batchDirExists = fs.exists(root) &&
       fs.listStatus(root).exists { st =>
         st.isDirectory && st.getPath.getName.startsWith(s"$SegmentCol=") &&
           fs.exists(new org.apache.hadoop.fs.Path(st.getPath, s"__batch_id=$batchId"))
       }
-    if (appendCommit && !batchDirExists) {
-      val tmp = new org.apache.hadoop.fs.Path(root, "_temporary")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      out.write.mode("append")
-        .partitionBy(SegmentCol, "__batch_id")
-        .option("compression",
-          out.sparkSession.conf.get("spark.graft.partialCompression", "zstd"))
-        .parquet(path)
-    } else
-    out.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(SegmentCol, "__batch_id")
-      // partial micro-batch files are small and short-lived (compaction
-      // rewrites them zstd); the codec stays tunable for latency-sensitive
-      // ingest — zstd default keeps the 100 TB storage argument
-      .option("compression",
-        out.sparkSession.conf.get("spark.graft.partialCompression", "zstd"))
+    // partial micro-batch files are small and short-lived, but zstd keeps
+    // the 100 TB storage argument (compaction rewrites them zstd too)
+    val writer =
+      if (batchDirExists)
+        out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      else {
+        val tmp = new org.apache.hadoop.fs.Path(root, "_temporary")
+        if (fs.exists(tmp)) fs.delete(tmp, true)
+        out.write.mode("append")
+      }
+    writer.partitionBy(SegmentCol, "__batch_id")
+      .option("compression", "zstd")
       .parquet(path)
   }
 

@@ -27,38 +27,33 @@ import graft.streaming.IngestStream
   * not per-socket pipelines.
   *
   * Reply semantics match the servlet: `async=true` returns immediately with
-  * `sent=0` (fire-and-forget); the sync default drains the attached query and
+  * `sent=0` (fire-and-forget); the sync default drains the routed query and
   * reports the sent/dropped deltas observed by the engine's counters — the
   * reference's per-batch send() future wait.
   */
-/** @param attach single attached ingest query (legacy/simple deployments)
-  * @param routes per-dataSource ingest queries — the servlet's
+/** @param routes per-dataSource ingest queries — the servlet's
   *   dataSource→beam routing (upstream TranquilityServlet resolves the URL
-  *   path against its beam map): each routed dataSource's sync reply drains
-  *   and reports ITS stream's counters; unrouted dataSources fall back to
-  *   `attach`, else spool-only (fire-and-forget counters)
+  *   path against its beam map). A routed dataSource is served entirely by
+  *   its stream: its sync post replies drain and report ITS counters, its
+  *   queries read [[IngestStream.brokerView]] (the stream picked the
+  *   store's layout, so it knows how to read it), `/status` reports it and
+  *   `sys.segments` lists its store. Unrouted dataSources spool only
+  *   (fire-and-forget counters).
   * @param queryRoutes dataSource → fresh queryable DataFrame (must carry
-  *   `__time`), enabling the broker-style `POST /druid/v2` endpoint: native
-  *   query JSON in, JSON row array out (see [[handleQuery]]). Thunks, not
-  *   frames — every query re-reads current store state.
+  *   `__time`) for frames that are not a routed stream's store. Thunks,
+  *   not frames — every query re-reads current state.
   * @param sqlIngestRoot when set, `POST /druid/v2/sql` also accepts Druid's
   *   SQL ingestion statements (`INSERT INTO ds … PARTITIONED BY …` /
   *   `REPLACE INTO ds OVERWRITE ALL …`, the MSQ surface): the inner query
-  *   routes against `queryRoutes` like any SELECT, segments land under
-  *   `<root>/<ds>`, and the reply is the per-segment task report.
-  */
-/** @param storeRoots dataSource → segment-store directory for the routed
-  *   streaming stores — feeds `sys.segments` on the SQL endpoint (the
-  *   SQL-ingested stores under `sqlIngestRoot` are discovered there
-  *   dynamically).
+  *   routes against the queryable dataSources like any SELECT, segments
+  *   land under `<root>/<ds>`, and the reply is the per-segment task
+  *   report.
   */
 final class HttpIngestServer(
     spoolDir: String,
-    attach: Option[IngestStream] = None,
     routes: Map[String, IngestStream] = Map.empty,
     queryRoutes: Map[String, () => org.apache.spark.sql.DataFrame] = Map.empty,
     sqlIngestRoot: Option[String] = None,
-    storeRoots: Map[String, String] = Map.empty,
     /** when set, `POST /druid/indexer/v1/task` accepts index/index_parallel
       * batch-ingestion tasks ([[IndexTask]]); their segment stores land
       * under `<root>/<ds>` and the dataSources become queryable through
@@ -101,7 +96,8 @@ final class HttpIngestServer(
     // sqlIngestRoot, task-ingested stores) — a server configured with only
     // those roots must still serve queries and INSERT INTO statements, not
     // 404 them (review finding r7: the old queryRoutes-only gate)
-    if (queryRoutes.nonEmpty || sqlIngestRoot.isDefined || indexTaskRoot.isDefined) {
+    if (routes.nonEmpty || queryRoutes.nonEmpty || sqlIngestRoot.isDefined ||
+        indexTaskRoot.isDefined) {
       s.createContext("/druid/v2", (ex: HttpExchange) => handleQuery(ex))
       // longest-prefix routing: /druid/v2/sql and /druid/v2/datasources win
       // over /druid/v2
@@ -162,25 +158,18 @@ final class HttpIngestServer(
         case NonFatal(e) => reply(ex, 400, s"""{"error":${quote(e.getMessage)}}"""); return
       }
       val async = Option(ex.getRequestURI.getQuery).exists(_.contains("async=true"))
-      val target = routes.get(dataSource).orElse(attach)
-      // serialized PER target stream so sync counter deltas from concurrent
-      // posts don't interleave — posts routed to DIFFERENT streams proceed
-      // in parallel, but every dataSource falling back to the shared attach
-      // stream serializes on ONE lock (they share its cumulative `sent`
-      // counter; review finding r7). With NO attach stream there is no
-      // shared counter — spool-only posts keep per-dataSource parallelism.
-      val lockKey =
-        if (routes.contains(dataSource) || attach.isEmpty) dataSource
-        else "__attach__"
-      val lock = locks.computeIfAbsent(lockKey, _ => new Object)
+      val target = routes.get(dataSource)
+      // serialized PER dataSource so sync counter deltas from concurrent
+      // posts don't interleave — posts to DIFFERENT dataSources proceed in
+      // parallel
+      val lock = locks.computeIfAbsent(dataSource, _ => new Object)
       val result = lock.synchronized {
         val sent0 = target.map(_.sent).getOrElse(0L)
         spool(dataSource, lines)
         if (async || target.isEmpty) (lines.size.toLong, 0L)
         else {
           val ingest = target.get
-          if (routes.contains(dataSource)) drain(dataSource)
-          else ingest.activeQuery.foreach(_.processAllAvailable())
+          drain(dataSource)
           // the drain may also flush BACKLOG from earlier async posts; the
           // reply is per-request (servlet contract: sent ≤ received), so cap
           // — the cumulative engine counters report the backlog
@@ -194,7 +183,8 @@ final class HttpIngestServer(
 
   /** Broker-style query endpoint (`POST /druid/v2`, the Druid broker's
     * native-query path): the body is a verbatim Druid query JSON, compiled
-    * by [[graft.queries.DruidQueryCompiler]] against `queryRoutes`. The
+    * by [[graft.queries.DruidQueryCompiler]] against the queryable
+    * dataSources ([[allQueryables]]). The
     * response is a JSON array of row objects (timestamps ISO-8601) —
     * documented delta vs Druid's per-queryType result envelopes; the row
     * CONTENT matches the compiler's oracle-checked output.
@@ -314,12 +304,15 @@ final class HttpIngestServer(
         .map(st => st.getPath.getName -> st.getPath.toString).toSeq
     }.toMap
 
-  /** Queryable dataSources: explicit routes plus SQL-ingested stores
-    * (routes win a name collision — the namespaces are disjoint by
+  /** Queryable dataSources: SQL-ingested and task-ingested stores, the
+    * plain `queryRoutes` frames, and the routed streams' stores (routed
+    * streams win a name collision — the namespaces are disjoint by
     * construction, but a stream's rollup must never be shadowed). */
   private def allQueryables(): Map[String, () => org.apache.spark.sql.DataFrame] =
     sqlStoreDirs().map { case (ds, dir) =>
-      ds -> (() => org.apache.spark.sql.SparkSession.active.read.parquet(dir))
+      // footer-merged schema: opening the store runs no Spark job
+      ds -> (() => graft.sink.SegmentStore.open(
+        org.apache.spark.sql.SparkSession.active, dir))
     } ++
       // batch-task stores read through the FINALIZING SegmentStore path
       // (per-batch partials re-merge; sketch/mean/first-last finalize) —
@@ -337,7 +330,8 @@ final class HttpIngestServer(
           graft.sink.SegmentStore.read(spark, dir, spec)
             .withColumnRenamed(graft.pipeline.Pipeline.TsCol, "__time")
         }
-      } ++ queryRoutes
+      } ++ queryRoutes ++
+      routes.map { case (ds, stream) => ds -> (() => stream.brokerView()) }
 
   /** Drain + substitute only the dataSources a statement references
     * (case-insensitive, like Spark identifier resolution). `allowEmpty` for
@@ -558,7 +552,8 @@ final class HttpIngestServer(
         val metaFrames = graft.queries.DruidSql.referencedMeta(plan)
           .flatMap(p => graft.queries.DruidSql
             .metaFrame(spark, p, allQueryables(),
-              storeRoots ++ sqlStoreDirs() ++
+              routes.flatMap { case (ds, s) => s.storePath.map(ds -> _) } ++
+                sqlStoreDirs() ++
                 taskStores.asScala.map { case (ds, (dir, _)) => ds -> dir },
               statements.values.asScala.toSeq
                 .map(st => (st.id, "query_controller", st.datasource, st.state)) ++
@@ -856,8 +851,8 @@ final class HttpIngestServer(
                 s
               case other => throw new IllegalArgumentException(
                 s"unsupported task type '$other' (index/index_parallel/" +
-                  "kill/compact; streaming supervisors attach as server " +
-                  "routes, SQL ingestion via INSERT INTO)")
+                  "kill/compact; streaming supervisors are server routes, " +
+                  "SQL ingestion via INSERT INTO)")
             }
           } catch {
             case NonFatal(e) =>
@@ -1444,8 +1439,7 @@ final class HttpIngestServer(
   private def handleStatus(ex: HttpExchange): Unit =
     try {
       if (ex.getRequestMethod != "GET") { reply(ex, 405, """{"error":"GET only"}"""); return }
-      val all = routes ++ attach.map("_attached" -> _).toMap
-      val per = all.toSeq.sortBy { case (ds, _) => ds }.map { case (ds, s) =>
+      val per = routes.toSeq.sortBy { case (ds, _) => ds }.map { case (ds, s) =>
         s"""${quote(ds)}:{"received":${s.received},"sent":${s.sent},"dropped":${s.dropped}}"""
       }
       reply(ex, 200, per.mkString("""{"dataSources":{""", ",", "}}"))

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.config.IngestionSpec
 import graft.pipeline.Pipeline
@@ -43,8 +44,7 @@ final class IngestStream(
       outputPath: String,
       now: Column = current_timestamp(),
       trigger: Trigger = Trigger.AvailableNow(),
-      writer: Option[(DataFrame, Long) => Unit] = None,
-      dedupKeys: Seq[String] = Nil): StreamingQuery = {
+      writer: Option[(DataFrame, Long) => Unit] = None): StreamingQuery = {
     ensureListener()
     // Row-wise stages run on the STREAMING DataFrame so the `observe` drop
     // counters surface in StreamingQueryProgress.observedMetrics (inside
@@ -61,22 +61,14 @@ final class IngestStream(
     // exactly 2w, anything the dedup watermark discards would have been
     // dropped as late by the window filter anyway, so no valid event is lost
     // and state is bounded by the same windowPeriod contract.
-    // Keys must survive projection (i.e. be declared dimensions). Removal
-    // happens AFTER the send accounting — `sent` counts admitted rows,
-    // duplicates included, mirroring the reference's per-send counters.
-    // Keys come from the call site or, spec-driven, tuning.dedupKeys (the
-    // JSON surface the Daemon / HTTP / Kafka paths load).
-    val effectiveKeys = if (dedupKeys.nonEmpty) dedupKeys else spec.tuning.dedupKeys
-    val staged = if (effectiveKeys.isEmpty) projected
-    else {
-      val missing = effectiveKeys.filterNot(projected.columns.contains)
-      require(missing.isEmpty,
-        s"dedupKeys must be projected dimensions; missing: ${missing.mkString(",")}")
-      projected
-        .withWatermark(Pipeline.TsCol,
-          s"${2 * spec.tuning.windowPeriod.getSeconds} seconds")
-        .dropDuplicatesWithinWatermark(effectiveKeys)
-    }
+    // Removal happens AFTER the send accounting — `sent` counts admitted
+    // rows, duplicates included, mirroring the reference's per-send counters.
+    val keys = dedupKeys(projected)
+    val staged = if (keys.isEmpty) projected
+    else projected
+      .withWatermark(Pipeline.TsCol,
+        s"${2 * spec.tuning.windowPeriod.getSeconds} seconds")
+      .dropDuplicatesWithinWatermark(keys)
     // `writer` is a test seam (fault injection for the Kafka commit-contract
     // spec); production always takes the SegmentSink default, in
     // deferred-stats mode: one action per batch (no persist, no per-batch
@@ -111,8 +103,20 @@ final class IngestStream(
         write(out, batchId)
       }
       .start()
+    store = Some((outputPath, None))
     query = Some(q)
     q
+  }
+
+  /** spec.tuning.dedupKeys (the JSON surface the Daemon / HTTP / Kafka paths
+    * load), checked against the projected frame: a key must survive
+    * projection, i.e. be a declared dimension. */
+  private def dedupKeys(projected: DataFrame): Seq[String] = {
+    val keys = spec.tuning.dedupKeys
+    val missing = keys.filterNot(projected.columns.contains)
+    require(missing.isEmpty,
+      s"dedupKeys must be projected dimensions; missing: ${missing.mkString(",")}")
+    keys
   }
 
   /** Mode ROUTING for a spec's streaming ingest (SURVEY §2.9; closes the
@@ -233,16 +237,10 @@ final class IngestStream(
       .withColumn(Pipeline.RawTsCol, col(Pipeline.TsCol))
       .withWatermark(Pipeline.TsCol, s"$wmSeconds seconds")
     // spec-driven event dedup chains BEFORE the windowed aggregation (two
-    // stateful operators — the supported dedup→agg chain); same key
-    // validation as start()
+    // stateful operators — the supported dedup→agg chain)
+    val keys = dedupKeys(projected)
     val staged =
-      if (spec.tuning.dedupKeys.isEmpty) watermarked
-      else {
-        val missing = spec.tuning.dedupKeys.filterNot(projected.columns.contains)
-        require(missing.isEmpty,
-          s"dedupKeys must be projected dimensions; missing: ${missing.mkString(",")}")
-        watermarked.dropDuplicatesWithinWatermark(spec.tuning.dedupKeys)
-      }
+      if (keys.isEmpty) watermarked else watermarked.dropDuplicatesWithinWatermark(keys)
     val aggs = spec.dataSchema.aggregators.map(graft.pipeline.Aggregators.toColumn) match {
       case Nil => Seq(count(lit(1)).as("rows")) // same fallback as Pipeline.rollup
       case xs  => xs
@@ -266,8 +264,44 @@ final class IngestStream(
       .trigger(trigger)
       .format("parquet")
       .start()
+    // the file sink writes exactly `out`'s columns, so that schema opens
+    // the store without a footer scan
+    store = Some((outputPath, Some(out.schema)))
     query = Some(q)
     q
+  }
+
+  /** Where the running query writes, and the schema it writes when its
+    * rows are final (watermarked mode; None for per-batch partials). */
+  @volatile private var store: Option[(String, Option[StructType])] = None
+
+  /** The store directory of the running query (None before start). */
+  def storePath: Option[String] = store.map(_._1)
+
+  /** The broker view of the store: one fresh read per call, `__time` for
+    * the bucket, no `segment` column (storage detail). A per-batch store
+    * re-merges its partials ([[graft.sink.SegmentStore.read]], sketches
+    * finalized — the query edge's rendering); a watermarked store is read
+    * as written, since its finalized rows do not re-merge. A store with no
+    * data file yet fails with the reason, not a raw PATH_NOT_FOUND. */
+  def brokerView(): DataFrame = {
+    val ds = spec.dataSchema.dataSource
+    val (path, finalSchema) = store.getOrElse(throw new IllegalStateException(
+      s"dataSource '$ds' has no started ingest stream"))
+    def noData = new IllegalArgumentException(s"dataSource '$ds' has no " +
+      "committed segments yet — post events and wait for the first micro-batch")
+    val rows = finalSchema match {
+      case None =>
+        try graft.sink.SegmentStore.read(spark, path, spec)
+        catch { case _: graft.sink.Footers.NoDataFiles => throw noData }
+      case Some(schema) =>
+        // the file sink's metadata log lists only committed files; the
+        // footer listing answers whether any was written at all
+        if (graft.sink.Footers.dataFiles(
+            spark.sparkContext.hadoopConfiguration, Seq(path)).isEmpty) throw noData
+        spark.read.schema(schema).parquet(path)
+    }
+    rows.drop(Pipeline.SegmentCol).withColumnRenamed(Pipeline.TsCol, "__time")
   }
 
   // set when start() installs the default (deferred-stats) writer

@@ -34,8 +34,6 @@ object ReplayProfile {
     // written file (a ChecksumFileSystem artifact absent on HDFS/S3)
     if (sys.env.contains("RAW_FS"))
       b.config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-    if (sys.env.contains("SNAPPY"))
-      b.config("spark.graft.partialCompression", "snappy")
     // route checkpoint WAL/commit IO through the FileSystem API (picks up
     // RawLocalFileSystem above) instead of FileContext+CRC
     if (sys.env.contains("FS_CKPT"))

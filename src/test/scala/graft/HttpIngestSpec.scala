@@ -57,7 +57,7 @@ class HttpIngestSpec extends SparkSpec {
       maxFilesPerTrigger = 8),
       s"$tmp/out", now = lit(Timestamp.valueOf("2024-03-01 12:00:00")),
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(50))
-    val server = new HttpIngestServer(spool, Some(ingest))
+    val server = new HttpIngestServer(spool, routes = Map("events" -> ingest))
     val port = server.start()
     try {
       // 8 producers × 5 async posts × 3 events, all in-window
@@ -188,7 +188,13 @@ class HttpIngestSpec extends SparkSpec {
       val (c2, b2) = post(port, "/v1/post/views_ds",
         """{"ts":"2024-03-01 12:03:00","etype":"v","value":3.0}""")
       assert(c2 == 200 && b2 == """{"result":{"received":1,"sent":1}}""")
-      // an unrouted dataSource spools fire-and-forget (no attached stream)
+      // a routes-only server serves each routed store on /druid/v2 too
+      val (qc, qb) = post(port, "/druid/v2",
+        """{"queryType": "timeseries", "dataSource": "clicks_ds",
+            "granularity": "all",
+            "aggregations": [{"type": "longSum", "name": "n", "fieldName": "cnt"}]}""")
+      assert(qc == 200 && qb.contains("\"n\":2"), qb)
+      // an unrouted dataSource spools fire-and-forget (no routed stream)
       val (c3, b3) = post(port, "/v1/post/other_ds",
         """{"ts":"2024-03-01 12:04:00","etype":"x","value":9.0}""")
       assert(c3 == 200 && b3 == """{"result":{"received":1,"sent":0}}""")
@@ -769,6 +775,115 @@ class HttpIngestSpec extends SparkSpec {
     } finally handle.close()
   }
 
+  test("watermarked daemon store: a hyperUnique dataSource answers " +
+      "/druid/v2 with its finalized rows, no re-merge") {
+    val tmp = Files.createTempDirectory("graft-wm-daemon").toString
+    // a finalized sketch at a fixed granularity routes to watermarked mode
+    val spec = graft.config.SpecLoader.fromJson(
+      """{"dataSchema": {"dataSource": "hu_ds",
+            "parser": {"parseSpec": {
+              "timestampSpec": {"column": "ts", "format": "auto"},
+              "dimensionsSpec": {"dimensions": []}}},
+            "metricsSpec": [{"type": "hyperUnique", "name": "users", "fieldName": "user"}],
+            "granularitySpec": {"segmentGranularity": "HOUR", "queryGranularity": "HOUR"}},
+           "tuning": {"windowPeriod": "PT10M"}}""")
+    val schema = StructType(Seq(StructField("ts", StringType),
+      StructField("user", StringType)))
+    val handle = graft.Daemon.run(spark, tmp, schema, Seq(spec),
+      trigger = Trigger.ProcessingTime(50),
+      now = lit(Timestamp.valueOf("2024-03-01 12:00:00")))
+    try {
+      val (pc, pb) = post(handle.port, "/v1/post/hu_ds",
+        """[{"ts":"2024-03-01 10:05:00","user":"u1"},
+            {"ts":"2024-03-01 10:20:00","user":"u2"},
+            {"ts":"2024-03-01 10:40:00","user":"u1"}]""")
+      assert(pc == 200, pb)
+      // 11:30 moves the watermark (max event time − 10 min) past 11:00,
+      // so the state store emits the 10:00 bucket on a later trigger
+      val (lc, lb) = post(handle.port, "/v1/post/hu_ds",
+        """{"ts":"2024-03-01 11:30:00","user":"u3"}""")
+      assert(lc == 200, lb)
+      val query =
+        """{"queryType": "timeseries", "dataSource": "hu_ds", "granularity": "hour",
+            "aggregations": [{"type": "longSum", "name": "u", "fieldName": "users"}]}"""
+      val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
+      var (qc, qb) = post(handle.port, "/druid/v2", query)
+      while (qc == 400 && qb.contains("no committed segments yet") &&
+          System.nanoTime() < deadline) {
+        Thread.sleep(50)
+        val r = post(handle.port, "/druid/v2", query); qc = r._1; qb = r._2
+      }
+      assert(qc == 200, qb)
+      assert(qb.contains("2024-03-01T10:00:00") && qb.contains("\"u\":2"), qb)
+      val (sc, sb) = post(handle.port, "/druid/v2/sql",
+        """{"query": "SELECT SUM(users) AS u FROM hu_ds"}""")
+      assert(sc == 200 && sb == """[{"u":2}]""", sb)
+    } finally handle.close()
+  }
+
+  test("SQL-ingested store opens from footers: resolving it launches no " +
+      "Spark job, and it reads like a plain parquet read") {
+    val tmp = Files.createTempDirectory("graft-sqlstore").toString
+    val src = Seq(("2024-03-01 10:00:00", "c"), ("2024-03-01 11:00:00", "c"),
+      ("2024-03-01 11:00:00", "d")).toDF("t", "etype")
+      .select(col("t").cast("timestamp").as("__time"), col("etype"))
+    val server = new HttpIngestServer(s"$tmp/spool",
+      queryRoutes = Map("src_ds" -> (() => src)),
+      sqlIngestRoot = Some(s"$tmp/sql"))
+    val port = server.start()
+    try {
+      val (ic, ib) = post(port, "/druid/v2/sql",
+        """{"query": "INSERT INTO sql_ds SELECT __time, etype, COUNT(*) AS cnt FROM src_ds GROUP BY 1, 2 PARTITIONED BY DAY"}""")
+      assert(ic == 200, ib)
+      // EXPLAIN resolves the dataSource and plans it without running it:
+      // any job in the request's job group opened the store. Listener
+      // events are asynchronous, so a sentinel job in a group of its own
+      // marks that every job the request started has been seen.
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val done = new java.util.concurrent.CountDownLatch(1)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          Option(e.properties).flatMap(p =>
+              Option(p.getProperty("spark.jobGroup.id"))).foreach { g =>
+            if (g.startsWith("graft-query-explain-sql-store-")) jobs.incrementAndGet()
+            else if (g == "sql-store-sentinel") done.countDown()
+          }
+      }
+      val sc = spark.sparkContext
+      sc.addSparkListener(listener)
+      try {
+        val (ec, eb) = post(port, "/druid/v2/sql",
+          """{"query": "EXPLAIN PLAN FOR SELECT * FROM sql_ds",
+              "context": {"sqlQueryId": "explain-sql-store"}}""")
+        assert(ec == 200, eb)
+        sc.setJobGroup("sql-store-sentinel", "sentinel")
+        spark.range(1).count()
+        assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+      assert(jobs.get == 0, s"${jobs.get} Spark job(s) to open the SQL store")
+
+      val plain = spark.read.parquet(s"$tmp/sql/sql_ds")
+      val om = new com.fasterxml.jackson.databind.ObjectMapper()
+      val (hc, hb) = post(port, "/druid/v2/sql",
+        """{"query": "SELECT * FROM sql_ds", "resultFormat": "array", "header": true}""")
+      assert(hc == 200, hb)
+      val header = om.readTree(hb).get(0)
+      assert((0 until header.size).map(header.get(_).asText) == plain.columns.toSeq, hb)
+      val (rc, rb) = post(port, "/druid/v2/sql",
+        """{"query": "SELECT etype, cnt FROM sql_ds", "resultFormat": "array"}""")
+      assert(rc == 200, rb)
+      val served = om.readTree(rb)
+      val rows = (0 until served.size).map { i =>
+        (served.get(i).get(0).asText, served.get(i).get(1).asLong) }
+      assert(rows.sorted == plain.select($"etype", $"cnt".cast("long"))
+        .as[(String, Long)].collect().toSeq.sorted, rb)
+    } finally server.stop()
+  }
+
   private def delete(port: Int, path: String): (Int, String) = {
     val req = HttpRequest.newBuilder()
       .uri(URI.create(s"http://127.0.0.1:$port$path")).DELETE().build()
@@ -981,7 +1096,7 @@ class HttpIngestSpec extends SparkSpec {
     receiver.start(Sources.jsonFileStream(spark, s"$spool/events", schema),
       s"$tmp/out", now = lit(Timestamp.valueOf("2024-03-01 12:00:00")),
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(50))
-    val server = new HttpIngestServer(spool, Some(receiver))
+    val server = new HttpIngestServer(spool, routes = Map("events" -> receiver))
     val port = server.start()
     try {
       // hop 1: a sender stream forwarding through the beam (chunk size 2 →
@@ -1035,7 +1150,7 @@ class HttpIngestSpec extends SparkSpec {
     ingest.start(Sources.jsonFileStream(spark, s"$spool/events", schema),
       s"$tmp/out", now = lit(Timestamp.valueOf("2024-03-01 12:00:00")),
       trigger = Trigger.ProcessingTime(50))
-    val server = new HttpIngestServer(spool, Some(ingest))
+    val server = new HttpIngestServer(spool, routes = Map("events" -> ingest))
     val port = server.start()
     try {
       // NDJSON body: 4 events, one outside the ±30m window → sent=3

@@ -87,9 +87,11 @@ class StreamingSpec extends SparkSpec {
     val tmp = Files.createTempDirectory("graft-dedup-stream").toString
     val now = ts("2024-03-01 12:00:00")
 
-    val ingest = new IngestStream(spark, dSpec, s"$tmp/checkpoint")
+    def keyed(keys: String*) =
+      dSpec.copy(tuning = dSpec.tuning.copy(dedupKeys = keys))
+    val ingest = new IngestStream(spark, keyed("id"), s"$tmp/checkpoint")
     ingest.start(input.toDF(), s"$tmp/out", now = lit(now),
-      trigger = Trigger.ProcessingTime(50), dedupKeys = Seq("id"))
+      trigger = Trigger.ProcessingTime(50))
 
     input.addData(
       EvD(ts("2024-03-01 11:50:00"), 1L, "click", 1.0),
@@ -119,10 +121,9 @@ class StreamingSpec extends SparkSpec {
     assert(ingest.received == 6 && ingest.sent == 6 && ingest.dropped == 0)
 
     // dedupKeys must be projected dimensions — actionable error otherwise
-    val bad = new IngestStream(spark, dSpec, s"$tmp/checkpoint2")
+    val bad = new IngestStream(spark, keyed("nonexistent_key"), s"$tmp/checkpoint2")
     val e = intercept[IllegalArgumentException] {
-      bad.start(input.toDF(), s"$tmp/out2", now = lit(now),
-        dedupKeys = Seq("nonexistent_key"))
+      bad.start(input.toDF(), s"$tmp/out2", now = lit(now))
     }
     assert(e.getMessage.contains("nonexistent_key"))
   }
