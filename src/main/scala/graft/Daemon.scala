@@ -14,11 +14,12 @@ import graft.streaming.IngestStream
   * ingest for N dataSources, each declared by a Druid-shaped ingestion-spec
   * JSON file and backed by its own routed streaming query + segment store.
   *
-  * Wiring: per spec file → [[IngestStream.startRouted]] (mode picked from
-  * the spec) tailing the dataSource's spool dir, all registered in one
-  * [[HttpIngestServer]] routing map, which also serves each stream's store
-  * to the query endpoints. `run` is the testable core; `main` parses args
-  * and blocks until terminated.
+  * Wiring: per spec file → one [[IngestStream]] (its `start` picks the mode
+  * from the spec) tailing the dataSource's spool dir, all started and
+  * stopped together ([[IngestStream.startAll]] / [[IngestStream.stopAll]])
+  * and registered in one [[HttpIngestServer]] routing map, which also
+  * serves each stream's store to the query endpoints. `run` is the testable
+  * core; `main` parses args and blocks until terminated.
   *
   * Usage:
   *   runMain graft.Daemon <workDir> <valueSchemaDDL> <spec.json> [spec2.json ...]
@@ -29,24 +30,11 @@ object Daemon {
 
   final case class Handle(server: HttpIngestServer, port: Int,
       streams: Map[String, IngestStream]) {
-    /** Ordered shutdown: stop accepting, drain every query, rebuild stats.
-      * A stream whose query already died must not abort its siblings'
-      * drains — every stream is attempted, then the first failure rethrows.
-      */
+    /** Ordered shutdown: stop accepting, then drain every query and rebuild
+      * its stats ([[IngestStream.stopAll]]). */
     def close(): Unit = {
       server.stop()
-      val failures = streams.toSeq.flatMap { case (ds, s) =>
-        scala.util.Try(s.flushAndStop()).failed.toOption.map(ds -> _)
-      }
-      failures.headOption.foreach { case (ds, e) =>
-        val ex = new RuntimeException(
-          s"daemon shutdown: ${failures.size} stream(s) failed to drain " +
-            s"(first: $ds)", e)
-        // the other drains' causes ride along as suppressed — an operator
-        // debugging a multi-stream shutdown sees every failure
-        failures.drop(1).foreach { case (_, e2) => ex.addSuppressed(e2) }
-        throw ex
-      }
+      IngestStream.stopAll(streams.values)
     }
   }
 
@@ -58,26 +46,15 @@ object Daemon {
     val names = specs.map(_.dataSchema.dataSource)
     require(names.distinct.size == names.size,
       s"duplicate dataSource across spec files: ${names.diff(names.distinct).distinct.mkString(",")}")
-    // started incrementally: a later spec failing to start (bad aggregator
-    // combination, claimed checkpoint) must stop the queries already
-    // running, not leak them holding checkpoint locks
-    val started = scala.collection.mutable.LinkedHashMap.empty[String, IngestStream]
-    try specs.foreach { spec =>
-      val ds = spec.dataSchema.dataSource
+    val streams = IngestStream.startAll(names.zip(specs)) { (ds, spec) =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$workDir/spool/$ds"))
       val ingest = new IngestStream(spark, spec, s"$workDir/checkpoints/$ds")
-      ingest.startRouted(
+      ingest.start(
         Sources.jsonFileStream(spark, s"$workDir/spool/$ds", valueSchema,
           maxFilesPerTrigger = 16),
         s"$workDir/stores/$ds", now = now, trigger = trigger)
-      started += ds -> ingest
-    } catch {
-      case e: Throwable =>
-        started.values.foreach(s =>
-          scala.util.Try(s.activeQuery.foreach(_.stop())))
-        throw e
+      ingest
     }
-    val streams = started.toMap
     // each routed stream serves its own store on the query endpoints.
     // SQL ingestion (INSERT/REPLACE INTO … PARTITIONED BY) lands segments
     // beside the streaming stores, under its own namespace so a SQL-written

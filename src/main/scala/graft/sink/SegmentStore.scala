@@ -16,9 +16,10 @@ import graft.pipeline.Pipeline
   * rollup. Only decomposable aggregators re-merge from finalized values
   * (count→sum, sum→sum, min→min, max→max, incl. inside `filtered`); sketches
   * (hyperUnique / approxHistogram) do NOT — their finalized outputs aren't
-  * mergeable, exactly why the watermarked mode
-  * ([[graft.streaming.IngestStream.startWatermarked]]) exists: there the state
-  * store merges sketch state across batches and emits each bucket once.
+  * mergeable, so [[graft.streaming.IngestStream.start]] routes a spec holding
+  * one (at a fixed-width queryGranularity) to watermarked mode: there the
+  * state store merges sketch state across batches and emits each bucket
+  * once, and the store is read as written, never through `read`.
   *
   * Scale: the merge is a groupBy on (bucket, dims) over already-reduced rows —
   * input cardinality is segments × dims × batches, orders of magnitude below
@@ -87,8 +88,9 @@ object SegmentStore {
       case other =>
         throw new IllegalArgumentException(
           s"aggregator '$other' (${spec.name}) is not re-mergeable from finalized " +
-            "values; use hllSketch (stored sketch) or ingest with " +
-            "startWatermarked (state-store merge) instead")
+            "values; use hllSketch (stored sketch), or keep it: a stream whose " +
+            "spec holds it at a fixed-width queryGranularity routes to " +
+            "watermarked mode (state-store merge), whose store is read as written")
     }
 
   /** Read a segment store written in per-batch mode and produce the final

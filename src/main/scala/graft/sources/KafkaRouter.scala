@@ -40,8 +40,10 @@ object KafkaRouter {
   /** Start one ingest query per routed topic over `records` (kafka-shaped:
     * [[Sources.kafkaRecordSchema]]). Unrouted topics are ignored, exactly
     * like a topic matching the subscribe pattern but carrying no configured
-    * dataSource upstream. Returns the per-topic streams keyed by topic;
-    * stop with [[stopAll]] or each stream's `flushAndStop`.
+    * dataSource upstream. Each route's spec picks its ingest mode
+    * ([[IngestStream.start]]); a route that fails to start stops the ones
+    * already running ([[IngestStream.startAll]]). Returns the per-topic
+    * streams keyed by topic; stop them with [[IngestStream.stopAll]].
     */
   def start(
       spark: SparkSession,
@@ -52,7 +54,7 @@ object KafkaRouter {
       trigger: Trigger = Trigger.AvailableNow(),
       writerFor: String => Option[(DataFrame, Long) => Unit] = _ => None)
       : Map[String, IngestStream] =
-    routes.map { case (topic, route) =>
+    IngestStream.startAll(routes) { (topic, route) =>
       val ingest = new IngestStream(spark, route.spec, s"$checkpointRoot/$topic")
       ingest.start(
         // each route parses with ITS spec's parseSpec format (json default)
@@ -60,12 +62,6 @@ object KafkaRouter {
           records.filter(col("topic") === topic), route.valueSchema,
           route.spec.dataSchema.parser),
         route.outPath, now = now, trigger = trigger, writer = writerFor(topic))
-      topic -> ingest
+      ingest
     }
-
-  /** Ordered flush/close across every routed stream (the daemon's shutdown
-    * hook: drain, commit, stop — per writer, like upstream's stop()).
-    */
-  def stopAll(streams: Map[String, IngestStream]): Unit =
-    streams.values.foreach(_.flushAndStop())
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.config.IngestionSpec
@@ -35,9 +35,28 @@ final class IngestStream(
   /** handle to the running query (None before start). */
   def activeQuery: Option[StreamingQuery] = query
 
-  /** Start the ingest query: source stream → pipeline → segment-partitioned
-    * Parquet. `now` defaults to processing time; tests inject a literal clock
-    * (the TestingTimekeeper analog — SURVEY §5).
+  /** Start the ingest query: source stream → pipeline → segment store, in the
+    * mode the spec's aggregator set can honour at its queryGranularity
+    * (SURVEY §2.9; closes the calendar-granularity gap):
+    *
+    *  - FINALIZED sketches (`hyperUnique`/`cardinality`/`approxHistogram` —
+    *    estimates, not mergeable) need cross-batch state: the watermarked
+    *    state store ([[watermarked]]). That mode needs a fixed-width bucket
+    *    (streaming `window()` takes literal durations), so it covers
+    *    SECOND..DAY.
+    *  - Every other spec streams through the per-batch path ([[perBatch]]),
+    *    calendar granularities (WEEK/MONTH/QUARTER/YEAR/ALL) included:
+    *    `date_trunc` bucketing is an ordinary batch expression, and
+    *    cross-batch merge happens at read (sums/min/max) — including
+    *    sketches, IF they are the STORED forms (`hllSketch` /
+    *    `histogramSketch`, binary partials re-merged by SegmentStore).
+    *  - Finalized sketches at calendar granularity, and `exactCardinality`
+    *    at any granularity, are rejected with the fix named.
+    *
+    * `now` defaults to processing time; tests inject a literal clock (the
+    * TestingTimekeeper analog — SURVEY §5). `writer` replaces the per-batch
+    * sink (a test seam for fault injection); a spec routed to watermarked
+    * mode writes through the file sink and rejects it.
     */
   def start(
       source: DataFrame,
@@ -45,7 +64,67 @@ final class IngestStream(
       now: Column = current_timestamp(),
       trigger: Trigger = Trigger.AvailableNow(),
       writer: Option[(DataFrame, Long) => Unit] = None): StreamingQuery = {
-    ensureListener()
+    val gran = spec.dataSchema.granularitySpec
+    // exactCardinality is unstreamable in EITHER mode: per-batch finalized
+    // distinct counts cannot re-merge (SegmentStore.mergeColumn rejects
+    // them — the store would ingest fine and throw on every read), and
+    // Structured Streaming rejects COUNT DISTINCT in stateful aggregation.
+    def exactIn(a: graft.config.AggregatorSpec): Boolean =
+      a.aggType == "exactCardinality" || a.aggregator.exists(exactIn)
+    require(!(gran.rollup && spec.dataSchema.aggregators.exists(exactIn)),
+      "exactCardinality cannot stream: per-batch finalized distinct counts " +
+        s"don't re-merge at read, and streaming aggregation cannot COUNT " +
+        s"DISTINCT (aggregators ${spec.dataSchema.aggregators.filter(exactIn)
+          .map(a => s"${a.name}:${a.aggType}").mkString(",")}). Use " +
+        "hyperUnique (estimate), the stored hllSketch form (mergeable " +
+        "binary), or a batch index task.")
+    val finalized = Set("hyperUnique", "cardinality", "approxHistogram")
+    // unwrap `filtered` wrappers: filtered(hyperUnique) needs the state
+    // store exactly like bare hyperUnique (a per-batch store of finalized
+    // estimates would ingest fine and then throw on every read)
+    def finalizedIn(a: graft.config.AggregatorSpec): Boolean =
+      finalized(a.aggType) || a.aggregator.exists(finalizedIn)
+    // only ROLLUP specs evaluate aggregators — isRollup=false appends raw
+    // rows, so finalized sketches in the spec are inert there
+    val needsState = gran.rollup && spec.dataSchema.aggregators.exists(finalizedIn)
+    if (needsState) {
+      // name offenders through finalizedIn (the routing predicate), so a
+      // filtered(hyperUnique) names its metric instead of an empty list
+      require(gran.queryGranularity.widthSeconds > 0,
+        s"queryGranularity ${gran.queryGranularity.name} has no watermarked path " +
+          "(calendar periods aren't streaming window widths) and aggregators " +
+          s"${spec.dataSchema.aggregators.filter(finalizedIn)
+            .map(a => s"${a.name}:${a.aggType}").mkString(",")} " +
+          "don't re-merge from finalized per-batch values. Use the stored sketch " +
+          "forms instead (hyperUnique→hllSketch, approxHistogram→histogramSketch): " +
+          "binary partials re-merge at read for ANY granularity.")
+      require(writer.isEmpty, s"dataSource '${spec.dataSchema.dataSource}' " +
+        "routes to watermarked mode (finalized sketches at a fixed-width " +
+        "queryGranularity), which writes through the file sink; a custom " +
+        "writer applies to per-batch mode only")
+    }
+    val (w, finalSchema) =
+      if (needsState) watermarked(source, outputPath, now)
+      else (perBatch(source, outputPath, now, writer), None)
+    val q = w.option("checkpointLocation", checkpointDir).trigger(trigger).start()
+    query = Some(q)
+    store = Some((outputPath, finalSchema))
+    // registered only once a query runs, so a rejected spec leaves the
+    // session's listeners as they were; release() first, so a restart after
+    // a query that died without flushAndStop still registers it once
+    release()
+    spark.streams.addListener(progressListener)
+    q
+  }
+
+  /** Per-batch mode: each micro-batch's rollup lands as partial rows keyed
+    * by (segment, batch); cross-batch merge happens at read time
+    * ([[graft.sink.SegmentStore.read]]) or via compaction. */
+  private def perBatch(
+      source: DataFrame,
+      outputPath: String,
+      now: Column,
+      writer: Option[(DataFrame, Long) => Unit]): DataStreamWriter[Row] = {
     // Row-wise stages run on the STREAMING DataFrame so the `observe` drop
     // counters surface in StreamingQueryProgress.observedMetrics (inside
     // foreachBatch they'd belong to a detached batch query and vanish).
@@ -69,10 +148,9 @@ final class IngestStream(
       .withWatermark(Pipeline.TsCol,
         s"${2 * spec.tuning.windowPeriod.getSeconds} seconds")
       .dropDuplicatesWithinWatermark(keys)
-    // `writer` is a test seam (fault injection for the Kafka commit-contract
-    // spec); production always takes the SegmentSink default, in
-    // deferred-stats mode: one action per batch (no persist, no per-batch
-    // sidecar job) — [[flushAndStop]] rebuilds the zone-map once at drain.
+    // production takes the SegmentSink default, in deferred-stats mode: one
+    // action per batch (no persist, no per-batch sidecar job) —
+    // [[flushAndStop]] rebuilds the zone-map once at drain.
     val write = writer.getOrElse {
       statsPath = Some(outputPath)
       // an existing sidecar (previous run's flush) would be covered-but-
@@ -81,10 +159,8 @@ final class IngestStream(
       graft.sink.SegmentSink.dropStats(spark, outputPath)
       graft.sink.SegmentSink.writeMicroBatch(outputPath, withStats = false) _
     }
-    val q = staged.writeStream
+    staged.writeStream
       .queryName(s"graft-${spec.dataSchema.dataSource}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // rollup within the micro-batch; cross-batch merge happens at read
         // time (sum of partial sums per segment dir) or via compaction —
@@ -102,10 +178,6 @@ final class IngestStream(
         else rolled
         write(out, batchId)
       }
-      .start()
-    store = Some((outputPath, None))
-    query = Some(q)
-    q
   }
 
   /** spec.tuning.dedupKeys (the JSON surface the Daemon / HTTP / Kafka paths
@@ -119,96 +191,24 @@ final class IngestStream(
     keys
   }
 
-  /** Mode ROUTING for a spec's streaming ingest (SURVEY §2.9; closes the
-    * calendar-granularity gap): which path can honour the aggregator set at
-    * the declared queryGranularity?
-    *
-    *  - FINALIZED sketches (`hyperUnique`/`cardinality`/`approxHistogram` —
-    *    estimates, not mergeable) need cross-batch state: the watermarked
-    *    state store. That mode needs a fixed-width bucket (streaming
-    *    `window()` takes literal durations), so it covers SECOND..DAY.
-    *  - Calendar granularities (WEEK/MONTH/QUARTER/YEAR/ALL) stream through
-    *    the per-batch path: `date_trunc` bucketing is an ordinary batch
-    *    expression, and cross-batch merge happens at read (sums/min/max) —
-    *    including sketches, IF they are the STORED forms (`hllSketch` /
-    *    `histogramSketch`, binary partials re-merged by SegmentStore).
-    *  - Finalized sketches at calendar granularity are the one impossible
-    *    combination — the router rejects it and names the stored-form fix.
-    */
-  def startRouted(
-      source: DataFrame,
-      outputPath: String,
-      now: Column = current_timestamp(),
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val gran = spec.dataSchema.granularitySpec
-    // exactCardinality is unstreamable in EITHER mode: per-batch finalized
-    // distinct counts cannot re-merge (SegmentStore.mergeColumn rejects
-    // them — the store would ingest fine and throw on every read), and
-    // Structured Streaming rejects COUNT DISTINCT in stateful aggregation.
-    // Loud here, with the fixes named (review finding r7).
-    def exactIn(a: graft.config.AggregatorSpec): Boolean =
-      a.aggType == "exactCardinality" || a.aggregator.exists(exactIn)
-    require(!(gran.rollup && spec.dataSchema.aggregators.exists(exactIn)),
-      "exactCardinality cannot stream: per-batch finalized distinct counts " +
-        s"don't re-merge at read, and streaming aggregation cannot COUNT " +
-        s"DISTINCT (aggregators ${spec.dataSchema.aggregators.filter(exactIn)
-          .map(a => s"${a.name}:${a.aggType}").mkString(",")}). Use " +
-        "hyperUnique (estimate), the stored hllSketch form (mergeable " +
-        "binary), or a batch index task.")
-    val finalized = Set("hyperUnique", "cardinality", "approxHistogram")
-    // unwrap `filtered` wrappers: filtered(hyperUnique) needs the state
-    // store exactly like bare hyperUnique (a per-batch store of finalized
-    // estimates would ingest fine and then throw on every read)
-    def finalizedIn(a: graft.config.AggregatorSpec): Boolean =
-      finalized(a.aggType) || a.aggregator.exists(finalizedIn)
-    // only ROLLUP specs evaluate aggregators — isRollup=false appends raw
-    // rows, so finalized sketches in the spec are inert there
-    val needsState = gran.rollup && spec.dataSchema.aggregators.exists(finalizedIn)
-    if (needsState && gran.queryGranularity.widthSeconds > 0)
-      startWatermarked(source, outputPath, trigger, now)
-    else {
-      // name offenders through finalizedIn (the routing predicate), so a
-      // filtered(hyperUnique) names its metric instead of an empty list
-      require(!needsState,
-        s"queryGranularity ${gran.queryGranularity.name} has no watermarked path " +
-          "(calendar periods aren't streaming window widths) and aggregators " +
-          s"${spec.dataSchema.aggregators.filter(finalizedIn)
-            .map(a => s"${a.name}:${a.aggType}").mkString(",")} " +
-          "don't re-merge from finalized per-batch values. Use the stored sketch " +
-          "forms instead (hyperUnique→hllSketch, approxHistogram→histogramSketch): " +
-          "binary partials re-merge at read for ANY granularity.")
-      start(source, outputPath, now, trigger)
-    }
-  }
-
   /** Watermarked streaming rollup: cross-batch FINAL aggregation via the
     * state store, emitted once per bucket when the event-time watermark
     * (= windowPeriod, the reference's lateness bound — SURVEY §2.9) passes the
-    * bucket end. Use this mode when the aggregator set contains sketches
-    * (hyperUnique/approxHistogram), whose finalized outputs per-batch partials
-    * can't re-merge ([[graft.sink.SegmentStore]] docs).
-    *
-    * Requires a fixed-width queryGranularity (streaming `window()` takes
-    * literal durations, not calendar periods).
+    * bucket end. Returns the writer and the schema the file sink writes.
     *
     * KNOWN DELTA vs the reference's flush(): buckets still within
     * windowPeriod of the max observed event time remain in the state store on
     * [[flushAndStop]] — append mode only emits watermark-finalized buckets.
     * The tail is emitted when the stream resumes (checkpointed state) or
     * never, if the stream truly ends. A bounded replay that must account for
-    * every event should use [[start]] (per-batch partials + SegmentStore
-    * merge), which drains completely.
+    * every event should use a spec that routes to per-batch mode (stored
+    * sketch forms), which drains completely.
     */
-  def startWatermarked(
+  private def watermarked(
       source: DataFrame,
       outputPath: String,
-      trigger: Trigger = Trigger.AvailableNow(),
-      now: Column = current_timestamp()): StreamingQuery = {
-    ensureListener()
+      now: Column): (DataStreamWriter[Row], Option[StructType]) = {
     val gran = spec.dataSchema.granularitySpec
-    require(gran.queryGranularity.widthSeconds > 0,
-      s"watermarked mode needs fixed-width queryGranularity, got ${gran.queryGranularity.name}")
-    require(gran.rollup, "watermarked mode is a rollup mode (isRollup=true)")
     val wmSeconds = spec.tuning.windowPeriod.getSeconds
 
     // Only `received` is observable row-wise here: lateness drops happen
@@ -220,8 +220,8 @@ final class IngestStream(
     // schemaless path derives dims from actual columns, and the raw-ts
     // helper below must never become a dimension
     val dims = pipeline.dimensionNames(projected).map(col)
-    // future/null guard — start()'s windowFilter upper half. Without it a
-    // SINGLE future-stamped or unparseable event poisons this mode: the
+    // future/null guard — the per-batch windowFilter's upper half. Without it
+    // a SINGLE future-stamped or unparseable event poisons this mode: the
     // event-time watermark is CHECKPOINTED and monotonic, so one year-2255
     // row silently drops all subsequent real traffic forever, and a null
     // timestamp opens a null-window state group the watermark never closes
@@ -255,20 +255,15 @@ final class IngestStream(
       .withColumn(Pipeline.SegmentCol,
         date_format(col(Pipeline.SegmentCol), "yyyy-MM-dd'T'HH.mm.ss"))
 
-    val q = out.writeStream
+    val w = out.writeStream
       .queryName(s"graft-wm-${spec.dataSchema.dataSource}")
-      .option("checkpointLocation", checkpointDir)
       .option("path", outputPath)
       .partitionBy(Pipeline.SegmentCol)
       .outputMode("append")
-      .trigger(trigger)
       .format("parquet")
-      .start()
     // the file sink writes exactly `out`'s columns, so that schema opens
     // the store without a footer scan
-    store = Some((outputPath, Some(out.schema)))
-    query = Some(q)
-    q
+    (w, Some(out.schema))
   }
 
   /** Where the running query writes, and the schema it writes when its
@@ -312,20 +307,21 @@ final class IngestStream(
     * deferred-stats mode, rebuilds the store's zone-map sidecar once here
     * (exact, replay-dedup'd) instead of once per micro-batch.
     */
-  def flushAndStop(): Unit = {
-    query.foreach { q =>
+  def flushAndStop(): Unit =
+    try query.foreach { q =>
       q.processAllAvailable()
       q.stop()
       q.awaitTermination()
       statsPath.foreach(graft.sink.SegmentSink.regenerateStats(spark, _))
-    }
-    // release the session-wide listener (counters remain readable — each
-    // read still folds the remaining progress buffer synchronously); a
-    // later start() re-registers it (ensureListener) so restarted queries
-    // keep listener-backed counters past the recentProgress ring buffer
-    spark.streams.removeListener(progressListener)
-    listenerActive = false
-  }
+    } finally release()
+
+  /** Stop without draining (a start-all unwinding after a sibling failed). */
+  private def abort(): Unit = try query.foreach(_.stop()) finally release()
+
+  // release the session-wide listener, also when the query died (counters
+  // remain readable — each read still folds the remaining progress buffer
+  // synchronously); a later start() registers it again
+  private def release(): Unit = spark.streams.removeListener(progressListener)
 
   /** Cumulative {received, sent, dropped} — the Tranquilizer counter surface
     * (`{received, sent}` of the reference's HTTP reply, SURVEY §3.2). Two
@@ -347,19 +343,6 @@ final class IngestStream(
     override def onQueryProgress(e: QueryProgressEvent): Unit =
       // the session delivers every query's events — fold only OURS
       if (query.exists(_.id == e.progress.id)) accumulate(Seq(e.progress))
-  }
-  // registered for the object's lifetime (start may be called after a
-  // restart); removed when the session would otherwise leak it
-  spark.streams.addListener(progressListener)
-  @volatile private[this] var listenerActive = true
-
-  /** start()/startWatermarked re-register the listener a prior
-    * flushAndStop released — the restart path the registration supports. */
-  private def ensureListener(): Unit = this.synchronized {
-    if (!listenerActive) {
-      spark.streams.addListener(progressListener)
-      listenerActive = true
-    }
   }
 
   private def accumulate(ps: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress])
@@ -390,17 +373,48 @@ final class IngestStream(
     accumulate(query.toSeq.flatMap(_.recentProgress))
 
   def received: Long = { refresh(); accReceived }
-  /** windowFilter drops (start mode) + state-store lateness drops
+  /** windowFilter drops (per-batch mode) + state-store lateness drops
     * (watermarked mode) — one surface for both pipelines. */
   def dropped: Long = { refresh(); accDropped + accWmDropped }
-  /** received − dropped: identical to the observed `sent` count in start
+  /** received − dropped: identical to the observed `sent` count in per-batch
     * mode (the windowFilter counts all three), and derives the watermarked
     * mode's sent count where only the state store knows the drops. */
   def sent: Long = { refresh(); accReceived - accDropped - accWmDropped }
 
-  /** Late rows discarded by the watermark in [[startWatermarked]] mode — the
+  /** Late rows discarded by the watermark in watermarked mode — the
     * lateness half of the drop accounting there (the state store, not the
     * windowFilter predicate, enforces the bound).
     */
   def watermarkDropped: Long = { refresh(); accWmDropped }
+}
+
+object IngestStream {
+
+  /** Start one stream per named entry, in order, keyed by name. A later
+    * entry failing to start (bad aggregator combination, claimed
+    * checkpoint) stops the streams already running, so none is left
+    * holding its checkpoint lock, then rethrows. */
+  def startAll[A](entries: Iterable[(String, A)])(startOne: (String, A) => IngestStream)
+      : Map[String, IngestStream] = {
+    val started = scala.collection.mutable.ListBuffer.empty[(String, IngestStream)]
+    try entries.foreach { case (name, a) => started += name -> startOne(name, a) }
+    catch {
+      case e: Throwable =>
+        started.foreach { case (_, s) => scala.util.Try(s.abort()) }
+        throw e
+    }
+    started.toMap
+  }
+
+  /** Ordered shutdown of many streams: [[IngestStream.flushAndStop]] on
+    * each. A stream whose query died must not keep its siblings from
+    * draining, so every stream is attempted; then the first failure
+    * rethrows with the others attached as suppressed. */
+  def stopAll(streams: Iterable[IngestStream]): Unit = {
+    val failures = streams.toSeq.flatMap(s => scala.util.Try(s.flushAndStop()).failed.toOption)
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
+  }
 }

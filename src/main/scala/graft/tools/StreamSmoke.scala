@@ -14,7 +14,9 @@ import graft.time.Granularity
   * (hour, event_type) → segment-partitioned parquet. Prints a one-line JSON
   * summary with {received, sent, dropped, segments, rows}.
   *
-  * Usage: runMain graft.tools.StreamSmoke [sfDir] [outDir]
+  * Usage: runMain graft.tools.StreamSmoke [sfDir] [outDir] [--watermarked]
+  * (`--watermarked` adds a hyperUnique metric, which routes the spec to
+  * watermarked mode)
   */
 object StreamSmoke {
   def main(args: Array[String]): Unit = {
@@ -31,9 +33,9 @@ object StreamSmoke {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
+    // a finalized sketch (hyperUnique) routes the spec to watermarked mode
+    // (per-batch partials can't re-merge finalized HLL values)
     val watermarked = args.contains("--watermarked")
-    // sketches only in watermarked mode (per-batch partials can't re-merge
-    // finalized HLL values — SegmentStore docs)
     val aggs = Seq(
       AggregatorSpec("count", "cnt"),
       AggregatorSpec("doubleSum", "total_value", Some("value"))) ++
@@ -50,18 +52,13 @@ object StreamSmoke {
     val t0 = System.nanoTime()
     val source = Sources.eventsReplay(spark, sfDir, s"$outDir/staging")
     val ingest = new IngestStream(spark, spec, s"$outDir/checkpoint")
-    if (watermarked) ingest.startWatermarked(source, s"$outDir/out")
-    else {
-      val now = to_timestamp(lit("2024-01-15 00:00:00"))
-      ingest.start(source, s"$outDir/out", now = now)
-    }
+    ingest.start(source, s"$outDir/out", now = to_timestamp(lit("2024-01-15 00:00:00")))
     ingest.flushAndStop()
 
     val out = spark.read.parquet(s"$outDir/out")
     val rows = out.count()
     val segments = out.select("segment").distinct().count()
-    val merged = if (watermarked) rows
-      else graft.sink.SegmentStore.read(spark, s"$outDir/out", spec).count()
+    val merged = ingest.brokerView().count()
     val wmDropped = ingest.watermarkDropped
     val elapsed = (System.nanoTime() - t0) / 1e9
     val throughput = if (elapsed > 0) (ingest.received / elapsed).toLong else 0L

@@ -12,7 +12,7 @@ import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.config._
-import graft.sources.Sources
+import graft.sources.{KafkaRouter, Sources}
 import graft.streaming.IngestStream
 import graft.time.Granularity
 
@@ -116,7 +116,6 @@ class KafkaContractSpec extends SparkSpec {
 
   test("topicPattern routing: two topics → two dataSources, commits stay independent") {
     implicit val sqlCtx = spark.sqlContext
-    import graft.sources.KafkaRouter
     val input = MemoryStream[KRec]
     val tmp = Files.createTempDirectory("graft-kafka-router").toString
 
@@ -150,7 +149,10 @@ class KafkaContractSpec extends SparkSpec {
     intercept[StreamingQueryException] {
       streams1("clicks").activeQuery.get.processAllAvailable()
     }
-    streams1("views").flushAndStop()
+    // stopping every stream reaches views past the dead clicks query, then
+    // rethrows the clicks failure
+    val stopErr = intercept[StreamingQueryException](IngestStream.stopAll(streams1.values))
+    assert(stopErr.getMessage.contains("injected clicks failure"), stopErr.getMessage)
     assert(spark.read.parquet(s"$tmp/views").agg(sum($"cnt")).as[Long].head() == 1L,
       "views must commit independently of the clicks failure")
 
@@ -159,7 +161,7 @@ class KafkaContractSpec extends SparkSpec {
     val streams2 = KafkaRouter.start(spark, input.toDF(), routes, s"$tmp/cp",
       now = lit(Timestamp.valueOf("2024-03-01 12:00:00")),
       trigger = Trigger.ProcessingTime(50), writerFor = writerFor)
-    KafkaRouter.stopAll(streams2)
+    IngestStream.stopAll(streams2.values)
 
     val clicks = spark.read.parquet(s"$tmp/clicks")
       .select($"etype", $"cnt").as[(String, Long)].collect().toSet
@@ -169,5 +171,69 @@ class KafkaContractSpec extends SparkSpec {
     assert(views == Set(("v1", 1L)), s"views store exactly-once: $views")
     // the unrouted topic's record landed nowhere
     assert(!new java.io.File(s"$tmp/other").exists)
+  }
+
+  private val fixedNow = lit(Timestamp.valueOf("2024-03-01 12:05:00"))
+
+  test("router: a hyperUnique route runs in watermarked mode and its store " +
+      "reads back the finalized estimate") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[KRec]
+    val tmp = Files.createTempDirectory("graft-kafka-hu").toString
+    val huSpec = IngestionSpec(
+      DataSchema("hu_kafka", TimestampSpec("ts"), SpecificDimensions(Seq()),
+        Seq(AggregatorSpec("count", "cnt"),
+          AggregatorSpec("hyperUnique", "uniq", Some("etype"))),
+        GranularitySpec(Granularity.Hour, Granularity.Minute)),
+      Tuning(windowPeriod = java.time.Duration.ofMinutes(2)))
+    val streams = KafkaRouter.start(spark, input.toDF(),
+      Map("hu" -> KafkaRouter.Route(huSpec, s"$tmp/hu", valueSchema)), s"$tmp/cp",
+      now = fixedNow, trigger = Trigger.ProcessingTime(50))
+    val ingest = streams("hu")
+    assert(ingest.activeQuery.get.name == "graft-wm-hu_kafka")
+    input.addData(
+      rec(0, """{"ts":"2024-03-01 12:00:10","etype":"a","value":1.0}""", "hu"),
+      rec(1, """{"ts":"2024-03-01 12:00:40","etype":"b","value":1.0}""", "hu"),
+      rec(2, """{"ts":"2024-03-01 12:00:50","etype":"a","value":1.0}""", "hu"))
+    ingest.activeQuery.get.processAllAvailable()
+    // 12:05 moves the watermark (max event time − 2 min) past 12:01
+    input.addData(rec(3, """{"ts":"2024-03-01 12:05:00","etype":"c","value":1.0}""", "hu"))
+    IngestStream.stopAll(streams.values)
+    val got = ingest.brokerView()
+      .filter($"__time" === Timestamp.valueOf("2024-03-01 12:00:00"))
+      .select($"cnt", $"uniq").as[(Long, Long)].collect().toSeq
+    assert(got == Seq((3L, 2L)), s"12:00 bucket: $got")
+  }
+
+  test("router: an exactCardinality route is rejected with the mode router's message") {
+    implicit val sqlCtx = spark.sqlContext
+    val tmp = Files.createTempDirectory("graft-kafka-ec").toString
+    val ecSpec = spec.copy(dataSchema = spec.dataSchema.copy(dataSource = "ec_kafka",
+      aggregators = Seq(AggregatorSpec("exactCardinality", "uniq", Some("etype")))))
+    val e = intercept[IllegalArgumentException] {
+      KafkaRouter.start(spark, MemoryStream[KRec].toDF(),
+        Map("ec" -> KafkaRouter.Route(ecSpec, s"$tmp/ec", valueSchema)), s"$tmp/cp",
+        now = fixedNow, trigger = Trigger.ProcessingTime(50))
+    }
+    assert(e.getMessage.contains("uniq:exactCardinality"), e.getMessage)
+  }
+
+  test("router: a route failing to start stops the routes already running") {
+    implicit val sqlCtx = spark.sqlContext
+    val tmp = Files.createTempDirectory("graft-kafka-unwind").toString
+    def specFor(ds: String, dedupKeys: Seq[String]) = spec.copy(
+      dataSchema = spec.dataSchema.copy(dataSource = ds),
+      tuning = spec.tuning.copy(dedupKeys = dedupKeys))
+    val routes = Map(
+      "first" -> KafkaRouter.Route(specFor("first_kafka", Nil), s"$tmp/first", valueSchema),
+      "second" -> KafkaRouter.Route(specFor("second_kafka", Seq("no_such_dim")),
+        s"$tmp/second", valueSchema))
+    val e = intercept[IllegalArgumentException] {
+      KafkaRouter.start(spark, MemoryStream[KRec].toDF(), routes, s"$tmp/cp",
+        now = fixedNow, trigger = Trigger.ProcessingTime(50))
+    }
+    assert(e.getMessage.contains("no_such_dim"), e.getMessage)
+    assert(!spark.streams.active.exists(_.name == "graft-first_kafka"),
+      "the first route's query must not outlive the failed start")
   }
 }

@@ -137,14 +137,16 @@ class StreamingSpec extends SparkSpec {
       DataSchema("dedup_wm", TimestampSpec("ts"),
         SpecificDimensions(Seq("id", "etype")),
         Seq(AggregatorSpec("count", "cnt"),
-          AggregatorSpec("doubleSum", "total", Some("value"))),
+          AggregatorSpec("doubleSum", "total", Some("value")),
+          // a finalized sketch routes the spec to watermarked mode
+          AggregatorSpec("hyperUnique", "uv", Some("value"))),
         GranularitySpec(Granularity.Hour, Granularity.Minute)),
       Tuning(windowPeriod = java.time.Duration.ofMinutes(2),
         dedupKeys = Seq("id")))
     val input = MemoryStream[EvD]
     val tmp = Files.createTempDirectory("graft-dedup-wm").toString
     val ingest = new IngestStream(spark, wSpec, s"$tmp/checkpoint")
-    ingest.startWatermarked(input.toDF(), s"$tmp/out",
+    ingest.start(input.toDF(), s"$tmp/out",
       trigger = Trigger.ProcessingTime(50))
 
     input.addData(EvD(ts("2024-03-01 12:00:10"), 1L, "click", 1.0))
@@ -163,12 +165,12 @@ class StreamingSpec extends SparkSpec {
     assert(out == Set(("1", 1L, 1.0), ("2", 1L, 2.0)),
       s"spec-driven dedup must collapse the redelivery: $out")
 
-    // same actionable error as start() for a key that isn't a dimension
+    // same actionable error as per-batch mode for a key that isn't a dimension
     val bad = new IngestStream(spark,
       wSpec.copy(tuning = wSpec.tuning.copy(dedupKeys = Seq("no_such_dim"))),
       s"$tmp/checkpoint-bad")
     val e = intercept[IllegalArgumentException] {
-      bad.startWatermarked(MemoryStream[EvD].toDF(), s"$tmp/out-bad")
+      bad.start(MemoryStream[EvD].toDF(), s"$tmp/out-bad")
     }
     assert(e.getMessage.contains("no_such_dim"))
   }
@@ -185,7 +187,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[Ev]
     val tmp = Files.createTempDirectory("graft-wm-schemaless").toString
     val ingest = new IngestStream(spark, sSpec, s"$tmp/checkpoint")
-    ingest.startWatermarked(input.toDF(), s"$tmp/out",
+    ingest.start(input.toDF(), s"$tmp/out",
       trigger = Trigger.ProcessingTime(50))
     // two rows, same minute bucket, same schemaless dim (etype) — must roll
     // up to ONE row; a leaked per-event raw-ts dimension would split them
@@ -293,7 +295,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[Ev]
     val tmp = Files.createTempDirectory("graft-wm").toString
     val ingest = new IngestStream(spark, wmSpec, s"$tmp/checkpoint")
-    ingest.startWatermarked(input.toDF(), s"$tmp/out",
+    ingest.start(input.toDF(), s"$tmp/out",
       trigger = Trigger.ProcessingTime(50))
 
     // bucket 12:00 gets rows in two separate micro-batches
@@ -337,7 +339,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[Ev]
     val tmp = Files.createTempDirectory("graft-wm-guard").toString
     val ingest = new IngestStream(spark, wmSpec, s"$tmp/checkpoint")
-    ingest.startWatermarked(input.toDF(), s"$tmp/out",
+    ingest.start(input.toDF(), s"$tmp/out",
       trigger = Trigger.ProcessingTime(50))
     // a single year-2255 event: unguarded it would advance the CHECKPOINTED
     // event-time watermark past all real traffic forever; a null timestamp
@@ -359,8 +361,8 @@ class StreamingSpec extends SparkSpec {
     assert(out == Seq(2L), s"real bucket must still emit: $out")
   }
 
-  test("startRouted: exactCardinality is unstreamable in either mode - " +
-      "loud rejection naming the metric and the fixes") {
+  test("start: exactCardinality is unstreamable in either mode - " +
+      "a loud rejection naming the metric and the fixes, no listener left") {
     implicit val sqlCtx = spark.sqlContext
     // per-batch finalized distinct counts don't re-merge at read, and
     // Structured Streaming rejects COUNT DISTINCT in stateful aggregation -
@@ -373,12 +375,15 @@ class StreamingSpec extends SparkSpec {
         GranularitySpec(Granularity.Hour, Granularity.Minute)),
       Tuning(windowPeriod = java.time.Duration.ofMinutes(2)))
     val tmp = Files.createTempDirectory("graft-ec-route").toString
+    val listeners = spark.streams.listListeners().length
     val ingest = new IngestStream(spark, ecSpec, s"$tmp/checkpoint")
     val e = intercept[IllegalArgumentException] {
-      ingest.startRouted(MemoryStream[Ev].toDF(), s"$tmp/out")
+      ingest.start(MemoryStream[Ev].toDF(), s"$tmp/out")
     }
     assert(e.getMessage.contains("uniq:exactCardinality") &&
       e.getMessage.contains("hllSketch"), e.getMessage)
+    // a rejected start registers no progress listener on the session
+    assert(spark.streams.listListeners().length == listeners)
     // the filtered-wrapped form is caught too
     val wrapped = ecSpec.copy(dataSchema = ecSpec.dataSchema.copy(
       aggregators = Seq(AggregatorSpec("filtered", "uniq",
@@ -387,7 +392,7 @@ class StreamingSpec extends SparkSpec {
         filterDimension = Some("etype"), filterValue = Some("click")))))
     intercept[IllegalArgumentException] {
       new IngestStream(spark, wrapped, s"$tmp/cp2")
-        .startRouted(MemoryStream[Ev].toDF(), s"$tmp/out2")
+        .start(MemoryStream[Ev].toDF(), s"$tmp/out2")
     }
   }
 
@@ -888,7 +893,7 @@ class StreamingSpec extends SparkSpec {
     val tmp = Files.createTempDirectory("graft-month").toString
     val ingest = new IngestStream(spark, mSpec, s"$tmp/checkpoint")
     // router: calendar granularity + STORED sketches → per-batch mode
-    val q = ingest.startRouted(input.toDF(), s"$tmp/out",
+    val q = ingest.start(input.toDF(), s"$tmp/out",
       now = lit(ts("2024-03-20 12:00:00")), trigger = Trigger.ProcessingTime(50))
     assert(q.name == "graft-month_events", "calendar spec must take the per-batch path")
     // same MONTH bucket fed from two batches with an overlapping value;
@@ -913,10 +918,16 @@ class StreamingSpec extends SparkSpec {
       aggregators = Seq(AggregatorSpec("hyperUnique", "u", Some("value"))),
       granularitySpec = GranularitySpec(Granularity.Hour, Granularity.Hour)))
     val wmIngest = new IngestStream(spark, wmSpec, s"$tmp/cp-wm")
-    val wmQ = wmIngest.startRouted(MemoryStream[Ev].toDF(), s"$tmp/out-wm",
+    val wmQ = wmIngest.start(MemoryStream[Ev].toDF(), s"$tmp/out-wm",
       trigger = Trigger.ProcessingTime(50))
     assert(wmQ.name == "graft-wm-month_events")
     wmIngest.flushAndStop()
+    // the per-batch writer seam does not apply to a watermarked spec
+    val wErr = intercept[IllegalArgumentException] {
+      new IngestStream(spark, wmSpec, s"$tmp/cp-wm-writer").start(MemoryStream[Ev].toDF(),
+        s"$tmp/out-wm-writer", writer = Some((_: org.apache.spark.sql.DataFrame, _: Long) => ()))
+    }
+    assert(wErr.getMessage.contains("watermarked mode"), wErr.getMessage)
 
     // router unwraps `filtered` wrappers: filtered(hyperUnique) needs the
     // state store exactly like bare hyperUnique
@@ -926,7 +937,7 @@ class StreamingSpec extends SparkSpec {
         aggregator = Some(AggregatorSpec("hyperUnique", "u", Some("value"))))),
       granularitySpec = GranularitySpec(Granularity.Hour, Granularity.Hour)))
     val fwIngest = new IngestStream(spark, fwSpec, s"$tmp/cp-fw")
-    val fwQ = fwIngest.startRouted(MemoryStream[Ev].toDF(), s"$tmp/out-fw",
+    val fwQ = fwIngest.start(MemoryStream[Ev].toDF(), s"$tmp/out-fw",
       trigger = Trigger.ProcessingTime(50))
     assert(fwQ.name == "graft-wm-month_events",
       "filtered(finalized sketch) must route to the state store")
@@ -939,7 +950,7 @@ class StreamingSpec extends SparkSpec {
       granularitySpec = GranularitySpec(Granularity.Hour, Granularity.None,
         rollup = false)))
     val rawIngest = new IngestStream(spark, rawSpec, s"$tmp/cp-raw")
-    val rawQ = rawIngest.startRouted(MemoryStream[Ev].toDF(), s"$tmp/out-raw",
+    val rawQ = rawIngest.start(MemoryStream[Ev].toDF(), s"$tmp/out-raw",
       now = lit(ts("2024-03-20 12:00:00")), trigger = Trigger.ProcessingTime(50))
     assert(rawQ.name == "graft-month_events", "raw-append spec takes the per-batch path")
     rawIngest.flushAndStop()
@@ -950,7 +961,7 @@ class StreamingSpec extends SparkSpec {
       aggregators = Seq(AggregatorSpec("approxHistogram", "h", Some("value")))))
     val err = intercept[IllegalArgumentException] {
       new IngestStream(spark, badSpec, s"$tmp/cp-bad")
-        .startRouted(MemoryStream[Ev].toDF(), s"$tmp/out-bad")
+        .start(MemoryStream[Ev].toDF(), s"$tmp/out-bad")
     }
     assert(err.getMessage.contains("histogramSketch"))
   }
