@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.queries.QueryDef
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR, prints
@@ -62,33 +60,46 @@ object Bench {
       (busy, rest(11).toLong + rest(12).toLong, if (f.length > 7) f(7) else 0L)
     } catch { case _: Throwable => (-1L, -1L, -1L) }
 
+  /** One timed repeat: wall seconds (-1 when `run` threw), the 1-minute
+    * loadavg sampled just before it, and the CPU cores burned by OTHER
+    * processes and by hypervisor steal while it ran. */
+  private[graft] final case class Rep(sec: Double, load1m: Double,
+      others: Double, steal: Double) {
+    /** Ran, and others burned at most `gate` cores; a -1 stamp (no /proc)
+      * counts as clean, so the gate degrades to plain min-of-k off-linux. */
+    def clean(gate: Double): Boolean = sec >= 0 && (others < 0 || others <= gate)
+  }
+
+  /** Cores other processes may burn during a repeat that still counts as
+    * clean (see the CONTENTION GATE below). */
+  private[graft] def gate: Double =
+    sys.env.getOrElse("SPARK_GRAFT_BENCH_LOAD_GATE", "4.0").toDouble
+
+  /** The per-repeat timer: Bench times every (query, repeat) with it, and
+    * [[graft.tools.Probe]]'s A/B times every arm with it. */
+  private[graft] def timeOnce(run: => Unit): Rep = {
+    val ticksPerSec = 100.0 // USER_HZ on every mainstream linux
+    val load1m = try loadStamp().split("\\s+")(0).toDouble
+                 catch { case _: Throwable => -1.0 }
+    val (busy0, self0, steal0) = cpuStamp()
+    val t0 = System.nanoTime()
+    val sec = try { run; (System.nanoTime() - t0) / 1e9 }
+              catch { case _: Throwable => -1.0 }
+    val (busy1, self1, steal1) = cpuStamp()
+    // CPU cores burned by processes OTHER than this JVM while the
+    // repeat ran — the direct contention measurement
+    val othersCores =
+      if (busy0 < 0 || busy1 < 0 || sec <= 0) -1.0
+      else ((busy1 - busy0) - (self1 - self0)) / ticksPerSec / sec
+    val stealCores =
+      if (steal0 < 0 || steal1 < 0 || sec <= 0) -1.0
+      else (steal1 - steal0) / ticksPerSec / sec
+    Rep(sec, load1m, othersCores, stealCores)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      // local-fs session tuning (measured in artifacts/REPLAY_PROFILE_r3):
-      // RawLocalFileSystem skips the .crc shadow file ChecksumFileSystem
-      // writes per file — an artifact of LOCAL runs only (HDFS/S3 have no
-      // client-side checksum files), worth ~2.5s over the replay headliner's
-      // ~270 small files; _SUCCESS markers are unused by the engine's
-      // readers. Neither changes what lands in the store.
-      .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      // checkpoint WAL/commit through the FileSystem API so it picks up the
-      // raw local fs too (default FileContext path writes CRC shadows per
-      // metadata file: measured 360→45ms of commit ops per micro-batch).
-      // Rename atomicity holds on local fs; correctness gate (Verify) keeps
-      // the conservative default manager.
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.timed()
 
     val loadStart = loadStamp()
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt
@@ -103,39 +114,11 @@ object Bench {
 
     // Interleaved timing: outer loop over repeat number, inner over queries,
     // so sustained contention can never own all k repeats of one query.
-    // times(q) = per-repeat wall seconds; loads(q) = 1-min loadavg sampled
-    // just before that repeat ran. Failed queries report -1, never a
-    // plausible timing.
-    val times = scala.collection.mutable.LinkedHashMap(
-      qs.map(q => q.name -> Vector.empty[Double]): _*)
-    val loads = scala.collection.mutable.LinkedHashMap(
-      qs.map(q => q.name -> Vector.empty[Double]): _*)
-    val others = scala.collection.mutable.LinkedHashMap(
-      qs.map(q => q.name -> Vector.empty[Double]): _*)
-    val steals = scala.collection.mutable.LinkedHashMap(
-      qs.map(q => q.name -> Vector.empty[Double]): _*)
-    val ticksPerSec = 100.0 // USER_HZ on every mainstream linux
-    def runOnce(q: QueryDef): Unit = {
-      val load1m = try loadStamp().split("\\s+")(0).toDouble
-                   catch { case _: Throwable => -1.0 }
-      val (busy0, self0, steal0) = cpuStamp()
-      val t0 = System.nanoTime()
-      val sec = try { force(q.run(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
-                catch { case _: Throwable => -1.0 }
-      val (busy1, self1, steal1) = cpuStamp()
-      // CPU cores burned by processes OTHER than this JVM while the
-      // repeat ran — the direct contention measurement
-      val othersCores =
-        if (busy0 < 0 || busy1 < 0 || sec <= 0) -1.0
-        else ((busy1 - busy0) - (self1 - self0)) / ticksPerSec / sec
-      val stealCores =
-        if (steal0 < 0 || steal1 < 0 || sec <= 0) -1.0
-        else (steal1 - steal0) / ticksPerSec / sec
-      times(q.name) :+= sec
-      loads(q.name) :+= load1m
-      others(q.name) :+= othersCores
-      steals(q.name) :+= stealCores
-    }
+    // Failed queries report -1, never a plausible timing.
+    val reps = scala.collection.mutable.LinkedHashMap(
+      qs.map(q => q.name -> Vector.empty[Rep]): _*)
+    def runOnce(q: QueryDef): Unit =
+      reps(q.name) :+= timeOnce(force(q.run(spark, sfDir)))
     for (_ <- 1 to repeats; q <- qs) runOnce(q)
 
     // CONTENTION GATE (r8 verdict #3, metric revised r9): the r8 stamps
@@ -150,23 +133,22 @@ object Bench {
     // then taken over clean repeats when any exist (falling back to min
     // over all, flagged per-query in "clean"). -1 stamps (no /proc) are
     // treated as clean — the gate degrades to plain min-of-k off-linux.
-    val gate = sys.env.getOrElse("SPARK_GRAFT_BENCH_LOAD_GATE", "4.0").toDouble
+    val gate = Bench.gate
     def cleanTimes(n: String): Vector[Double] =
-      times(n).zip(others(n)).collect {
-        case (t, oc) if t >= 0 && (oc < 0 || oc <= gate) => t }
+      reps(n).filter(_.clean(gate)).map(_.sec)
     var extraRounds = 0
     while (extraRounds < 2 && qs.exists(q => cleanTimes(q.name).isEmpty)) {
       for (q <- qs if cleanTimes(q.name).isEmpty) runOnce(q)
       extraRounds += 1
     }
     val results = qs.map { q =>
-      val ts = times(q.name).filter(_ >= 0)
+      val ts = reps(q.name).map(_.sec).filter(_ >= 0)
       val clean = cleanTimes(q.name)
       // ANY failed repeat poisons the reported value (review r9: min over
       // the successes would let an intermittently-failing query publish a
       // healthy-looking number) — the per-repeat vectors still show which
       // repeats ran
-      val v = if (times(q.name).exists(_ < 0)) -1.0
+      val v = if (reps(q.name).exists(_.sec < 0)) -1.0
               else if (clean.nonEmpty) clean.min
               else ts.min
       q.name -> v
@@ -175,13 +157,14 @@ object Bench {
     val loadEnd = loadStamp()
     val qJson = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
       .mkString("{", ",", "}")
-    def vecJson(m: scala.collection.Map[String, Vector[Double]]): String =
-      m.map { case (k, vs) => "\"" + k + "\":" + vs.map(v => f"$v%.3f").mkString("[", ",", "]") }
+    def vecJson(field: Rep => Double): String =
+      reps.map { case (k, rs) =>
+        "\"" + k + "\":" + rs.map(r => f"${field(r)}%.3f").mkString("[", ",", "]") }
         .mkString("{", ",", "}")
     val cleanJson = qs.map(q => "\"" + q.name + s"""\":${cleanFlags(q.name)}""")
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
-    val fullArtifact = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qJson,"sf":"$sfDir","repeats":$repeats,"timing":"min_of_k_interleaved_cpu_gated","gate_other_cores":$gate%.1f,"extra_rounds":$extraRounds,"clean":$cleanJson,"loadavg_start":"$loadStart","loadavg_end":"$loadEnd","times":${vecJson(times)},"loads":${vecJson(loads)},"others_cpu_cores":${vecJson(others)},"steal_cpu_cores":${vecJson(steals)}}"""
+    val fullArtifact = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qJson,"sf":"$sfDir","repeats":$repeats,"timing":"min_of_k_interleaved_cpu_gated","gate_other_cores":$gate%.1f,"extra_rounds":$extraRounds,"clean":$cleanJson,"loadavg_start":"$loadStart","loadavg_end":"$loadEnd","times":${vecJson(_.sec)},"loads":${vecJson(_.load1m)},"others_cpu_cores":${vecJson(_.others)},"steal_cpu_cores":${vecJson(_.steal)}}"""
     println(fullArtifact)
     // The driver captures only a bounded TAIL of stdout: by r9 the full
     // artifact line (per-repeat times/loads/others for 18 queries) outgrew

@@ -19,7 +19,9 @@ import graft.streaming.IngestStream
   * stopped together ([[IngestStream.startAll]] / [[IngestStream.stopAll]])
   * and registered in one [[HttpIngestServer]] routing map, which also
   * serves each stream's store to the query endpoints. `run` is the testable
-  * core; `main` parses args and blocks until terminated.
+  * core; `main` parses args, opens a [[GraftSession.local]] session (the
+  * checksummed local file system: a daemon's store keeps its `.crc`
+  * fault-detection files) and blocks until terminated.
   *
   * Usage:
   *   runMain graft.Daemon <workDir> <valueSchemaDDL> <spec.json> [spec2.json ...]
@@ -71,13 +73,7 @@ object Daemon {
     val Array(workDir, ddl, specPaths @ _*) = args
     val specs = specPaths.map(p => SpecLoader.fromJson(
       new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     val schema = DataType.fromDDL(ddl).asInstanceOf[StructType]
     val handle = run(spark, workDir, schema, specs)
     println(s"DAEMON_PORT=${handle.port}")

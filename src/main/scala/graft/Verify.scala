@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,14 +10,10 @@ object Verify {
       case Array(s, o)    => (s, o, Option.empty[Set[String]])
       case Array(s, o, f) => (s, o, Some(f.split(",").toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the session the benchmark times, so the gate checks the plans Bench
+    // measures: broadcast vs sort-merge joins under the 64 MB threshold,
+    // the raw local file system, the FileSystem checkpoint manager
+    val spark = GraftSession.timed()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
       .foreach { case (name, fn) =>

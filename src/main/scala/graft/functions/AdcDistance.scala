@@ -12,7 +12,8 @@ import org.apache.spark.sql.types._
   *
   * Why an Expression: the HOF form (`aggregate(zip_with(codes, sequence,
   * …element_at…))`) evaluates an interpreted lambda per subspace per row —
-  * BenchCompare measured the interpreted ADC scan LOSING to the codegen'd
+  * measured (artifacts/BENCHCOMPARE_r3.jsonl, `ann_pq_adc_*` vs
+  * `ann_brute_*`) the interpreted ADC scan LOSING to the codegen'd
   * brute-force cosine at 50k vectors (0.25 s vs 0.15 s). This fuses the m
   * lookups into a branch-light loop the JIT vectorizes, so the stored-code
   * scan beats float scanning on CPU too, not just on index size.

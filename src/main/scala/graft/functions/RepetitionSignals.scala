@@ -16,7 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Why an Expression: every (doc, n, gram) count key is DOC-LOCAL, so the
   * relational shape's `groupBy(doc_id, n, gram)` hash-aggregation shuffles
   * and hash-probes ~9·L gram-string rows per document for an answer each
-  * document could compute alone. Measured at ×30 (GopherProbe): the
+  * document could compute alone. Measured at ×30
+  * (artifacts/SCALE_r9_gopher.json): the
   * explode + gram-string build is 0.9 s — the count aggregation is ~17 s
   * of the query's 24 s. This expression is ONE compiled pass per document:
   * a prefix-sum of word char-lengths, then for each n one hash-map count

@@ -16,8 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * each word once (XXH64 with seed 42 — identical to Spark's `xxhash64`, so
   * results are bit-compatible with the HOF twin), and updates all 64 bit
   * counters in-place: O(n) hashes, zero intermediate arrays. Measured 2.6×
-  * faster end-to-end on 20k short docs (BenchCompare `simhash_native` vs
-  * `simhash_hof`; the gap widens with document length as the hash loop
+  * faster end-to-end on 20k short docs (artifacts/BENCHCOMPARE_r2.jsonl,
+  * `simhash_native` vs `simhash_hof`; the gap widens with document length as the hash loop
   * dominates scheduling overhead).
   *
   * Evaluation is interpreted (CodegenFallback) — the per-row cost is the word

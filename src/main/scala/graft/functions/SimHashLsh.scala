@@ -72,8 +72,8 @@ object SimHashLsh {
     * equals the full jaccard≥threshold pair set whenever the corpus's true
     * near-dup pairs all sit within maxHamming simhash bits. On the planted-
     * dup testdata that holds with margin: max hamming over jaccard≥0.3
-    * pairs is 5 at sf0.01 ([[graft.tools.SimHashProbe]] prints the matrix)
-    * vs the default bound 7. Precision needs no assumption — the exact-
+    * pairs is 5 at sf0.01 (measurement recorded in RESULTS_r5.md) vs the
+    * default bound 7. Precision needs no assumption — the exact-
     * jaccard filter removes hamming-close-but-dissimilar candidates.
     */
   def nearDupsVerified(

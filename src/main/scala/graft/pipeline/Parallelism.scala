@@ -39,7 +39,7 @@ object Parallelism {
     df.sparkSession.sparkContext.defaultParallelism
 
   /** Validated conf read (advice r10): a typo like `fanout=false` or
-    * `mode=roundrobin` must fail loudly, not silently select the default
+    * `fanout=disabled` must fail loudly, not silently select the default
     * arm and invalidate an A/B run. */
   private def validated(df: DataFrame, key: String,
       allowed: Set[String]): Option[String] = {
@@ -50,7 +50,7 @@ object Parallelism {
   }
 
   /** `spark.graft.fanout=off` turns every fanOut into a no-op — the A/B
-    * seam scale probes flip without a rebuild (never set in production). */
+    * seam `Probe ab` flips without a rebuild (never set in production). */
   private def disabled(df: DataFrame): Boolean =
     validated(df, "spark.graft.fanout", Set("on", "off")).contains("off")
 
@@ -139,26 +139,14 @@ object Parallelism {
     * explode + hash per row — ~0.1–1 ms/row of downstream work). */
   val DefaultRowsPerPartition = 1024L
 
-  /** Round-robin form, kept for callers without a natural key. Prefer the
-    * keyed overload: this one pays a hidden per-partition SORT of the full
-    * rows before the exchange (`spark.sql.execution.sortBeforeRepartition`,
-    * on by default since SPARK-23207 so retried map tasks reproduce the
-    * same row-to-partition assignment). */
-  def fanOut(df: DataFrame): DataFrame =
-    if (disabled(df)) df
-    else {
-      val w = sizedWidth(df, DefaultRowsPerPartition)
-      if (w <= 0) df else df.repartition(w)
-    }
-
   /** Keyed fan-out: hash-repartition on a deterministic high-cardinality
-    * key (doc/vec id). Same no-op guard as the round-robin form, two
-    * strict improvements (guide §2.5): no sort-before-repartition (hash
-    * placement is reproducible under task retry by construction, so
-    * Spark plans a plain Exchange hashpartitioning), and retry safety on
-    * clusters does not rest on the sort at all. Key cardinality (unique
-    * ids) exceeds any sane partition count by orders of magnitude, so the
-    * hash spreads evenly.
+    * key (doc/vec id). Hashing, not round-robin (guide §2.5): round-robin
+    * pays a hidden per-partition SORT of the full rows before the exchange
+    * (`spark.sql.execution.sortBeforeRepartition`, SPARK-23207) so retried
+    * map tasks reproduce the same row placement, while hash placement is
+    * reproducible by construction and Spark plans a plain Exchange
+    * hashpartitioning. Key cardinality (unique ids) exceeds any sane
+    * partition count by orders of magnitude, so the hash spreads evenly.
     *
     * `rowsPerPartition` sets the per-site work density: how many input
     * rows one task's worth of downstream per-row work amortizes. Lower it
@@ -170,12 +158,6 @@ object Parallelism {
     if (disabled(df)) df
     else {
       val w = sizedWidth(df, rowsPerPartition)
-      if (w <= 0) df
-      // `spark.graft.fanout.mode=rr` restores the round-robin exchange — the
-      // attribution seam for the A/B that measured hash-vs-rr (never set in
-      // production; hash is strictly better on both counts above)
-      else if (validated(df, "spark.graft.fanout.mode", Set("rr", "hash"))
-                 .contains("rr")) df.repartition(w)
-      else df.repartition(w, key)
+      if (w <= 0) df else df.repartition(w, key)
     }
 }

@@ -550,14 +550,14 @@ object RollupQueries {
       val tmp = Scratch.dir("replay")
       // 8 staged files in ONE micro-batch (maxFilesPerTrigger=8): each
       // batch's fixed cost is the dynamic-overwrite commit of the SAME ~30
-      // day-segment dirs (ReplayProfile: ~0.6 s addBatch, flat in batch
-      // size), so the bench pays that commit exactly once. The >1-batch
+      // day-segment dirs (replay profile, RESULTS_r9.md: ~0.6 s addBatch,
+      // flat in batch size), so the bench pays that commit exactly once. The >1-batch
       // merge contract this query used to double as lives in a dedicated
       // spec (StreamingSpec "per-batch partials re-merge to the batch-mode
       // rollup" + the checkpoint-restart spec); the stream≡batch hash gate
       // below is unchanged (r8 verdict #1). Staging is memoized per JVM
       // (eventsReplayShared — re-writing identical input files per repeat
-      // timed the harness, not the engine; ~0.6 s warm, ReplayProfile);
+      // timed the harness, not the engine; ~0.6 s warm, RESULTS_r9.md);
       // checkpoint + out stay fresh per invocation.
       val stream = graft.sources.Sources.eventsReplayShared(s, dir,
         splits = 8, maxFilesPerTrigger = 8)

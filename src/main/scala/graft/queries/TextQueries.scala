@@ -655,7 +655,7 @@ object TextQueries {
       // key is DOC-LOCAL, so the r8 relational shape (9-way codegen'd
       // posexplode → (doc,n,gram) count → pivot) paid a ~17-of-24 s hash
       // aggregation at ×30 for counts each document can compute alone
-      // (GopherProbe phase split). RepetitionSignals is one compiled
+      // (phase split in artifacts/SCALE_r9_gopher.json). RepetitionSignals is one compiled
       // O(9·L) pass per doc — prefix-summed char lengths + per-n hash-map
       // counts, exact tie-break included — with NO row fan-out and NO
       // shuffle; the projection stays inside whole-stage codegen. The r8
@@ -1414,7 +1414,7 @@ object TextQueries {
       // cached for ONE materialization (r11, verdict r10 #4): tf feeds the
       // df branch AND the ranking join, and uncached the df branch
       // RE-DERIVES the full corpus explode + a second corpus-sized
-      // exchange (TfidfProbe at ×100: the 446 MB total shuffle was
+      // exchange (OPTIMIZATION_r11.md change 7, ×100: the 446 MB shuffle was
       // tf-agg 158 MB + duplicate tf 119 MB + window 168 MB; AQE does not
       // reuse the exchange because the df branch prunes the count column).
       // Caching tf spends one corpus-sized spill-able write to save a full

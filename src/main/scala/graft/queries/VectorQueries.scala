@@ -179,8 +179,8 @@ object VectorQueries {
     // -- LSH-bucketed ANN (scale path). MULTI-PROBE: the query probes its
     //    own bucket plus the `flips` lowest-margin bit-flip buckets (Lv et
     //    al. VLDB'07) — on the near-uniform sf0.1 corpus this lifts measured
-    //    recall@10 from 0.03 to ~3× at bits=8 (LshRecallProbe prints the
-    //    full recall/cost matrix; FunctionsSpec asserts the floor at
+    //    recall@10 from 0.03 to ~3× at bits=8 (artifacts/LSH_RECALL_r3.jsonl
+    //    holds the full recall/cost matrix; FunctionsSpec asserts the floor at
     //    bits=4/flips=4). ORACLED (r5): hyperplane signs are driver-side
     //    constants (VectorFunctions.planeSigns), so the DuckDB twin
     //    recomputes the IDENTICAL projections, bucket ids, multi-probe flip
@@ -320,7 +320,7 @@ object VectorQueries {
     //    output equals the full jaccard≥0.3 pair set — ground truth the
     //    DuckDB twin recomputes all-pairs — as long as true near-dup pairs
     //    sit within 7 simhash bits (measured max 5 at sf0.01 with the
-    //    planted dups; SimHashProbe prints the matrix). Same oracle SQL as
+    //    planted dups; the matrix is recorded in RESULTS_r5.md). Same oracle SQL as
     //    minhash_near_dups: both engines' outputs ARE the exact pair set,
     //    reached through two different LSH schemes.
     QueryDef("simhash_near_dups", (s, dir) => {

@@ -81,8 +81,8 @@ object Sources {
   /** [[eventsReplay]] with the staging write memoized per (sfDir, splits):
     * the returned STREAM (and its checkpoint/out, owned by the caller) is
     * fresh per call; only the immutable staged input files are shared.
-    * ReplayProfile measured staging at ~0.6 s warm of the replay
-    * headliner's ~2.4 s — pure harness setup at every repeat after the
+    * The replay floor analysis (RESULTS_r9.md) measured staging at ~0.6 s
+    * warm of the replay headliner's ~2.4 s — pure harness setup at every repeat after the
     * first (r8 verdict #1's floor analysis).
     */
   def eventsReplayShared(spark: SparkSession, sfDir: String,

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -8,7 +8,7 @@ import graft.functions.{CosineSimilarity, GraftFunctions, IvfIndex, IvfPq, PqInd
 
 /** Measured recall@10 for the LEARNED ANN structures (IVF, PQ, IVF-PQ) at
   * x1 / x30 / x100 the sf0.1 embeddings corpus — the scale evidence the
-  * sign-LSH path already has (LshRecallProbe). The corpus grows with
+  * sign-LSH path already has (LSH_RECALL_r3). The corpus grows with
   * SYNTHETIC same-distribution vectors (near-uniform random like the driver
   * generator — the worst case for any locality structure; real embedding
   * corpora cluster far better, so every bound here is conservative), because
@@ -30,14 +30,7 @@ object AnnRecallProbe {
     val scales = args.headOption.map(_.split(",").map(_.toInt).toSeq)
       .getOrElse(Seq(1, 30, 100))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     GraftFunctions.register(spark)
     import spark.implicits._
 

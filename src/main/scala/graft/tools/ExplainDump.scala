@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps formatted physical plans for the headline queries — the
   * plan-quality feedback loop (pushdown, broadcast, codegen spans).
   * Usage: runMain graft.tools.ExplainDump [sfDir]
@@ -9,20 +7,11 @@ import org.apache.spark.sql.SparkSession
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    // match the bench's core count so fan-out widths in the dumped plans are
-    // the ones the bench actually runs (plans/r11); extra session confs via
-    // GRAFT_EXPLAIN_CONF=k=v[,k=v] select A/B arms (e.g. the r10-width
+    // the bench's session, so the dumped plans (join strategies, fan-out
+    // widths) are the ones the bench runs (plans/r11); extra session confs
+    // via GRAFT_EXPLAIN_CONF=k=v[,k=v] select A/B arms (e.g. the r10-width
     // "before" arm spark.graft.fanout.rowsPerPartition=1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.timed()
     sys.env.get("GRAFT_EXPLAIN_CONF").foreach(_.split(",").foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
       spark.conf.set(k, v)

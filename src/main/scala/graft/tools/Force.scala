@@ -2,8 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 
-/** Full-row forcing for every TIMED run (Bench / ScaleProbe /
-  * BenchCompare) — one definition (review finding r8). `.count()` is NOT
+/** Full-row forcing for every TIMED run (Bench / [[Probe]]) — one
+  * definition (review finding r8). `.count()` is NOT
   * a benchmark force: Catalyst eliminates every branch no counted column
   * depends on (a left join onto a join-key-aggregated right side drops
   * wholesale; plain aggregations lose their value expressions). The noop

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.config._
@@ -25,13 +24,7 @@ object StreamSmoke {
     val outDir = positional.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-smoke").toString)
 
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
 
     // a finalized sketch (hyperUnique) routes the spec to watermarked mode
     // (per-batch partials can't re-merge finalized HLL values)

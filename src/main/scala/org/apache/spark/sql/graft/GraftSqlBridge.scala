@@ -10,7 +10,8 @@ import org.apache.spark.sql.types.StructType
   * Column ↔ Catalyst Expression conversion (to compose function builders
   * from the public Column DSL) and `Dataset.ofRows` (to run a logical plan
   * with substituted relations — the temp-view-free `/druid/v2/sql` path),
-  * plus the session conf and schema merge [[graft.sink.Footers]] needs.
+  * plus the session conf and schema merge [[graft.sink.Footers]] needs and
+  * the listener-bus drain [[graft.tools.Probe]] reads its meter after.
   * Lives under `org.apache.spark.sql` solely for access; contains no logic.
   */
 object GraftSqlBridge {
@@ -43,4 +44,10 @@ object GraftSqlBridge {
   def mergeSchema(left: StructType, right: StructType,
       caseSensitive: Boolean): StructType =
     left.merge(right, caseSensitive)
+
+  /** Blocks until every listener event posted so far has been delivered
+    * (`LiveListenerBus` is `private[spark]`); throws a TimeoutException
+    * after `timeoutMs`. */
+  def drainListeners(spark: SparkSession, timeoutMs: Long): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
 }

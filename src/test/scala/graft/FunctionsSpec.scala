@@ -354,7 +354,7 @@ class FunctionsSpec extends SparkSpec {
   test("sign-LSH ANN: multi-probe recall floor, and recall beats random sampling") {
     // sf0.1 embeddings: 2000 near-uniform random vectors — the worst case
     // for sign-LSH top-k (true neighbours sit at cos ≈ 0.35, where each
-    // hyperplane agrees only ~0.6 of the time). Measured by LshRecallProbe:
+    // hyperplane agrees only ~0.6 of the time). Measured in LSH_RECALL_r3:
     // bits=4 single-probe 0.135 recall @ 6% candidates; flips=4 multi-probe
     // 0.455 @ 32% — a 1.44× lift over brute-forcing a random 32% sample,
     // which is the honest locality signal on structureless data. All hashes

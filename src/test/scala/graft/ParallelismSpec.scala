@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.Parallelism
@@ -28,7 +30,15 @@ class ParallelismSpec extends SparkSpec {
 
   test("width scales with footer row count and caps at defaultParallelism") {
     // 1000 rows / 500 per partition = 2
-    assert(parts(Parallelism.fanOut(docs, col("doc_id"), 500L)) == 2)
+    val fanned = Parallelism.fanOut(docs, col("doc_id"), 500L)
+    assert(parts(fanned) == 2)
+    // a hash exchange on the key, never round-robin
+    val exchanges = fanned.queryExecution.sparkPlan.collect {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }
+    assert(exchanges.collect { case h: HashPartitioning =>
+      h.expressions.flatMap(_.references.map(_.name)) } == Seq(Seq("doc_id")),
+      s"expected one hashpartitioning(doc_id) exchange, got $exchanges")
     // 1000 / 100 = 10, capped at the session's 4 cores
     assert(parts(Parallelism.fanOut(docs, col("doc_id"), 100L)) == 4)
   }
