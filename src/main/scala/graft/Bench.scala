@@ -71,9 +71,10 @@ object Bench {
   }
 
   /** Cores other processes may burn during a repeat that still counts as
-    * clean (see the CONTENTION GATE below). */
-  private[graft] def gate: Double =
-    sys.env.getOrElse("SPARK_GRAFT_BENCH_LOAD_GATE", "4.0").toDouble
+    * clean (see the CONTENTION GATE below): an eighth of the box — 4.0 on
+    * 32 cores, 0.5 on 4. An absolute core count never fires on a small box,
+    * where others can only exceed it by taking every core. */
+  private[graft] def gate: Double = Runtime.getRuntime.availableProcessors / 8.0
 
   /** The per-repeat timer: Bench times every (query, repeat) with it, and
     * [[graft.tools.Probe]]'s A/B times every arm with it. */
@@ -128,7 +129,7 @@ object Bench {
     // jiffies)/wall) — because 1-min loadavg cannot separate the bench's
     // own bursts from neighbors (measured: idle-box self-load ramps to
     // 9+ while repeat times stay flat). A repeat is clean when others
-    // burned ≤ gate cores (default 4.0 of 32, env-tunable). Queries with
+    // burned ≤ gate cores (an eighth of the box). Queries with
     // no clean repeat get up to 2 extra interleaved rounds; the min is
     // then taken over clean repeats when any exist (falling back to min
     // over all, flagged per-query in "clean"). -1 stamps (no /proc) are

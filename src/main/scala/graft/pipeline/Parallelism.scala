@@ -73,7 +73,7 @@ object Parallelism {
         val fs = p.getFileSystem(hconf)
         val st = fs.getFileStatus(p)
         bytes += st.getLen
-        rows += graft.sink.Footers.footer(st, hconf).rows
+        rows += graft.sink.Footers.footer(st, df.sparkSession).rows
       } catch { case _: Throwable => rowsKnown = false }
     }
     (files.length, bytes, if (rowsKnown && files.nonEmpty) Some(rows) else None)

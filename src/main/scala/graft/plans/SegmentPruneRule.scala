@@ -1,68 +1,63 @@
 package graft.plans
 
-import java.util.concurrent.ConcurrentHashMap
-
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.types.{NumericType, StringType, TimestampType}
 
 import graft.pipeline.Pipeline
-import graft.sink.{SegmentSink, SegmentStore}
+import graft.sink.Footers.Bound
+import graft.sink.SegmentStore
 
 /** Catalyst optimizer rule: AUTOMATIC zone-map segment pruning.
   *
   * [[SegmentStore.readPruned]]/[[SegmentStore.readPrunedNumeric]] prune
-  * explicitly — the caller must know about the sidecar. This rule closes the
-  * loop for plain `spark.read.parquet(store).filter(...)` users (and SQL-only
-  * sessions via [[graft.functions.GraftExtensions]]): a Filter directly over
-  * a segment-partitioned store whose `_graft_stats` sidecar covers a
-  * predicate column gets `segment IN (admitted…)` injected, which Spark's
+  * explicitly — the caller must know about the zone map. This rule closes
+  * the loop for plain `spark.read.parquet(store).filter(...)` users (and
+  * SQL-only sessions via [[graft.functions.GraftExtensions]]): a Filter
+  * directly over a `segment`-partitioned store whose files' footers bound
+  * a predicate column gets `segment IN (admitted…)` injected, which Spark's
   * partition pruning turns into a directory-level scan cut — the same
   * mechanism Druid's broker uses segment metadata for at query routing.
+  * The files and their `segment` values come from the relation's own
+  * FileIndex, which Spark has already listed, so the prune covers exactly
+  * what the scan will read (a file sink's `_spark_metadata` log included);
+  * footers are cached, so planning launches no Spark job.
   *
   * Soundness: a conjunct `dim = v` / numeric range only ever EXCLUDES
   * segments whose merged [min, max] cannot contain matching rows; segments
-  * without stats coverage are kept (pruneSegments* are conservative). Only
-  * top-level AND conjuncts are consulted. A conjunct that is itself a
-  * string disjunction — `dim IN (a,b,…)` (or its optimized InSet form) or
-  * `dim = a OR dim = b` on ONE column, both common shapes of Druid filter
-  * JSON — admits the UNION of the per-value admissions (sound: any row
-  * matching the disjunct matches one of the values); mixed-column OR trees
-  * are ignored.
+  * without a bound for the column are kept (the admissions are
+  * conservative). Only top-level AND conjuncts are consulted. A conjunct
+  * that is itself a string disjunction — `dim IN (a,b,…)` (or its optimized
+  * InSet form) or `dim = a OR dim = b` on ONE column, both common shapes of
+  * Druid filter JSON — admits the UNION of the per-value admissions (sound:
+  * any row matching the disjunct matches one of the values); mixed-column
+  * OR trees are ignored.
   *
-  * Bounded planning cost: the sidecar is consulted once per distinct
-  * (store, predicate, sidecar-mtime) — memoized — and never re-entered
-  * (the prune query itself plans through this rule). Plans already
-  * constraining `segment` are left untouched, which also makes the rewrite
-  * a fixed point.
+  * Plans already constraining `segment` are left untouched, which also
+  * makes the rewrite a fixed point.
   */
 class SegmentPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  import SegmentPruneRule._
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (inRule.get()) plan
-    else plan.transform {
-      case f @ Filter(cond, rel: LogicalRelation)
-          if segmentAttr(rel).isDefined &&
-            !cond.references.exists(_.name == Pipeline.SegmentCol) =>
-        rootPath(rel) match {
-          case Some(path) =>
-            admitted(path, cond) match {
-              case Some(segs) =>
-                val extra =
-                  if (segs.isEmpty) Literal.FalseLiteral
-                  else In(segmentAttr(rel).get,
-                    segs.map(s => Literal.create(s, StringType)))
-                Filter(And(cond, extra), rel)
-              case None => f
-            }
-          case _ => f
-        }
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
+    case f @ Filter(cond, rel: LogicalRelation)
+        if !cond.references.exists(_.name == Pipeline.SegmentCol) =>
+      (rel.relation, segmentAttr(rel)) match {
+        case (hfs: HadoopFsRelation, Some(seg)) =>
+          admitted(hfs, cond) match {
+            case Some(segs) =>
+              val extra =
+                if (segs.isEmpty) Literal.FalseLiteral
+                else In(seg, segs.map(s => Literal.create(s, StringType)))
+              Filter(And(cond, extra), rel)
+            case None => f
+          }
+        case _ => f
+      }
+  }
 
   private def segmentAttr(rel: LogicalRelation): Option[AttributeReference] =
     rel.output.collectFirst {
@@ -70,40 +65,32 @@ class SegmentPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
           if a.name == Pipeline.SegmentCol && a.dataType == StringType => a
     }
 
-  /** Single-root HadoopFsRelation path; never the sidecar's own scan. */
-  private def rootPath(rel: LogicalRelation): Option[String] = rel.relation match {
-    case hfs: HadoopFsRelation =>
-      hfs.location.rootPaths.toList match {
-        case p :: Nil if !p.toString.contains(SegmentSink.StatsDir) =>
-          Some(p.toString)
-        case _ => None
-      }
-    case _ => None
-  }
-
-  /** Sidecar dir modification time (0 = absent) — cache-key ingredient so a
-    * regenerated sidecar invalidates memoized prunes. */
-  private def sidecarMtime(path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/${SegmentSink.StatsDir}")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try { if (fs.exists(p)) math.max(fs.getFileStatus(p).getModificationTime, 1L) else 0L }
-    catch { case _: java.io.IOException => 0L }
-  }
+  /** The relation's files by `segment` value, as its listed FileIndex hands
+    * them to the scan, sorted by segment; None unless it is a single-root
+    * listed index with `segment` a string partition column valued in every
+    * partition. */
+  private def segmentFiles(hfs: HadoopFsRelation): Option[(String, Seq[(String, Seq[FileStatus])])] =
+    (hfs.location, hfs.location.rootPaths.toList) match {
+      case (index: PartitioningAwareFileIndex, root :: Nil) =>
+        val i = index.partitionSchema.fields.indexWhere(f =>
+          f.name == Pipeline.SegmentCol && f.dataType == StringType)
+        val dirs = if (i < 0) Nil else index.listFiles(Nil, Nil)
+        if (i < 0 || dirs.exists(_.values.isNullAt(i))) None
+        else Some(root.toString -> dirs.groupBy(_.values.getUTF8String(i).toString)
+          .toSeq.sortBy(_._1)
+          .map { case (seg, ds) => seg -> ds.flatMap(_.files.map(_.fileStatus)) })
+      case _ => None
+    }
 
   /** Intersection of per-conjunct admitted segment lists; None when no
-    * conjunct is answerable. Dim/metric conjuncts need the zone-map sidecar;
-    * a time-interval conjunct on the bucket column needs only the segment
-    * layout itself (dir names encode chunk starts — the Druid `intervals`
-    * clause answered at planning, like the broker's segment timeline).
-    *
-    * No filesystem work happens unless some conjunct is answerable. The memo
-    * key carries everything the answer depends on: the sidecar mtime (dim /
-    * numeric prunes), the current segment listing (time prunes — a NEW chunk
-    * appearing must invalidate, or its rows would silently vanish behind a
-    * stale IN list), and the session timezone (dir names parse in it). */
-  private def admitted(path: String, cond: Expression): Option[Seq[String]] = {
+    * conjunct is answerable or every segment is admitted. Dim/metric
+    * conjuncts read the segments' footer zone maps; a time-interval
+    * conjunct on the bucket column needs only the segment names themselves
+    * (dir names encode chunk starts — the Druid `intervals` clause answered
+    * at planning, like the broker's segment timeline). */
+  private def admitted(hfs: HadoopFsRelation, cond: Expression): Option[Seq[String]] = {
     val conjuncts = splitAnd(cond)
-    val stringEqAll = conjuncts.collect {
+    val stringEq = conjuncts.collect {
       case EqualTo(a: AttributeReference, Literal(v, StringType)) if v != null =>
         (a.name, v.toString)
       case EqualTo(Literal(v, StringType), a: AttributeReference) if v != null =>
@@ -118,60 +105,40 @@ class SegmentPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case EqualNullSafe(Literal(v, StringType), a: AttributeReference)
           if v != null => (a.name, v.toString)
     }
-    val stringInAll = collectStringDisjunctions(conjuncts)
-    val numericBoundsAll = collectNumericBounds(conjuncts)
+    val stringIn = collectStringDisjunctions(conjuncts)
+    val numericBounds = collectNumericBounds(conjuncts)
     val tsBounds = collectTsBounds(conjuncts)
-    if (stringEqAll.isEmpty && stringInAll.isEmpty && numericBoundsAll.isEmpty &&
-        tsBounds.isEmpty)
-      return None // nothing answerable — zero filesystem cost
-
-    val mtime = sidecarMtime(path)
-    val stringEq = if (mtime > 0) stringEqAll else Nil
-    val stringIn = if (mtime > 0) stringInAll else Nil
-    val numericBounds = if (mtime > 0) numericBoundsAll else Nil
     if (stringEq.isEmpty && stringIn.isEmpty && numericBounds.isEmpty &&
-        tsBounds.isEmpty) return None
+        tsBounds.isEmpty)
+      return None // nothing answerable — zero listing or footer cost
 
-    // parse dir names in the zone they were WRITTEN under (the sink's
-    // marker; session-zone fallback for pre-marker stores) — a reader
-    // session in a different zone would otherwise silently prune valid
-    // boundary segments (review finding r7)
-    val tz = SegmentStore.writerZone(spark, path).getId
-    val names = SegmentStore.listSegmentDirs(spark, path)
+    val (root, segFiles) = segmentFiles(hfs) match {
+      case Some(found) => found
+      case None => return None
+    }
+    val names = segFiles.map(_._1)
     if (names.isEmpty) return None
-    val key = s"$path@$mtime@$tz@${names.size}:${names.hashCode}|" +
-      (stringEq.map(e => s"s:${e._1}=${e._2}") ++
-        stringIn.map(e => s"i:${e._1}∈{${e._2.sorted.mkString(",")}}") ++
-        numericBounds.map(b => s"n:${b._1}∈[${b._2},${b._3}]") ++
-        tsBounds.map(b => s"t:[${b._1},${b._2}]")).sorted.mkString("&")
-    // bound the memo: distinct LITERALS create distinct keys (think a
-    // dashboard's moving now()-relative ts ranges) — reset wholesale rather
-    // than LRU-track; recompute cost is one small sidecar/listing job
-    if (cache.size() > 4096) cache.clear()
-    val segs = cache.computeIfAbsent(key, _ => {
-      inRule.set(true)
-      try {
-        val lists =
-          stringEq.map { case (d, v) =>
-            SegmentStore.pruneSegments(spark, path, d, v).toSet } ++
-          // disjunction: union of per-value admissions (each conservative)
-          stringIn.map { case (d, vs) =>
-            vs.map(v => SegmentStore.pruneSegments(spark, path, d, v).toSet)
-              .reduce(_ union _) } ++
-          numericBounds.map { case (c, lo, hi) =>
-            SegmentStore.pruneSegmentsNumericRange(spark, path, c, lo, hi).toSet } ++
-          tsBounds.flatMap { case (lo, hi) => timeAdmitted(names, tz, lo, hi) }
-        if (lists.isEmpty) AllSegments
-        else {
-          val admit = lists.reduce(_ intersect _)
-          // everything admitted → no rewrite: a full-store IN list would
-          // bloat the plan (thousands of chunks) for zero pruning
-          if (names.forall(admit)) AllSegments
-          else admit.toSeq.sorted
-        }
-      } finally inRule.set(false)
-    })
-    if (segs eq AllSegments) None else Some(segs)
+    lazy val zones = SegmentStore.zoneMaps(spark, segFiles)
+    def admit(ok: Map[String, Bound] => Boolean): Set[String] =
+      zones.collect { case (seg, z) if ok(z) => seg }.toSet
+    val lists =
+      stringEq.map { case (d, v) => admit(z => SegmentStore.admitsRange(z.get(d), v, v)) } ++
+      // disjunction: union of per-value admissions (each conservative)
+      stringIn.map { case (d, vs) =>
+        admit(z => vs.exists(v => SegmentStore.admitsRange(z.get(d), v, v))) } ++
+      numericBounds.map { case (c, lo, hi) =>
+        admit(z => SegmentStore.admitsNumeric(z.get(c), lo, hi)) } ++
+      // parse dir names in the zone they were WRITTEN under (the sink's
+      // marker; session-zone fallback for pre-marker stores) — a reader
+      // session in a different zone would otherwise silently prune valid
+      // boundary segments
+      tsBounds.flatMap { case (lo, hi) =>
+        timeAdmitted(names, SegmentStore.writerZone(spark, root).getId, lo, hi) }
+    if (lists.isEmpty) return None
+    val kept = lists.reduce(_ intersect _)
+    // everything admitted → no rewrite: a full-store IN list would bloat the
+    // plan (thousands of chunks) for zero pruning
+    if (names.forall(kept)) None else Some(names.filter(kept))
   }
 
   /** Segments whose chunk can overlap [lo, hi] micros on the bucket column.
@@ -326,19 +293,4 @@ class SegmentPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
     }
     bounds.toSeq.map { case (n, (lo, hi)) => (n, lo, hi) }
   }
-}
-
-object SegmentPruneRule {
-  /** The prune query must not re-enter the rule (its own stats scan is a
-    * Filter over parquet). */
-  private val inRule: ThreadLocal[java.lang.Boolean] =
-    ThreadLocal.withInitial[java.lang.Boolean](() => java.lang.Boolean.FALSE)
-
-  /** (path, predicate, sidecar-mtime) → admitted segments. Bounded: distinct
-    * stores × distinct predicates actually planned. */
-  private val cache = new ConcurrentHashMap[String, Seq[String]]()
-
-  /** Sentinel: every prune was conservative (keep-all) — no rewrite, cached
-    * so re-optimization doesn't recompute. */
-  private[plans] val AllSegments: Seq[String] = Seq(" __all__")
 }

@@ -11,7 +11,7 @@ import graft.functions.{IvfIndex, IvfPqIndex, PqCodebook}
   * finding: `ann_*` paths retrained per execution, correct for the oracle
   * gate but the wrong production shape — this store closes it.
   *
-  * Layout mirrors the zone-map sidecar convention ([[SegmentSink.StatsDir]]):
+  * Layout follows the store's sidecar convention ([[SegmentSink.TzMarker]]):
   * everything under an `_`-prefixed dir so plain parquet readers of the
   * owning store ignore it. All artifacts are written THROUGH Spark (parquet),
   * so the store works on any Hadoop filesystem, not just local paths:
@@ -30,7 +30,7 @@ import graft.functions.{IvfIndex, IvfPqIndex, PqCodebook}
   */
 object AnnIndexStore {
 
-  /** `_`-prefixed like the zone-map sidecar: invisible to plain readers. */
+  /** `_`-prefixed like the timezone marker: invisible to plain readers. */
   val AnnDir = "_graft_ann"
 
   def indexPath(storePath: String, name: String): String =

@@ -22,11 +22,6 @@ import org.apache.spark.sql.functions._
 object SegmentSink {
   import graft.pipeline.Pipeline.SegmentCol
 
-  /** Zone-map sidecar dir: `_`-prefixed so Spark's parquet reader ignores it
-    * on normal reads of the store.
-    */
-  val StatsDir = "_graft_stats"
-
   /** Marker file persisting the WRITE session's timezone: segment dir names
     * are `date_format` renderings under it, so every later chunk-name
     * comparison (the prune rule, interval reads, retention/kill) must parse
@@ -81,114 +76,40 @@ object SegmentSink {
     }
   }
 
-  /** Batch append, partitioned by segment bucket (expects SegmentCol present).
-    * Alongside the data, appends a per-(segment, string-dim) min/max zone-map
-    * row to [[StatsDir]] — [[SegmentStore.pruneSegments]] turns a dim
-    * predicate into a segment list BEFORE the scan, extending partition
-    * pruning beyond the time key (Druid dims are strings, so string columns
-    * are exactly the prunable set; lexicographic min/max is sound there).
-    * The stats agg runs over the already-rolled micro-batch (tiny) and
-    * min/max merge is idempotent, so an at-least-once replay can only widen
-    * nothing — duplicate stats rows collapse in the prune-time re-merge.
+  /** Batch append, partitioned by segment bucket (expects SegmentCol
+    * present): one action. Parquet writes each column's per-row-group
+    * min/max into the file footers, and [[SegmentStore.pruneSegments]]
+    * turns a dim predicate into a segment list from them BEFORE the scan,
+    * extending partition pruning beyond the time key.
     */
   def writeBatch(df: DataFrame, path: String): Unit = {
     require(df.columns.contains(SegmentCol), s"missing $SegmentCol column")
-    // stable string form for directory names (avoid raw timestamp encoding).
-    // persisted: the data write and the stats agg are TWO actions — without
-    // the cache the second re-executes the batch plan, which would both
-    // redo the rollup and double-count upstream `observe` metrics.
     writeTzMarker(df.sparkSession, path) // zone check BEFORE any data lands
-    val out = df.withColumn(SegmentCol,
-      date_format(col(SegmentCol), "yyyy-MM-dd'T'HH.mm.ss")).persist()
-    try {
-      out.write.mode("append").partitionBy(SegmentCol)
-        // zstd ≈ 2× smaller than snappy at comparable read speed — at 100 TB
-        // ingest the storage/IO saving dominates the extra encode CPU
-        .option("compression", "zstd")
-        .parquet(path)
-      appendStats(out, path)
-    } finally out.unpersist()
+    // stable string form for directory names (avoid raw timestamp encoding)
+    df.withColumn(SegmentCol, date_format(col(SegmentCol), "yyyy-MM-dd'T'HH.mm.ss"))
+      .write.mode("append").partitionBy(SegmentCol)
+      // zstd ≈ 2× smaller than snappy at comparable read speed — at 100 TB
+      // ingest the storage/IO saving dominates the extra encode CPU
+      .option("compression", "zstd")
+      .parquet(path)
   }
 
-  /** Append per-(segment, column) min/max rows to the sidecar, typed by
-    * family: `string` columns in lexicographic `min_val`/`max_val` (sound
-    * for Druid-style string dims), integral columns in `min_lng`/`max_lng`
-    * (exact long bounds — no 2⁵³ double rounding), floating columns in
-    * `min_dbl`/`max_dbl`. One aggregation over the already-rolled batch,
-    * one struct-explode, one append. Expects SegmentCol already in
-    * dir-string form. Min/max merge is idempotent, so at-least-once replays
-    * only re-state the same bounds.
-    */
-  private[sink] def appendStats(out: DataFrame, path: String): Unit = {
-    import org.apache.spark.sql.types._
-    def family(dt: DataType): Option[String] = dt match {
-      case StringType => Some("string")
-      case ByteType | ShortType | IntegerType | LongType => Some("long")
-      case FloatType | DoubleType => Some("double")
-      case _ => None // timestamps ride the segment key; binary sketches unbounded
-    }
-    val statCols = out.schema.fields
-      .filter(f => f.name != SegmentCol && f.name != "__batch_id")
-      .flatMap(f => family(f.dataType).map(f.name -> _)).toSeq
-    if (statCols.isEmpty) return
-    val aggs = statCols.flatMap { case (c, _) =>
-      Seq(min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c")) }
-    val wide = out.groupBy(col(SegmentCol)).agg(aggs.head, aggs.tail: _*)
-    val nullS = lit(null).cast(StringType)
-    val nullL = lit(null).cast(LongType)
-    val nullD = lit(null).cast(DoubleType)
-    val rows = statCols.map { case (c, fam) =>
-      val (lo, hi) = (col(s"__min_$c"), col(s"__max_$c"))
-      val (minS, maxS) = if (fam == "string") (lo, hi) else (nullS, nullS)
-      val (minL, maxL) = if (fam == "long")
-        (lo.cast(LongType), hi.cast(LongType)) else (nullL, nullL)
-      val (minD, maxD) = if (fam == "double")
-        (lo.cast(DoubleType), hi.cast(DoubleType)) else (nullD, nullD)
-      struct(lit(c).as("column"), lit(fam).as("col_type"),
-        minS.as("min_val"), maxS.as("max_val"),
-        minL.as("min_lng"), maxL.as("max_lng"),
-        minD.as("min_dbl"), maxD.as("max_dbl"))
-    }
-    wide.select(col(SegmentCol), explode(array(rows: _*)).as("s"))
-      .select(col(SegmentCol), col("s.*"))
-      .coalesce(1)
-      .write.mode("append").parquet(s"$path/$StatsDir")
-  }
-
-  /** foreachBatch body for streaming writes. Exactly-once storage, not just
-    * exactly-once bookkeeping: the write is keyed by (segment, __batch_id)
-    * with DYNAMIC partition overwrite, so a batch replayed after a crash
-    * between data write and checkpoint commit OVERWRITES its own partitions
-    * instead of appending duplicates — append mode alone would leave the
-    * half-written attempt beside the replay. Other batches' partitions are
-    * untouched (dynamic mode only overwrites partitions present in the
-    * incoming batch). The zone-map sidecar stays append-only: min/max
-    * re-merge, so duplicate stats rows are harmless.
+  /** foreachBatch body for streaming writes: one action per batch.
+    * Exactly-once storage, not just exactly-once bookkeeping: the write is
+    * keyed by (segment, __batch_id) with DYNAMIC partition overwrite, so a
+    * batch replayed after a crash between data write and checkpoint commit
+    * OVERWRITES its own partitions instead of appending duplicates — append
+    * mode alone would leave the half-written attempt beside the replay.
+    * Other batches' partitions are untouched (dynamic mode only overwrites
+    * partitions present in the incoming batch). `withStats` is ignored:
+    * the zone map is the files' own footers.
     */
   def writeMicroBatch(path: String, withStats: Boolean = true)(
       df: DataFrame, batchId: Long): Unit = {
     require(df.columns.contains(SegmentCol), s"missing $SegmentCol column")
+    writeTzMarker(df.sparkSession, path) // zone check BEFORE any data lands
     val out = df.withColumn("__batch_id", lit(batchId))
       .withColumn(SegmentCol, date_format(col(SegmentCol), "yyyy-MM-dd'T'HH.mm.ss"))
-    if (withStats) {
-      // two actions (data + stats) — see writeBatch for why the persist
-      val cached = out.persist()
-      try {
-        writeData(cached, path, batchId)
-        appendStats(cached, path)
-      } finally cached.unpersist()
-    } else {
-      // deferred-stats mode (streaming hot path): ONE action per batch — no
-      // persist materialization, no per-batch stats job/append. The sidecar
-      // is advisory (absent → conservative keep-all), so the stream owner
-      // rebuilds it once at flush via [[regenerateStats]]; a crash before
-      // that loses pruning hints, never data.
-      writeData(out, path, batchId)
-    }
-  }
-
-  private def writeData(out: DataFrame, path: String, batchId: Long): Unit = {
-    writeTzMarker(out.sparkSession, path) // zone check BEFORE any data lands
     // Append commit: when no (segment, __batch_id=N) dir exists yet — every
     // batch except a replay-after-crash or a batch-id collision across
     // checkpoint-fresh queries on one store — a plain APPEND is
@@ -226,35 +147,5 @@ object SegmentSink {
     writer.partitionBy(SegmentCol, "__batch_id")
       .option("compression", "zstd")
       .parquet(path)
-  }
-
-  /** Rebuild the zone-map sidecar from the store itself, one aggregation
-    * over already-reduced partials — the flush-time companion of the
-    * deferred-stats streaming mode, also usable to repair/upgrade any
-    * store's sidecar. Overwrites: the sidecar is a derived index, so a
-    * fresh exact build (no replay duplicates) is strictly better than
-    * appending.
-    */
-  /** Remove the sidecar. A deferred-stats stream calls this ON START: while
-    * the stream appends without per-batch stats rows, an existing sidecar
-    * would be COVERED-BUT-STALE for the segments it re-enters — pruned
-    * reads would silently drop the new rows. Absent sidecar = conservative
-    * keep-all, which is always safe; [[regenerateStats]] restores exact
-    * bounds at flush.
-    */
-  def dropStats(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/$StatsDir")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true); ()
-  }
-
-  def regenerateStats(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p) ||
-      !fs.listStatus(p).exists(_.getPath.getName.startsWith(s"$SegmentCol=")))
-      return // nothing written — nothing to index
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/$StatsDir"), true)
-    appendStats(spark.read.parquet(path), path)
   }
 }

@@ -1,11 +1,18 @@
 package graft.sink
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.FileStatus
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.config.{AggregatorSpec, IngestionSpec}
 import graft.pipeline.Pipeline
+import graft.sink.Footers.{Bound, DoubleBound, LongBound, StrBound}
 
 /** Query-time merge of per-batch partial rollups — the engine's analog of
   * Druid merging incremental segments at query time (the reference delivers
@@ -137,103 +144,84 @@ object SegmentStore {
       .agg(merges.head, merges.tail: _*)
   }
 
-  /** Segments whose zone-map admits `dim = value` (min ≤ value ≤ max), from
-    * the [[SegmentSink.StatsDir]] sidecar. Per-batch stats rows re-merge here
-    * (min of mins / max of maxes), so replays and multi-batch segments are
-    * handled. A segment with NO stats row for `dim` is kept conservatively
-    * (schema evolution: the dim may not exist in old chunks).
+  /** Segments whose zone map admits `dim = value` (min ≤ value ≤ max). A
+    * segment with no bound for `dim` is kept (schema evolution: the dim may
+    * not exist in old chunks).
     */
   def pruneSegments(spark: SparkSession, path: String, dim: String,
       value: String): Seq[String] =
     pruneSegmentsRange(spark, path, dim, value, value)
 
   /** Range form: segments whose zone-map interval [lo, hi] overlaps
-    * [lower, upper] (dim BETWEEN predicates). String-typed: only `string`
-    * stats rows answer (lexicographic min/max is sound there); a numeric
-    * column queried through this form has no string rows → kept
-    * conservatively (use [[pruneSegmentsNumericRange]] instead).
+    * [lower, upper] (dim BETWEEN predicates). String-typed: only string
+    * bounds answer (lexicographic min/max is sound there); a numeric
+    * column queried through this form has none → kept conservatively (use
+    * [[pruneSegmentsNumericRange]] instead). Footers only, no Spark job.
     */
   def pruneSegmentsRange(spark: SparkSession, path: String, dim: String,
       lower: String, upper: String): Seq[String] =
-    pruneWith(spark, path) { stats =>
-      val isDim = col("column") === dim && typeOf(stats) === "string"
-      val byStats = stats.groupBy(col(Pipeline.SegmentCol))
-        .agg(min(when(isDim, col("min_val"))).as("lo"),
-          max(when(isDim, col("max_val"))).as("hi"))
-      byStats.filter(col("lo").isNull ||
-        (lit(upper) >= col("lo") && lit(lower) <= col("hi")))
+    zoneMaps(spark, path).collect {
+      case (seg, z) if admitsRange(z.get(dim), lower, upper) => seg
     }
 
   /** Numeric range pruning: segments whose typed min/max overlaps
     * [lower, upper]. Long-family bounds compare in exact long space
     * (predicate bounds floor/ceil'd — no 2⁵³ double-rounding false
-    * exclusions); double-family bounds compare directly. A segment with no
-    * numeric stats row for the column (legacy sidecar, evolved schema) is
-    * kept conservatively.
+    * exclusions); double-family bounds compare in Spark's double order. A
+    * segment with no numeric bound for the column (evolved schema, string
+    * column) is kept conservatively. Footers only, no Spark job.
     */
   def pruneSegmentsNumericRange(spark: SparkSession, path: String, column: String,
-      lower: Double, upper: Double): Seq[String] = {
-    // saturating floor/ceil: exact long comparisons for integral columns
-    val loL = if (lower <= Long.MinValue.toDouble) Long.MinValue else math.floor(lower).toLong
-    val upL = if (upper >= Long.MaxValue.toDouble) Long.MaxValue else math.ceil(upper).toLong
-    pruneWith(spark, path) { stats =>
-      val isCol = col("column") === column
-      val byStats = stats.groupBy(col(Pipeline.SegmentCol)).agg(
-        min(when(isCol && typeOf(stats) === "long", col("min_lng"))).as("lo_l"),
-        max(when(isCol && typeOf(stats) === "long", col("max_lng"))).as("hi_l"),
-        min(when(isCol && typeOf(stats) === "double", col("min_dbl"))).as("lo_d"),
-        max(when(isCol && typeOf(stats) === "double", col("max_dbl"))).as("hi_d"))
-      byStats.filter(
-        (col("lo_l").isNull && col("lo_d").isNull) ||
-          (col("lo_l").isNotNull && col("lo_l") <= lit(upL) && col("hi_l") >= lit(loL)) ||
-          (col("lo_d").isNotNull && col("lo_d") <= lit(upper) && col("hi_d") >= lit(lower)))
+      lower: Double, upper: Double): Seq[String] =
+    zoneMaps(spark, path).collect {
+      case (seg, z) if admitsNumeric(z.get(column), lower, upper) => seg
     }
+
+  /** Whether a segment whose zone map gives `b` for a column can hold a
+    * string in [lower, upper]; true without a string bound. */
+  private[graft] def admitsRange(b: Option[Bound], lower: String,
+      upper: String): Boolean = b match {
+    case Some(StrBound(lo, hi)) =>
+      UTF8String.fromString(upper).compareTo(lo) >= 0 &&
+        UTF8String.fromString(lower).compareTo(hi) <= 0
+    case _ => true
   }
 
-  /** Legacy sidecars (pre-typed zone-maps) carry no `col_type`; every row
-    * they wrote was a string dim.
-    */
-  private def typeOf(stats: DataFrame): Column =
-    if (stats.columns.contains("col_type")) coalesce(col("col_type"), lit("string"))
-    else lit("string")
-
-  /** Shared prune scaffold: list segment dirs, read the sidecar (absent →
-    * keep all), apply `admit` to per-segment merged stats, and keep any
-    * segment the sidecar has never covered. `_`-prefixed dirs are hidden
-    * from Spark's listing even as an explicit root — hence the explicit
-    * part files — which is exactly what keeps the sidecar out of normal
-    * store reads. Driver state is the segment list (bounded by time chunks).
-    */
-  /** The zone-map sidecar's parquet files, empty when there is no sidecar.
-    * A crash during appendStats can leave an empty dir (or only a
-    * _temporary child); every sidecar consumer must degrade conservatively
-    * (keep-all / null ranges) instead of failing the read on no files — one
-    * shared listing so no consumer forgets (review finding r7). */
-  private def statsFiles(spark: SparkSession, path: String): Seq[String] = {
-    val statsPath = new org.apache.hadoop.fs.Path(s"$path/${SegmentSink.StatsDir}")
-    val fs = statsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(statsPath)) Nil
-    else fs.listStatus(statsPath).toSeq.map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).map(_.toString)
+  /** Whether a segment whose zone map gives `b` for a column can hold a
+    * number in [lower, upper]; true without a numeric bound. */
+  private[graft] def admitsNumeric(b: Option[Bound], lower: Double,
+      upper: Double): Boolean = b match {
+    case Some(LongBound(lo, hi)) =>
+      // saturating floor/ceil: exact long comparisons for integral columns
+      val loL = if (lower <= Long.MinValue.toDouble) Long.MinValue else math.floor(lower).toLong
+      val upL = if (upper >= Long.MaxValue.toDouble) Long.MaxValue else math.ceil(upper).toLong
+      lo <= upL && hi >= loL
+    case Some(DoubleBound(lo, hi)) =>
+      SQLOrderingUtil.compareDoubles(lo, upper) <= 0 &&
+        SQLOrderingUtil.compareDoubles(hi, lower) >= 0
+    case _ => true
   }
 
-  private def pruneWith(spark: SparkSession, path: String)(
-      admit: DataFrame => DataFrame): Seq[String] = {
-    val segDirs = listSegmentDirs(spark, path)
-    val sidecar = statsFiles(spark, path)
-    if (sidecar.isEmpty) return segDirs
-    // footer-merged schema: a store written across sidecar versions keeps
-    // old rows readable (missing typed columns surface as nulls →
-    // conservative)
-    val stats = open(spark, sidecar: _*)
-    val admitted = admit(stats)
-      .select(col(Pipeline.SegmentCol)).collect().map(_.getString(0))
-    val covered = stats.select(col(Pipeline.SegmentCol)).distinct()
-      .collect().map(_.getString(0))
-    // segments on disk but ABSENT from the sidecar (written before the
-    // zone-map existed, or by a stats-less writer) are kept conservatively —
-    // the sidecar can only prune what it has covered
-    (admitted ++ segDirs.diff(covered.toSeq)).toSeq.distinct.sorted
+  /** Each segment's zone map: per column, the bound covering its files'
+    * footer bounds. Files without values in the column (it is absent from
+    * their schema, or null throughout) add nothing, as nulls never match;
+    * a column with no values in the segment at all, or one that a file
+    * holds values of without a bound, has none, so every admission keeps
+    * that segment. */
+  private[graft] def zoneMaps(spark: SparkSession,
+      segFiles: Seq[(String, Seq[FileStatus])]): Seq[(String, Map[String, Bound])] =
+    segFiles.map { case (seg, files) =>
+      val footers = files.map(Footers.footer(_, spark))
+      seg -> footers.flatMap(_.bounds.keys).distinct.flatMap(c =>
+        Bound.cover(footers.flatMap(_.bounds.get(c))).map(c -> _)).toMap
+    }
+
+  /** The zone maps of the store at `path`, one per `segment=` dir, sorted. */
+  private def zoneMaps(spark: SparkSession,
+      path: String): Seq[(String, Map[String, Bound])] = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    zoneMaps(spark, listSegmentDirs(spark, path).map(seg =>
+      seg -> Footers.dataFiles(hconf, Seq(s"$path/${Pipeline.SegmentCol}=$seg"))))
   }
 
   /** `segment=` partition directory names under `path`. */
@@ -368,8 +356,9 @@ object SegmentStore {
       gran.truncateInstant(t.toInstant, writerZone(spark, path))))
 
   /** Per-segment metadata — the Druid segmentMetadata query analog: row
-    * count, batch count, and merged dim value ranges from the zone-map
-    * sidecar. Input is already-reduced partials, so this is a cheap scan.
+    * count, batch count, and each column's value range from the segment's
+    * zone map (footers; numbers rendered through Spark's string cast).
+    * Input is already-reduced partials, so this is a cheap scan.
     */
   def metadata(spark: SparkSession, path: String): DataFrame = {
     val df = open(spark, path)
@@ -379,37 +368,25 @@ object SegmentStore {
     val rows = df
       .groupBy(col(Pipeline.SegmentCol))
       .agg(count(lit(1)).as("rows"), batches.as("batches"))
-    val sidecar = statsFiles(spark, path)
-    if (sidecar.isEmpty) // stats-less store: dim_ranges = null
-      return rows.withColumn("dim_ranges", lit(null).cast(
-        "array<struct<column:string,min_val:string,max_val:string>>"))
-    val raw = open(spark, sidecar: _*)
-    // merge bounds per family FIRST (lexicographic min over stringified
-    // numbers would say "10" < "9"), then render to strings for the report
-    val typed = raw.columns.contains("min_lng")
-    val merged = raw.groupBy(col(Pipeline.SegmentCol), col("column"))
-      .agg(min(col("min_val")).as("ms"), max(col("max_val")).as("xs"),
-        (if (typed) min(col("min_lng")) else min(lit(null).cast(LongType))).as("ml"),
-        (if (typed) max(col("max_lng")) else max(lit(null).cast(LongType))).as("xl"),
-        (if (typed) min(col("min_dbl")) else min(lit(null).cast("double"))).as("md"),
-        (if (typed) max(col("max_dbl")) else max(lit(null).cast("double"))).as("xd"))
-    val stats = merged
-      .select(col(Pipeline.SegmentCol), col("column"),
-        coalesce(col("ms"), col("ml").cast("string"), col("md").cast("string")).as("min_val"),
-        coalesce(col("xs"), col("xl").cast("string"), col("xd").cast("string")).as("max_val"))
-      .groupBy(col(Pipeline.SegmentCol))
-      .agg(sort_array(collect_list(struct(col("column"), col("min_val"),
-        col("max_val")))).as("dim_ranges"))
-    rows.join(stats, Seq(Pipeline.SegmentCol), "left")
+    def render(v: Any): String = Cast(Literal(v), StringType).eval().toString
+    val ranges = zoneMaps(spark, path).collect { case (seg, z) if z.nonEmpty =>
+      Row(seg, z.toSeq.sortBy(_._1).map {
+        case (c, StrBound(lo, hi)) => Row(c, lo.toString, hi.toString)
+        case (c, LongBound(lo, hi)) => Row(c, render(lo), render(hi))
+        case (c, DoubleBound(lo, hi)) => Row(c, render(lo), render(hi))
+      })
+    }
+    val schema = StructType.fromDDL(s"${Pipeline.SegmentCol} string, " +
+      "dim_ranges array<struct<column:string,min_val:string,max_val:string>>")
+    rows.join(spark.createDataFrame(ranges.asJava, schema),
+      Seq(Pipeline.SegmentCol), "left")
   }
 
   /** Retention rules — the Druid drop-rule analog (coordinator `dropBefore` /
     * period load rules): delete segment directories whose time chunk ends
     * before `keepFrom`. Chunk membership comes from the sortable dir-name
     * encoding, so this is a pure fs-metadata operation — no data scan; the
-    * zone-map sidecar rows for dropped segments become dead weight that the
-    * next [[SegmentSink.regenerateStats]]/compaction clears (pruning reads
-    * only intersect covered segments, so stale rows are harmless).
+    * zone map lives in the dropped files' footers and goes with them.
     * Returns the dropped segment names.
     */
   def applyRetention(spark: SparkSession, path: String, spec: IngestionSpec,
@@ -535,22 +512,15 @@ object SegmentStore {
   def compact(spark: SparkSession, path: String, spec: IngestionSpec,
       outPath: String): Unit = {
     // sketches stay binary through compaction — compacted stores re-merge.
-    // persisted: the data write and stats regen are two actions, and the
-    // expensive full-store merge must not run twice
-    val finals = read(spark, path, spec, finalizeSketches = false).persist()
-    try {
-      // keep the (segment, __batch_id) layout invariant: compacted rows land
-      // as batch 0, so later appendToExisting tasks (batch ids ≥ 1) coexist
-      // in the same directory tree — mixed flat/nested layouts would break
-      // parquet partition discovery
-      finals.withColumn("__batch_id", org.apache.spark.sql.functions.lit(0L))
-        .write.mode("overwrite")
-        .partitionBy(Pipeline.SegmentCol, "__batch_id")
-        .option("compression", "zstd").parquet(outPath)
-      // regenerate the zone-map for the compacted store (segment already in
-      // dir-string form here)
-      SegmentSink.appendStats(finals, outPath)
-    } finally finals.unpersist()
+    // Keep the (segment, __batch_id) layout invariant: compacted rows land
+    // as batch 0, so later appendToExisting tasks (batch ids ≥ 1) coexist
+    // in the same directory tree — mixed flat/nested layouts would break
+    // parquet partition discovery
+    read(spark, path, spec, finalizeSketches = false)
+      .withColumn("__batch_id", lit(0L))
+      .write.mode("overwrite")
+      .partitionBy(Pipeline.SegmentCol, "__batch_id")
+      .option("compression", "zstd").parquet(outPath)
   }
 
   /** [[compact]] staged-then-swapped into the ORIGINAL directory, so the
@@ -605,7 +575,7 @@ object SegmentStore {
     * store was written with, so a FRESH session can re-attach the catalog
     * metadata Spark needs to exploit the layout (bucket membership lives in
     * file NAMES; only the table's bucket spec tells the planner to trust
-    * them). `_`-prefixed like [[SegmentSink.StatsDir]] — invisible to plain
+    * them). `_`-prefixed like [[SegmentSink.TzMarker]] — invisible to plain
     * parquet reads of the store. */
   private val BucketMetaFile = "_graft_buckets.json"
 
@@ -617,32 +587,29 @@ object SegmentStore {
     * (each bucket pair joins locally) — for a repeatedly-joined fact pair at
     * 100 TB, both sides' shuffles are amortized into this one write.
     * Same-keyed groupBys skip their exchange too. Time partition pruning and
-    * the zone-map sidecar keep working unchanged.
+    * the footer zone map keep working unchanged.
     */
   def compactBucketed(spark: SparkSession, path: String, spec: IngestionSpec,
       outPath: String, table: String, bucketDims: Seq[String],
       numBuckets: Int): Unit = {
     require(bucketDims.nonEmpty, "compactBucketed needs at least one bucket dim")
     require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
-    val finals = read(spark, path, spec, finalizeSketches = false).persist()
-    try {
-      spark.sql(s"DROP TABLE IF EXISTS `$table`")
-      finals.write.mode("overwrite")
-        .partitionBy(Pipeline.SegmentCol)
-        .bucketBy(numBuckets, bucketDims.head, bucketDims.tail: _*)
-        .sortBy(bucketDims.head, bucketDims.tail: _*)
-        .option("compression", "zstd")
-        .option("path", outPath)
-        .saveAsTable(table)
-      SegmentSink.appendStats(finals, outPath)
-      val meta = s"""{"numBuckets":$numBuckets,"bucketCols":${
-        bucketDims.map(c => "\"" + c + "\"").mkString("[", ",", "]")}}"""
-      val p = new org.apache.hadoop.fs.Path(s"$outPath/$BucketMetaFile")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val os = fs.create(p, true)
-      try os.write(meta.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally os.close()
-    } finally finals.unpersist()
+    val finals = read(spark, path, spec, finalizeSketches = false)
+    spark.sql(s"DROP TABLE IF EXISTS `$table`")
+    finals.write.mode("overwrite")
+      .partitionBy(Pipeline.SegmentCol)
+      .bucketBy(numBuckets, bucketDims.head, bucketDims.tail: _*)
+      .sortBy(bucketDims.head, bucketDims.tail: _*)
+      .option("compression", "zstd")
+      .option("path", outPath)
+      .saveAsTable(table)
+    val meta = s"""{"numBuckets":$numBuckets,"bucketCols":${
+      bucketDims.map(c => "\"" + c + "\"").mkString("[", ",", "]")}}"""
+    val p = new org.apache.hadoop.fs.Path(s"$outPath/$BucketMetaFile")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val os = fs.create(p, true)
+    try os.write(meta.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally os.close()
   }
 
   /** True iff `path` carries the [[compactBucketed]] sidecar — i.e. its file

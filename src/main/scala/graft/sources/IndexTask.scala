@@ -3,7 +3,6 @@ package graft.sources
 import com.fasterxml.jackson.databind.JsonNode
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.config.{IngestionSpec, SpecLoader}
 import graft.pipeline.Pipeline
@@ -17,8 +16,8 @@ import graft.pipeline.Pipeline
   * path loads (modern top-level timestampSpec/dimensionsSpec or the legacy
   * parser.parseSpec nesting), so batch and stream share one pipeline:
   * extractTimestamp → transform/project → rollup → segment store. Segments
-  * land as a [[graft.sink.SegmentSink]] store (per-batch partials + stats
-  * sidecar) and are queried through [[graft.sink.SegmentStore.read]], which
+  * land as a [[graft.sink.SegmentSink]] store (per-batch partials) and are
+  * queried through [[graft.sink.SegmentStore.read]], which
   * re-merges and finalizes — exactly the streaming stores' read path, so
   * appended batches merge correctly even for sketch/mean/first-last
   * partials.
@@ -106,19 +105,16 @@ object IndexTask {
     graft.sink.SegmentSink.writeMicroBatch(target)(out, batchId)
 
     // per-TASK counters over the rows this task produced (Druid's
-    // rowsProcessed is per-task, not cumulative). Counted from THIS task's
-    // just-written __batch_id partition (partition pruning reads only its
-    // files) — aggregating the lazy `out` plan would re-run the whole
-    // ingest pipeline, and the whole-store merge read before it grew
-    // linearly with store size on every append (review findings r7 ×2)
-    val (segments, rows) = {
-      val agg = graft.sink.SegmentStore.open(spark, target)
-        .filter(col("__batch_id") === batchId)
-        .agg(count_distinct(col(Pipeline.SegmentCol)).as("segs"),
-          count(lit(1)).as("rows")).head()
-      (agg.getLong(0), agg.getLong(1))
-    }
-    Result(ds, target, ingestion, rows, segments)
+    // rowsProcessed is per-task, not cumulative), from the footers of THIS
+    // task's just-written `__batch_id` files — no Spark job: aggregating the
+    // lazy `out` plan would re-run the whole ingest pipeline, and a store
+    // read grows with the store on every append
+    val written = graft.sink.SegmentStore.listSegmentDirs(spark, target)
+      .map(seg => graft.sink.Footers.dataFiles(spark.sparkContext.hadoopConfiguration,
+        Seq(s"$target/${Pipeline.SegmentCol}=$seg/__batch_id=$batchId")))
+      .filter(_.nonEmpty)
+    Result(ds, target, ingestion,
+      written.flatten.map(graft.sink.Footers.footer(_, spark).rows).sum, written.size)
   }
 
   /** `POST /druid/indexer/v1/sampler` core (upstream SamplerResource — the

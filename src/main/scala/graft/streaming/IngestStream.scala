@@ -148,17 +148,8 @@ final class IngestStream(
       .withWatermark(Pipeline.TsCol,
         s"${2 * spec.tuning.windowPeriod.getSeconds} seconds")
       .dropDuplicatesWithinWatermark(keys)
-    // production takes the SegmentSink default, in deferred-stats mode: one
-    // action per batch (no persist, no per-batch sidecar job) —
-    // [[flushAndStop]] rebuilds the zone-map once at drain.
-    val write = writer.getOrElse {
-      statsPath = Some(outputPath)
-      // an existing sidecar (previous run's flush) would be covered-but-
-      // stale for segments this run re-enters — drop it now (absence is
-      // conservative keep-all); flushAndStop rebuilds it exact
-      graft.sink.SegmentSink.dropStats(spark, outputPath)
-      graft.sink.SegmentSink.writeMicroBatch(outputPath, withStats = false) _
-    }
+    // production takes the SegmentSink default: one action per batch
+    val write = writer.getOrElse(graft.sink.SegmentSink.writeMicroBatch(outputPath) _)
     staged.writeStream
       .queryName(s"graft-${spec.dataSchema.dataSource}")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -299,20 +290,14 @@ final class IngestStream(
     rows.drop(Pipeline.SegmentCol).withColumnRenamed(Pipeline.TsCol, "__time")
   }
 
-  // set when start() installs the default (deferred-stats) writer
-  @volatile private var statsPath: Option[String] = None
-
   /** Drain all available input then stop — flush()+stop() semantics
-    * (upstream Tranquilizer.scala#flush / SimpleTranquilizerAdapter). In
-    * deferred-stats mode, rebuilds the store's zone-map sidecar once here
-    * (exact, replay-dedup'd) instead of once per micro-batch.
+    * (upstream Tranquilizer.scala#flush / SimpleTranquilizerAdapter).
     */
   def flushAndStop(): Unit =
     try query.foreach { q =>
       q.processAllAvailable()
       q.stop()
       q.awaitTermination()
-      statsPath.foreach(graft.sink.SegmentSink.regenerateStats(spark, _))
     } finally release()
 
   /** Stop without draining (a start-all unwinding after a sibling failed). */

@@ -98,17 +98,67 @@ class SegmentStoreSpec extends SparkSpec {
   test("Footers: listing keeps __batch_id dirs, hides sidecars; no data " +
       "files is a NoDataFiles error") {
     val path = evolvedStore()
+    // a zone-map sidecar as older versions of the sink wrote it
+    spark.range(3).toDF("n").write.parquet(s"$path/_graft_stats")
     val hconf = spark.sparkContext.hadoopConfiguration
     val files = Footers.dataFiles(hconf, Seq(path)).map(_.getPath.toString)
     assert(files.nonEmpty && files.forall(_.contains("/__batch_id=")), files)
-    assert(!files.exists(_.contains(SegmentSink.StatsDir)), files)
+    assert(!files.exists(_.contains("_graft_stats")), files)
     assert(files.forall(_.endsWith(".parquet")), files)
     val rows = Footers.dataFiles(hconf, Seq(path))
-      .map(st => Footers.footer(st, hconf).rows).sum
+      .map(st => Footers.footer(st, spark).rows).sum
     assert(rows == 4L)
     intercept[Footers.NoDataFiles](Footers.schema(spark, s"$path-missing"))
     val empty = Files.createTempDirectory("graft-footers-empty").toString
     Files.createDirectories(java.nio.file.Paths.get(empty, "segment=x", "_temporary"))
     intercept[Footers.NoDataFiles](Footers.schema(spark, empty))
+  }
+
+  test("zone-map prunes read footers only: 0 Spark jobs; a file without " +
+      "the column adds nothing to its segment's bound") {
+    val path = evolvedStore()
+    val (got, jobs) = jobsLaunched(Seq(
+      // 12:00 holds batch 0 (no `b`) and batch 1 (b = eu): only eu bounds it
+      SegmentStore.pruneSegments(spark, path, "b", "zz"),
+      SegmentStore.pruneSegments(spark, path, "b", "eu"),
+      SegmentStore.pruneSegments(spark, path, "a", "x"),
+      SegmentStore.pruneSegmentsRange(spark, path, "a", "y", "z"),
+      SegmentStore.pruneSegmentsNumericRange(spark, path, "cnt", 5, 9),
+      SegmentStore.pruneSegmentsNumericRange(spark, path, "total", 0.0, 1.0)))
+    assert(jobs == 0, "a prune launched a Spark job")
+    val (h12, h13) = ("2024-03-01T12.00.00", "2024-03-01T13.00.00")
+    assert(got == Seq(Nil, Seq(h12), Seq(h12, h13), Seq(h12), Seq(h13), Seq(h13)))
+  }
+
+  test("Footers: per-family bounds folded over row groups; all-null chunks " +
+      "add nothing, NaN and unbounded types give none") {
+    val dir = Files.createTempDirectory("graft-bounds").toString + "/t"
+    // one row per row group; U+1F600 sorts after U+FFFF in UTF-8 byte order
+    // (Spark's string order) but before it in Java's UTF-16 order
+    Seq(("b", 3L, 7, 2.5f, Some(1.0), 1.0),
+        ("\ud83d\ude00", -4L, 9, -0.5f, Some(2.0), Double.NaN),
+        ("\uffff", 10L, 8, 1.0f, None, 3.0))
+      .toDF("s", "l", "i", "f", "d", "x")
+      .withColumn("n", lit(null).cast("string"))
+      .withColumn("t", current_timestamp())
+      .coalesce(1).write.option("parquet.block.row.count.limit", "1").parquet(dir)
+    val Seq(st) = Footers.dataFiles(spark.sparkContext.hadoopConfiguration, Seq(dir))
+    val b = Footers.footer(st, spark).bounds
+    // `n` is null throughout: no entry, like a column the file lacks; the
+    // NaN in `x`'s second row group and the timestamp `t` leave no bound
+    assert(b.keySet == Set("s", "l", "i", "f", "d", "x", "t"), b)
+    assert(b("x").isEmpty && b("t").isEmpty, b)
+    assert(b("l").contains(Footers.LongBound(-4L, 10L)))
+    assert(b("i").contains(Footers.LongBound(7L, 9L)))
+    assert(b("f").contains(Footers.DoubleBound(-0.5, 2.5)))
+    // `d`'s all-null third row group adds nothing to its bound
+    assert(b("d").contains(Footers.DoubleBound(1.0, 2.0)))
+    val Some(Footers.StrBound(lo, hi)) = b("s")
+    assert((lo.toString, hi.toString) == ("b", "\ud83d\ude00"))
+    // NaN beside other values in one row group: no bound either (Spark
+    // orders NaN above every number, so `x > 5` matches it)
+    Seq(1.0, Double.NaN, 3.0).toDF("x").coalesce(1).write.parquet(s"$dir-one")
+    val Seq(one) = Footers.dataFiles(spark.sparkContext.hadoopConfiguration, Seq(s"$dir-one"))
+    assert(Footers.footer(one, spark).bounds == Map("x" -> None))
   }
 }

@@ -396,6 +396,24 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("flushAndStop on a query that died: rethrows its failure and " +
+      "leaves no listener") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Ev]
+    val tmp = Files.createTempDirectory("graft-died").toString
+    val listeners = spark.streams.listListeners().length
+    val ingest = new IngestStream(spark, spec, s"$tmp/checkpoint")
+    ingest.start(input.toDF(), s"$tmp/out", now = lit(ts("2024-03-01 12:00:00")),
+      trigger = Trigger.ProcessingTime(50),
+      writer = Some((_: org.apache.spark.sql.DataFrame, _: Long) =>
+        throw new IllegalStateException("writer failed")))
+    input.addData(Ev(ts("2024-03-01 11:40:00"), "click", 1.0))
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      ingest.flushAndStop())
+    assert(e.getMessage.contains("writer failed"), e.getMessage)
+    assert(spark.streams.listListeners().length == listeners)
+  }
+
   test("stores carry the writer's timezone marker; chunk-name comparisons " +
       "honor it over the reader session's zone") {
     implicit val sqlCtx = spark.sqlContext
@@ -995,7 +1013,7 @@ class StreamingSpec extends SparkSpec {
       .orderBy($"segment")
       .select($"segment", $"rows", $"batches").as[(String, Long, Long)].collect().toSeq
     assert(meta == Seq(("2024-03-01T11.00.00", 1L, 1L), ("2024-03-01T12.00.00", 2L, 1L)))
-    // dim ranges from the zone-map sidecar surface per segment
+    // dim ranges from the footer zone map surface per segment
     val ranges = graft.sink.SegmentStore.metadata(spark, s"$tmp/out")
       .filter($"segment" === "2024-03-01T12.00.00")
       .select(explode($"dim_ranges").as("r")).select($"r.column", $"r.min_val", $"r.max_val")
@@ -1035,7 +1053,6 @@ class StreamingSpec extends SparkSpec {
     input.addData(Ev(ts("2024-03-01 12:10:00"), "zulu", 2.0))
     ingest.flushAndStop()
 
-    // the `_`-prefixed sidecar is invisible to the normal merged read
     assert(graft.sink.SegmentStore.read(spark, s"$tmp/out", spec).count() == 2)
 
     assert(graft.sink.SegmentStore.pruneSegments(spark, s"$tmp/out", "etype", "alpha")
@@ -1063,14 +1080,18 @@ class StreamingSpec extends SparkSpec {
     assert(graft.sink.SegmentStore.pruneSegmentsRange(spark, s"$tmp/out", "etype", "alpha", "zzz")
       == Seq("2024-03-01T11.00.00", "2024-03-01T12.00.00"))
 
-    // conservative fallback: with the sidecar removed, every segment is kept
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm); f.delete() }
-    rm(new java.io.File(s"$tmp/out/${graft.sink.SegmentSink.StatsDir}"))
-    assert(graft.sink.SegmentStore.pruneSegments(spark, s"$tmp/out", "etype", "alpha")
+    // conservative fallback: a segment whose files carry no bound for the
+    // column is kept — here a dim added after the first two segments were
+    // written (schema evolution), queried for a value none of them can hold
+    val evolved = Seq((ts("2024-03-01 13:00:00"), "omega", "eu", 1L, 5.0,
+        ts("2024-03-01 13:00:00")))
+      .toDF(graft.pipeline.Pipeline.TsCol, "etype", "region", "cnt", "total",
+        graft.pipeline.Pipeline.SegmentCol)
+    graft.sink.SegmentSink.writeMicroBatch(s"$tmp/out")(evolved, 99L)
+    assert(graft.sink.SegmentStore.pruneSegments(spark, s"$tmp/out", "region", "zz")
       == Seq("2024-03-01T11.00.00", "2024-03-01T12.00.00"))
 
-    // compaction regenerates the zone-map over the compacted store
+    // the compacted store's own footers carry its zone map
     graft.sink.SegmentStore.compact(spark, s"$tmp/out", spec, s"$tmp/compacted")
     assert(graft.sink.SegmentStore.pruneSegments(spark, s"$tmp/compacted", "etype", "zulu")
       == Seq("2024-03-01T12.00.00"))
@@ -1118,7 +1139,7 @@ class StreamingSpec extends SparkSpec {
     assert(got == Seq(("alpha", 1L)))
   }
 
-  test("SegmentPruneRule: a PLAIN filter over a store auto-prunes via the sidecar") {
+  test("SegmentPruneRule: a PLAIN filter over a store auto-prunes via the footers") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Ev]
     val tmp = Files.createTempDirectory("graft-autoprune").toString
@@ -1149,7 +1170,7 @@ class StreamingSpec extends SparkSpec {
       .getOrCreate()
     try {
       // string dim equality: no readPruned call, no segment predicate — the
-      // optimizer injects the admitted-segment IN from the sidecar
+      // optimizer injects the admitted-segment IN from the footers
       val q1 = s2.read.parquet(s"$tmp/out").filter(col("etype") === "alpha")
       assert(scanOf(q1).selectedPartitions.partitionCount == 1,
         "auto-prune must cut the scan to the admitted segment dir")
@@ -1181,7 +1202,7 @@ class StreamingSpec extends SparkSpec {
         .filter(col("segment") === "2024-03-01T12.00.00" && col("etype") === "alpha")
       assert(scanOf(q4).selectedPartitions.partitionCount == 1 && q4.count() == 0)
 
-      // time-interval predicate: needs NO sidecar — the segment layout
+      // time-interval predicate: needs NO footers — the segment layout
       // itself answers (Druid `intervals` at planning time)
       val q5 = s2.read.parquet(s"$tmp/out")
         .filter(col(graft.pipeline.Pipeline.TsCol) >= lit(ts("2024-03-01 12:00:00")))
@@ -1192,8 +1213,8 @@ class StreamingSpec extends SparkSpec {
         .filter(col(graft.pipeline.Pipeline.TsCol) < lit(ts("2024-03-01 10:00:00")))
       assert(q6.count() == 0)
 
-      // a NEW segment appearing must invalidate the memoized prune — a
-      // stale IN list would silently drop the new chunk's rows
+      // a NEW segment appearing must be admitted — a stale IN list would
+      // silently drop the new chunk's rows
       val in2 = MemoryStream[Ev]
       val ingest2 = new IngestStream(spark, spec, s"$tmp/checkpoint2")
       ingest2.start(in2.toDF(), s"$tmp/out", now = lit(ts("2024-03-01 13:30:00")),
