@@ -32,8 +32,8 @@ object Daemon {
 
   final case class Handle(server: HttpIngestServer, port: Int,
       streams: Map[String, IngestStream]) {
-    /** Ordered shutdown: stop accepting, then drain every query and rebuild
-      * its stats ([[IngestStream.stopAll]]). */
+    /** Ordered shutdown: stop accepting, then drain and stop every query
+      * ([[IngestStream.stopAll]]). */
     def close(): Unit = {
       server.stop()
       IngestStream.stopAll(streams.values)

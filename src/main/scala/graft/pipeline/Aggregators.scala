@@ -104,13 +104,11 @@ object Aggregators {
       approx_count_distinct(cardinalityInput(spec)).as(spec.name)
     case "exactCardinality" => count_distinct(cardinalityInput(spec)).as(spec.name)
     // hyperUnique's mergeable-STORAGE form (Druid stores the sketch in the
-    // segment, not the estimate): per-batch partials carry the DataSketches
-    // HLL binary, SegmentStore re-merges with hll_union_agg and estimates at
-    // query time — so per-batch mode supports sketches too, not only the
-    // watermarked state-store mode.
-    // input cast to string: Druid's hyperUnique hashes the string form, and
-    // hll_sketch_agg accepts only int/long/string/binary
-    case "hllSketch" => hll_sketch_agg(field(spec).cast(StringType)).as(spec.name)
+    // segment, not the estimate): store partials carry the DataSketches HLL
+    // binary, SegmentStore re-merges with hll_union_agg and estimates at
+    // query time. Stores write hyperUnique/cardinality in this form
+    // (SegmentStore.stored); one-shot queries keep approx_count_distinct.
+    case "hllSketch" => hll_sketch_agg(hllInput(spec)).as(spec.name)
     // approxHistogram's mergeable-STORAGE form (Druid stores the histogram
     // sketch in the segment — SURVEY §2.4): per-batch partials carry the
     // centroid-histogram binary ([[graft.functions.HistSketch]]),
@@ -213,7 +211,7 @@ object Aggregators {
     // stored-sketch forms: rows failing the predicate become nulls, which
     // every sketch agg skips — same map-side single-pass shape as the
     // numeric wrappers (Druid allows `filtered` around any aggregator)
-    case "hllSketch" => hll_sketch_agg(when(cond, field(d).cast(StringType)))
+    case "hllSketch" => hll_sketch_agg(when(cond, hllInput(d)))
     case "approxHistogram" =>
       val probs = if (d.probabilities.nonEmpty) d.probabilities
                   else Seq(0.25, 0.5, 0.75, 0.95)
@@ -448,6 +446,13 @@ object Aggregators {
     if (spec.fields.size > 1) struct(spec.fields.map(col): _*)
     else if (spec.fields.size == 1) col(spec.fields.head)
     else field(spec)
+
+  /** hll_sketch_agg input, which must be int/long/string/binary: the
+    * string form of the field (Druid's hyperUnique hashes the string form),
+    * or for a multi-field `cardinality` the xxhash64 of the tuple. */
+  private def hllInput(spec: AggregatorSpec): Column =
+    if (spec.fields.size > 1) xxhash64(spec.fields.map(col): _*)
+    else cardinalityInput(spec).cast(StringType)
 
   /** Input columns an aggregator reads (for projection / schemaless exclusion). */
   def inputFields(spec: AggregatorSpec): Seq[String] =

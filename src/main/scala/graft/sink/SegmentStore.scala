@@ -18,15 +18,14 @@ import graft.sink.Footers.{Bound, DoubleBound, LongBound, StrBound}
   * Druid merging incremental segments at query time (the reference delivers
   * each send batch to the task separately; SURVEY §2.1 Druid task sink).
   *
-  * [[graft.streaming.IngestStream.start]] writes one partial rollup row per
-  * (micro-batch × bucket × dims); `read` re-aggregates them into the final
-  * rollup. Only decomposable aggregators re-merge from finalized values
-  * (count→sum, sum→sum, min→min, max→max, incl. inside `filtered`); sketches
-  * (hyperUnique / approxHistogram) do NOT — their finalized outputs aren't
-  * mergeable, so [[graft.streaming.IngestStream.start]] routes a spec holding
-  * one (at a fixed-width queryGranularity) to watermarked mode: there the
-  * state store merges sketch state across batches and emits each bucket
-  * once, and the store is read as written, never through `read`.
+  * [[graft.streaming.IngestStream.start]] and [[graft.sources.IndexTask.run]]
+  * write one partial rollup row per (batch × bucket × dims); `read`
+  * re-aggregates them into the final rollup. Every metric is written in its
+  * [[stored]] form, which re-merges: decomposable aggregators from their
+  * values (count→sum, sum→sum, min→min, max→max, incl. inside `filtered`),
+  * and the finalized sketches (hyperUnique / cardinality / approxHistogram)
+  * as the HLL or histogram binary Druid keeps in its segments, finalized
+  * only at the read.
   *
   * Scale: the merge is a groupBy on (bucket, dims) over already-reduced rows —
   * input cardinality is segments × dims × batches, orders of magnitude below
@@ -34,8 +33,27 @@ import graft.sink.Footers.{Bound, DoubleBound, LongBound, StrBound}
   */
 object SegmentStore {
 
+  /** The form a store holds for an aggregator, under the same name:
+    * `hyperUnique`/`cardinality` as an `hllSketch` and `approxHistogram` as
+    * a `histogramSketch` (same probabilities, the sketch's default 128 bins
+    * — `accuracy` is percentile_approx's knob, not a bin count), inside
+    * `filtered` too; every other aggregator as declared. */
+  def stored(a: AggregatorSpec): AggregatorSpec = a.aggType match {
+    case "hyperUnique" | "cardinality" => a.copy(aggType = "hllSketch")
+    case "approxHistogram" =>
+      a.copy(aggType = "histogramSketch", accuracy = scala.None)
+    case "filtered" => a.copy(aggregator = a.aggregator.map(stored))
+    case _ => a
+  }
+
+  /** `spec` with every aggregator in its [[stored]] form: what the store
+    * writers roll up with. */
+  def stored(spec: IngestionSpec): IngestionSpec =
+    spec.copy(dataSchema = spec.dataSchema.copy(
+      aggregators = spec.dataSchema.aggregators.map(stored)))
+
   def mergeColumn(spec: AggregatorSpec, finalizeSketches: Boolean = true): Column =
-    spec.aggType match {
+    stored(spec).aggType match {
       case "count" | "longSum" => sum(col(spec.name)).cast(LongType).as(spec.name)
       case "doubleSum"         => sum(col(spec.name)).as(spec.name)
       case "longMin"           => min(col(spec.name)).cast(LongType).as(spec.name)
@@ -95,12 +113,10 @@ object SegmentStore {
       case other =>
         throw new IllegalArgumentException(
           s"aggregator '$other' (${spec.name}) is not re-mergeable from finalized " +
-            "values; use hllSketch (stored sketch), or keep it: a stream whose " +
-            "spec holds it at a fixed-width queryGranularity routes to " +
-            "watermarked mode (state-store merge), whose store is read as written")
+            "values; use hyperUnique or hllSketch, whose stored HLL binary re-merges")
     }
 
-  /** Read a segment store written in per-batch mode and produce the final
+  /** Read a segment store of per-batch partials and produce the final
     * rollup (one row per bucket × dims). The footer-merged schema
     * ([[Footers.schema]], what `mergeSchema` infers, without its Spark job)
     * tolerates schema evolution across chunks (new dims appear as nulls in

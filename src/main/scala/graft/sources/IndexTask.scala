@@ -61,7 +61,9 @@ object IndexTask {
       Option(io.get("inputFormat")).getOrElse(throw new IllegalArgumentException(
         "ioConfig needs an inputFormat")))
 
-    val p = new Pipeline(ingestion)
+    // metrics land in their stored form (HLL / histogram binaries for the
+    // finalized sketches), so reads and compaction re-merge them
+    val p = new Pipeline(graft.sink.SegmentStore.stored(ingestion))
     val out = p.withSegment(p.rollup(p.project(p.extractTimestamp(raw))))
 
     // the dataSource becomes a path segment under storeRoot AND (for

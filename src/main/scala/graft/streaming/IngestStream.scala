@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
 
 import graft.config.IngestionSpec
 import graft.pipeline.Pipeline
@@ -28,35 +27,28 @@ final class IngestStream(
     spec: IngestionSpec,
     checkpointDir: String) {
 
-  val pipeline = new Pipeline(spec)
+  /** Rolls up with each metric in its stored form
+    * ([[graft.sink.SegmentStore.stored]]): partials that re-merge at read. */
+  val pipeline = new Pipeline(graft.sink.SegmentStore.stored(spec))
 
   @volatile private var query: Option[StreamingQuery] = None
 
   /** handle to the running query (None before start). */
   def activeQuery: Option[StreamingQuery] = query
 
-  /** Start the ingest query: source stream → pipeline → segment store, in the
-    * mode the spec's aggregator set can honour at its queryGranularity
-    * (SURVEY §2.9; closes the calendar-granularity gap):
-    *
-    *  - FINALIZED sketches (`hyperUnique`/`cardinality`/`approxHistogram` —
-    *    estimates, not mergeable) need cross-batch state: the watermarked
-    *    state store ([[watermarked]]). That mode needs a fixed-width bucket
-    *    (streaming `window()` takes literal durations), so it covers
-    *    SECOND..DAY.
-    *  - Every other spec streams through the per-batch path ([[perBatch]]),
-    *    calendar granularities (WEEK/MONTH/QUARTER/YEAR/ALL) included:
-    *    `date_trunc` bucketing is an ordinary batch expression, and
-    *    cross-batch merge happens at read (sums/min/max) — including
-    *    sketches, IF they are the STORED forms (`hllSketch` /
-    *    `histogramSketch`, binary partials re-merged by SegmentStore).
-    *  - Finalized sketches at calendar granularity, and `exactCardinality`
-    *    at any granularity, are rejected with the fix named.
+  /** Start the ingest query: source stream → windowFilter → pipeline →
+    * segment store, one micro-batch at a time. Each batch's rollup lands as
+    * partial rows keyed by (segment, batch); cross-batch merge happens at
+    * read time ([[graft.sink.SegmentStore.read]]) or via compaction, so
+    * every queryGranularity streams, calendar ones (WEEK/MONTH/QUARTER/
+    * YEAR/ALL) included, and every bucket answers on the next read.
+    * Finalized sketches (`hyperUnique`/`cardinality`/`approxHistogram`) are
+    * written as their mergeable binaries and finalized at that read.
+    * `exactCardinality` is rejected with the fix named.
     *
     * `now` defaults to processing time; tests inject a literal clock (the
-    * TestingTimekeeper analog — SURVEY §5). `writer` replaces the per-batch
-    * sink (a test seam for fault injection); a spec routed to watermarked
-    * mode writes through the file sink and rejects it.
+    * TestingTimekeeper analog — SURVEY §5). `writer` replaces the
+    * per-batch sink (a test seam for fault injection).
     */
   def start(
       source: DataFrame,
@@ -64,51 +56,22 @@ final class IngestStream(
       now: Column = current_timestamp(),
       trigger: Trigger = Trigger.AvailableNow(),
       writer: Option[(DataFrame, Long) => Unit] = None): StreamingQuery = {
-    val gran = spec.dataSchema.granularitySpec
-    // exactCardinality is unstreamable in EITHER mode: per-batch finalized
-    // distinct counts cannot re-merge (SegmentStore.mergeColumn rejects
-    // them — the store would ingest fine and throw on every read), and
-    // Structured Streaming rejects COUNT DISTINCT in stateful aggregation.
+    // per-batch finalized distinct counts cannot re-merge
+    // (SegmentStore.mergeColumn rejects them — the store would ingest fine
+    // and throw on every read)
     def exactIn(a: graft.config.AggregatorSpec): Boolean =
       a.aggType == "exactCardinality" || a.aggregator.exists(exactIn)
-    require(!(gran.rollup && spec.dataSchema.aggregators.exists(exactIn)),
+    require(!(spec.dataSchema.granularitySpec.rollup &&
+        spec.dataSchema.aggregators.exists(exactIn)),
       "exactCardinality cannot stream: per-batch finalized distinct counts " +
-        s"don't re-merge at read, and streaming aggregation cannot COUNT " +
-        s"DISTINCT (aggregators ${spec.dataSchema.aggregators.filter(exactIn)
-          .map(a => s"${a.name}:${a.aggType}").mkString(",")}). Use " +
-        "hyperUnique (estimate), the stored hllSketch form (mergeable " +
-        "binary), or a batch index task.")
-    val finalized = Set("hyperUnique", "cardinality", "approxHistogram")
-    // unwrap `filtered` wrappers: filtered(hyperUnique) needs the state
-    // store exactly like bare hyperUnique (a per-batch store of finalized
-    // estimates would ingest fine and then throw on every read)
-    def finalizedIn(a: graft.config.AggregatorSpec): Boolean =
-      finalized(a.aggType) || a.aggregator.exists(finalizedIn)
-    // only ROLLUP specs evaluate aggregators — isRollup=false appends raw
-    // rows, so finalized sketches in the spec are inert there
-    val needsState = gran.rollup && spec.dataSchema.aggregators.exists(finalizedIn)
-    if (needsState) {
-      // name offenders through finalizedIn (the routing predicate), so a
-      // filtered(hyperUnique) names its metric instead of an empty list
-      require(gran.queryGranularity.widthSeconds > 0,
-        s"queryGranularity ${gran.queryGranularity.name} has no watermarked path " +
-          "(calendar periods aren't streaming window widths) and aggregators " +
-          s"${spec.dataSchema.aggregators.filter(finalizedIn)
-            .map(a => s"${a.name}:${a.aggType}").mkString(",")} " +
-          "don't re-merge from finalized per-batch values. Use the stored sketch " +
-          "forms instead (hyperUnique→hllSketch, approxHistogram→histogramSketch): " +
-          "binary partials re-merge at read for ANY granularity.")
-      require(writer.isEmpty, s"dataSource '${spec.dataSchema.dataSource}' " +
-        "routes to watermarked mode (finalized sketches at a fixed-width " +
-        "queryGranularity), which writes through the file sink; a custom " +
-        "writer applies to per-batch mode only")
-    }
-    val (w, finalSchema) =
-      if (needsState) watermarked(source, outputPath, now)
-      else (perBatch(source, outputPath, now, writer), None)
-    val q = w.option("checkpointLocation", checkpointDir).trigger(trigger).start()
+        s"don't re-merge at read (aggregators ${spec.dataSchema.aggregators
+          .filter(exactIn).map(a => s"${a.name}:${a.aggType}").mkString(",")}). " +
+        "Use hyperUnique (an estimate, stored as a mergeable HLL sketch) or " +
+        "hllSketch.")
+    val q = perBatch(source, outputPath, now, writer)
+      .option("checkpointLocation", checkpointDir).trigger(trigger).start()
     query = Some(q)
-    store = Some((outputPath, finalSchema))
+    store = Some(outputPath)
     // registered only once a query runs, so a rejected spec leaves the
     // session's listeners as they were; release() first, so a restart after
     // a query that died without flushAndStop still registers it once
@@ -117,9 +80,8 @@ final class IngestStream(
     q
   }
 
-  /** Per-batch mode: each micro-batch's rollup lands as partial rows keyed
-    * by (segment, batch); cross-batch merge happens at read time
-    * ([[graft.sink.SegmentStore.read]]) or via compaction. */
+  /** The streaming writer: row-wise stages on the stream, the rollup and
+    * the write per micro-batch. */
   private def perBatch(
       source: DataFrame,
       outputPath: String,
@@ -182,111 +144,24 @@ final class IngestStream(
     keys
   }
 
-  /** Watermarked streaming rollup: cross-batch FINAL aggregation via the
-    * state store, emitted once per bucket when the event-time watermark
-    * (= windowPeriod, the reference's lateness bound — SURVEY §2.9) passes the
-    * bucket end. Returns the writer and the schema the file sink writes.
-    *
-    * KNOWN DELTA vs the reference's flush(): buckets still within
-    * windowPeriod of the max observed event time remain in the state store on
-    * [[flushAndStop]] — append mode only emits watermark-finalized buckets.
-    * The tail is emitted when the stream resumes (checkpointed state) or
-    * never, if the stream truly ends. A bounded replay that must account for
-    * every event should use a spec that routes to per-batch mode (stored
-    * sketch forms), which drains completely.
-    */
-  private def watermarked(
-      source: DataFrame,
-      outputPath: String,
-      now: Column): (DataStreamWriter[Row], Option[StructType]) = {
-    val gran = spec.dataSchema.granularitySpec
-    val wmSeconds = spec.tuning.windowPeriod.getSeconds
-
-    // Only `received` is observable row-wise here: lateness drops happen
-    // inside the state store and surface as numRowsDroppedByWatermark, which
-    // [[dropped]] folds into the same received = sent + dropped invariant
-    // (the reference's per-event SendResult(sent=false) accounting, SURVEY §2.2).
-    val projected = pipeline.project(pipeline.extractTimestamp(source))
-    // dims from the PROJECTED frame, before helper columns join it — the
-    // schemaless path derives dims from actual columns, and the raw-ts
-    // helper below must never become a dimension
-    val dims = pipeline.dimensionNames(projected).map(col)
-    // future/null guard — the per-batch windowFilter's upper half. Without it
-    // a SINGLE future-stamped or unparseable event poisons this mode: the
-    // event-time watermark is CHECKPOINTED and monotonic, so one year-2255
-    // row silently drops all subsequent real traffic forever, and a null
-    // timestamp opens a null-window state group the watermark never closes
-    // (review findings r7 ×2). Late events stay the watermark's job.
-    val inWindow = col(Pipeline.TsCol).isNotNull &&
-      col(Pipeline.TsCol) <= now + expr(s"INTERVAL $wmSeconds SECOND")
-    val watermarked = projected
-      .observe("graft_window", count(lit(1)).as("received"),
-        count(when(!inWindow, 1)).as("dropped"))
-      .filter(inWindow)
-      // raw event time for order-sensitive aggregators (first/last) — the
-      // window() bucket replaces TsCol as the group key below
-      .withColumn(Pipeline.RawTsCol, col(Pipeline.TsCol))
-      .withWatermark(Pipeline.TsCol, s"$wmSeconds seconds")
-    // spec-driven event dedup chains BEFORE the windowed aggregation (two
-    // stateful operators — the supported dedup→agg chain)
-    val keys = dedupKeys(projected)
-    val staged =
-      if (keys.isEmpty) watermarked else watermarked.dropDuplicatesWithinWatermark(keys)
-    val aggs = spec.dataSchema.aggregators.map(graft.pipeline.Aggregators.toColumn) match {
-      case Nil => Seq(count(lit(1)).as("rows")) // same fallback as Pipeline.rollup
-      case xs  => xs
-    }
-    val rolled = staged
-      .groupBy(window(col(Pipeline.TsCol),
-        s"${gran.queryGranularity.widthSeconds} seconds") +: dims: _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn(Pipeline.TsCol, col("window.start"))
-      .drop("window")
-    val out = pipeline.withSegment(rolled)
-      .withColumn(Pipeline.SegmentCol,
-        date_format(col(Pipeline.SegmentCol), "yyyy-MM-dd'T'HH.mm.ss"))
-
-    val w = out.writeStream
-      .queryName(s"graft-wm-${spec.dataSchema.dataSource}")
-      .option("path", outputPath)
-      .partitionBy(Pipeline.SegmentCol)
-      .outputMode("append")
-      .format("parquet")
-    // the file sink writes exactly `out`'s columns, so that schema opens
-    // the store without a footer scan
-    (w, Some(out.schema))
-  }
-
-  /** Where the running query writes, and the schema it writes when its
-    * rows are final (watermarked mode; None for per-batch partials). */
-  @volatile private var store: Option[(String, Option[StructType])] = None
+  @volatile private var store: Option[String] = None
 
   /** The store directory of the running query (None before start). */
-  def storePath: Option[String] = store.map(_._1)
+  def storePath: Option[String] = store
 
   /** The broker view of the store: one fresh read per call, `__time` for
-    * the bucket, no `segment` column (storage detail). A per-batch store
-    * re-merges its partials ([[graft.sink.SegmentStore.read]], sketches
-    * finalized — the query edge's rendering); a watermarked store is read
-    * as written, since its finalized rows do not re-merge. A store with no
-    * data file yet fails with the reason, not a raw PATH_NOT_FOUND. */
+    * the bucket, no `segment` column (storage detail). The partials
+    * re-merge ([[graft.sink.SegmentStore.read]], sketches finalized — the
+    * query edge's rendering). A store with no data file yet fails with the
+    * reason, not a raw PATH_NOT_FOUND. */
   def brokerView(): DataFrame = {
     val ds = spec.dataSchema.dataSource
-    val (path, finalSchema) = store.getOrElse(throw new IllegalStateException(
+    val path = store.getOrElse(throw new IllegalStateException(
       s"dataSource '$ds' has no started ingest stream"))
-    def noData = new IllegalArgumentException(s"dataSource '$ds' has no " +
-      "committed segments yet — post events and wait for the first micro-batch")
-    val rows = finalSchema match {
-      case None =>
-        try graft.sink.SegmentStore.read(spark, path, spec)
-        catch { case _: graft.sink.Footers.NoDataFiles => throw noData }
-      case Some(schema) =>
-        // the file sink's metadata log lists only committed files; the
-        // footer listing answers whether any was written at all
-        if (graft.sink.Footers.dataFiles(
-            spark.sparkContext.hadoopConfiguration, Seq(path)).isEmpty) throw noData
-        spark.read.schema(schema).parquet(path)
-    }
+    val rows = try graft.sink.SegmentStore.read(spark, path, spec)
+      catch { case _: graft.sink.Footers.NoDataFiles =>
+        throw new IllegalArgumentException(s"dataSource '$ds' has no " +
+          "committed segments yet — post events and wait for the first micro-batch") }
     rows.drop(Pipeline.SegmentCol).withColumnRenamed(Pipeline.TsCol, "__time")
   }
 
@@ -319,7 +194,7 @@ final class IngestStream(
     * The batchId-monotonic guard makes double delivery harmless.
     */
   private[this] var lastSeenBatch = -1L
-  private[this] var accReceived, accDropped, accWmDropped = 0L
+  private[this] var accReceived, accDropped = 0L
 
   private val progressListener = new org.apache.spark.sql.streaming.StreamingQueryListener {
     import org.apache.spark.sql.streaming.StreamingQueryListener._
@@ -336,20 +211,12 @@ final class IngestStream(
       // no-data triggers surface as an entry with the NEXT batch's id and no
       // observed metrics, possibly BEFORE the data entry of the same id — so
       // the cursor advances only on data-bearing entries (the only ones that
-      // can carry counts: state-store drops count input rows, and no-data
-      // batches have none)
+      // can carry counts)
       if (p.batchId > lastSeenBatch && p.observedMetrics.containsKey("graft_window")) {
         lastSeenBatch = p.batchId
         val row = p.observedMetrics.get("graft_window")
-        // watermarked mode observes `received` only — missing fields are 0
-        def g(n: String): Long =
-          if (row.schema != null && row.schema.fieldNames.contains(n))
-            row.getAs[Long](n)
-          else 0L
-        accReceived += g("received")
-        accDropped += g("dropped")
-        accWmDropped += Option(p.stateOperators).toSeq
-          .flatMap(_.toSeq).map(_.numRowsDroppedByWatermark).sum
+        accReceived += row.getAs[Long]("received")
+        accDropped += row.getAs[Long]("dropped")
       }
     }
   }
@@ -358,19 +225,10 @@ final class IngestStream(
     accumulate(query.toSeq.flatMap(_.recentProgress))
 
   def received: Long = { refresh(); accReceived }
-  /** windowFilter drops (per-batch mode) + state-store lateness drops
-    * (watermarked mode) — one surface for both pipelines. */
-  def dropped: Long = { refresh(); accDropped + accWmDropped }
-  /** received − dropped: identical to the observed `sent` count in per-batch
-    * mode (the windowFilter counts all three), and derives the watermarked
-    * mode's sent count where only the state store knows the drops. */
-  def sent: Long = { refresh(); accReceived - accDropped - accWmDropped }
-
-  /** Late rows discarded by the watermark in watermarked mode — the
-    * lateness half of the drop accounting there (the state store, not the
-    * windowFilter predicate, enforces the bound).
-    */
-  def watermarkDropped: Long = { refresh(); accWmDropped }
+  /** windowFilter drops: late, future or unparseable timestamps. */
+  def dropped: Long = { refresh(); accDropped }
+  /** received − dropped: the rows the windowFilter admitted. */
+  def sent: Long = { refresh(); accReceived - accDropped }
 }
 
 object IngestStream {

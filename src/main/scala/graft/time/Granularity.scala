@@ -104,7 +104,7 @@ object Granularity {
 
   /** Druid `duration` granularity: an arbitrary fixed width. Behaves like
     * the named fixed-width granularities everywhere (epoch-arithmetic
-    * truncation, watermarked streaming eligibility, segment naming). */
+    * truncation, segment naming). */
   final case class Duration(seconds: Long)
       extends Granularity(s"PT${seconds}S", seconds, "") {
     require(seconds > 0, s"duration granularity needs positive seconds, got $seconds")

@@ -10,12 +10,12 @@ import graft.time.Granularity
 /** End-to-end streaming smoke over REAL testdata: replays the events table as
   * a file stream through the full ingest pipeline (SURVEY §7 minimum slice):
   * parse → timestamp → windowPeriod filter (observed drops) → rollup by
-  * (hour, event_type) → segment-partitioned parquet. Prints a one-line JSON
-  * summary with {received, sent, dropped, segments, rows}.
+  * (hour, event_type), with a hyperUnique(user_id) stored as its HLL sketch
+  * → segment-partitioned parquet → the broker view's re-merge. Prints a
+  * one-line JSON summary with {received, sent, dropped, segments, rows,
+  * merged_rows}.
   *
-  * Usage: runMain graft.tools.StreamSmoke [sfDir] [outDir] [--watermarked]
-  * (`--watermarked` adds a hyperUnique metric, which routes the spec to
-  * watermarked mode)
+  * Usage: runMain graft.tools.StreamSmoke [sfDir] [outDir]
   */
 object StreamSmoke {
   def main(args: Array[String]): Unit = {
@@ -26,14 +26,10 @@ object StreamSmoke {
 
     val spark = graft.GraftSession.local()
 
-    // a finalized sketch (hyperUnique) routes the spec to watermarked mode
-    // (per-batch partials can't re-merge finalized HLL values)
-    val watermarked = args.contains("--watermarked")
     val aggs = Seq(
       AggregatorSpec("count", "cnt"),
-      AggregatorSpec("doubleSum", "total_value", Some("value"))) ++
-      (if (watermarked) Seq(AggregatorSpec("hyperUnique", "approx_users", Some("user_id")))
-       else Nil)
+      AggregatorSpec("doubleSum", "total_value", Some("value")),
+      AggregatorSpec("hyperUnique", "approx_users", Some("user_id")))
     val spec = IngestionSpec(
       DataSchema("events", TimestampSpec("ts"),
         SpecificDimensions(Seq("event_type")), aggs,
@@ -52,17 +48,16 @@ object StreamSmoke {
     val rows = out.count()
     val segments = out.select("segment").distinct().count()
     val merged = ingest.brokerView().count()
-    val wmDropped = ingest.watermarkDropped
     val elapsed = (System.nanoTime() - t0) / 1e9
     val throughput = if (elapsed > 0) (ingest.received / elapsed).toLong else 0L
-    println(s"""{"mode":"${if (watermarked) "watermarked" else "perBatch"}",""" +
-      s""""received":${ingest.received},"sent":${ingest.sent},""" +
-      s""""dropped":${ingest.dropped},"wm_dropped":$wmDropped,""" +
+    println(s"""{"received":${ingest.received},"sent":${ingest.sent},""" +
+      s""""dropped":${ingest.dropped},""" +
       s""""segments":$segments,"rows":$rows,""" +
       s""""merged_rows":$merged,"elapsed_sec":${f"$elapsed%.2f"},""" +
       s""""events_per_sec":$throughput,"out":"$outDir"}""")
     spark.stop()
     assert(rows > 0, "no output rows")
+    assert(merged > 0, "the broker view re-merged no rows")
     assert(ingest.received == ingest.sent + ingest.dropped,
       "drop-count conservation violated")
   }

@@ -775,10 +775,9 @@ class HttpIngestSpec extends SparkSpec {
     } finally handle.close()
   }
 
-  test("watermarked daemon store: a hyperUnique dataSource answers " +
-      "/druid/v2 with its finalized rows, no re-merge") {
-    val tmp = Files.createTempDirectory("graft-wm-daemon").toString
-    // a finalized sketch at a fixed granularity routes to watermarked mode
+  test("hyperUnique daemon store: every bucket answers /druid/v2 at once " +
+      "from the re-merged HLL sketches") {
+    val tmp = Files.createTempDirectory("graft-hu-daemon").toString
     val spec = graft.config.SpecLoader.fromJson(
       """{"dataSchema": {"dataSource": "hu_ds",
             "parser": {"parseSpec": {
@@ -786,38 +785,32 @@ class HttpIngestSpec extends SparkSpec {
               "dimensionsSpec": {"dimensions": []}}},
             "metricsSpec": [{"type": "hyperUnique", "name": "users", "fieldName": "user"}],
             "granularitySpec": {"segmentGranularity": "HOUR", "queryGranularity": "HOUR"}},
-           "tuning": {"windowPeriod": "PT10M"}}""")
+           "tuning": {"windowPeriod": "PT1H"}}""")
     val schema = StructType(Seq(StructField("ts", StringType),
       StructField("user", StringType)))
+    // now ± windowPeriod = [10:00, 12:00] admits every event below
     val handle = graft.Daemon.run(spark, tmp, schema, Seq(spec),
       trigger = Trigger.ProcessingTime(50),
-      now = lit(Timestamp.valueOf("2024-03-01 12:00:00")))
+      now = lit(Timestamp.valueOf("2024-03-01 11:00:00")))
     try {
       val (pc, pb) = post(handle.port, "/v1/post/hu_ds",
         """[{"ts":"2024-03-01 10:05:00","user":"u1"},
             {"ts":"2024-03-01 10:20:00","user":"u2"},
             {"ts":"2024-03-01 10:40:00","user":"u1"}]""")
       assert(pc == 200, pb)
-      // 11:30 moves the watermark (max event time − 10 min) past 11:00,
-      // so the state store emits the 10:00 bucket on a later trigger
       val (lc, lb) = post(handle.port, "/v1/post/hu_ds",
         """{"ts":"2024-03-01 11:30:00","user":"u3"}""")
       assert(lc == 200, lb)
-      val query =
+      // both buckets answer on the next read, the newest included
+      val (qc, qb) = post(handle.port, "/druid/v2",
         """{"queryType": "timeseries", "dataSource": "hu_ds", "granularity": "hour",
-            "aggregations": [{"type": "longSum", "name": "u", "fieldName": "users"}]}"""
-      val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
-      var (qc, qb) = post(handle.port, "/druid/v2", query)
-      while (qc == 400 && qb.contains("no committed segments yet") &&
-          System.nanoTime() < deadline) {
-        Thread.sleep(50)
-        val r = post(handle.port, "/druid/v2", query); qc = r._1; qb = r._2
-      }
+            "aggregations": [{"type": "longSum", "name": "u", "fieldName": "users"}]}""")
       assert(qc == 200, qb)
-      assert(qb.contains("2024-03-01T10:00:00") && qb.contains("\"u\":2"), qb)
+      assert(qb.contains("2024-03-01T10:00:00") && qb.contains("\"u\":2") &&
+        qb.contains("2024-03-01T11:00:00") && qb.contains("\"u\":1"), qb)
       val (sc, sb) = post(handle.port, "/druid/v2/sql",
         """{"query": "SELECT SUM(users) AS u FROM hu_ds"}""")
-      assert(sc == 200 && sb == """[{"u":2}]""", sb)
+      assert(sc == 200 && sb == """[{"u":3}]""", sb)
     } finally handle.close()
   }
 
@@ -1420,6 +1413,53 @@ class HttpIngestSpec extends SparkSpec {
       val (scp, sbp) = get(port, s"/druid/indexer/v1/task/$idp/status")
       assert(scp == 200 && sbp.contains("\"status\":\"FAILED\"") &&
         sbp.contains("bucketed"), sbp)
+    } finally server.stop()
+  }
+
+  test("index task with a hyperUnique metric: the store answers native and " +
+      "SQL queries before and after compaction") {
+    spark.version // force the shared session so handler threads see a default
+    val tmp = Files.createTempDirectory("graft-index-hu").toString
+    Files.createDirectories(Paths.get(s"$tmp/spool"))
+    val server = new HttpIngestServer(s"$tmp/spool",
+      indexTaskRoot = Some(s"$tmp/tasks"))
+    val port = server.start()
+    try {
+      val (c1, b1) = post(port, "/druid/indexer/v1/task",
+        """{"type": "index_parallel", "spec": {
+             "dataSchema": {"dataSource": "hu_batch",
+               "timestampSpec": {"column": "ts", "format": "auto"},
+               "dimensionsSpec": {"dimensions": ["etype"]},
+               "metricsSpec": [{"type": "count", "name": "cnt"},
+                 {"type": "hyperUnique", "name": "users", "fieldName": "user"}],
+               "granularitySpec": {"segmentGranularity": "DAY",
+                                   "queryGranularity": "DAY"}},
+             "ioConfig": {"type": "index_parallel",
+               "inputSource": {"type": "inline", "data": "2024-03-01 01:00:00,click,u1\n2024-03-01 02:00:00,click,u2\n2024-03-01 03:00:00,click,u1"},
+               "inputFormat": {"type": "csv", "columns": ["ts", "etype", "user"]}}}}""")
+      assert(c1 == 200, b1)
+      val id1 = "index_graft_[0-9a-f]+".r.findFirstIn(b1).get
+      val (sc1, sb1) = get(port, s"/druid/indexer/v1/task/$id1/status")
+      assert(sc1 == 200 && sb1.contains("\"status\":\"SUCCESS\""), sb1)
+      val native =
+        """{"queryType": "timeseries", "dataSource": "hu_batch", "granularity": "all",
+            "aggregations": [{"type": "longSum", "name": "u", "fieldName": "users"}]}"""
+      val sql = """{"query": "SELECT SUM(users) AS u FROM hu_batch"}"""
+      def answers(): Unit = {
+        val (nc, nb) = post(port, "/druid/v2", native)
+        assert(nc == 200 && nb.contains("\"u\":2"), nb)
+        val (qc, qb) = post(port, "/druid/v2/sql", sql)
+        assert(qc == 200 && qb == """[{"u":2}]""", qb)
+      }
+      answers()
+      // compaction keeps the HLL binary, so the compacted store re-merges
+      val (cc, cb) = post(port, "/druid/indexer/v1/task",
+        """{"type": "compact", "dataSource": "hu_batch"}""")
+      assert(cc == 200, cb)
+      val idc = "index_graft_[0-9a-f]+".r.findFirstIn(cb).get
+      val (scc, scb) = get(port, s"/druid/indexer/v1/task/$idc/status")
+      assert(scc == 200 && scb.contains("\"status\":\"SUCCESS\""), scb)
+      answers()
     } finally server.stop()
   }
 

@@ -75,6 +75,49 @@ class SegmentStoreSpec extends SparkSpec {
     }
   }
 
+  test("stored form: hyperUnique, multi-field cardinality, filtered " +
+      "cardinality and approxHistogram re-merge from binaries across batches") {
+    val skSpec = IngestionSpec(
+      DataSchema("stored_sketches", TimestampSpec("ts"),
+        SpecificDimensions(Seq("a")),
+        Seq(AggregatorSpec("hyperUnique", "hu", Some("u")),
+          AggregatorSpec("cardinality", "pairs", fields = Seq("u", "v")),
+          AggregatorSpec("filtered", "xpairs",
+            filterDimension = Some("a"), filterValue = Some("x"),
+            aggregator = Some(AggregatorSpec("cardinality", "xpairs",
+              fields = Seq("u", "v")))),
+          AggregatorSpec("approxHistogram", "h", Some("n"),
+            probabilities = Seq(0.5), accuracy = Some(10000))),
+        GranularitySpec(Granularity.Hour, Granularity.Hour)),
+      Tuning(windowPeriod = java.time.Duration.ofMinutes(30)))
+    val stored = SegmentStore.stored(skSpec).dataSchema.aggregators
+    assert(stored.map(a => (a.name, a.aggType)) == Seq("hu" -> "hllSketch",
+      "pairs" -> "hllSketch", "xpairs" -> "filtered", "h" -> "histogramSketch"))
+    assert(stored(2).aggregator.map(_.aggType).contains("hllSketch"))
+    // percentile_approx's accuracy is no bin count: the sketch keeps its 128
+    assert(stored(3).accuracy.isEmpty && stored(3).probabilities == Seq(0.5))
+
+    val p = new Pipeline(SegmentStore.stored(skSpec))
+    val path = Files.createTempDirectory("graft-stored").toString + "/store"
+    def batch(rows: (String, String, String, Double)*) =
+      p.withSegment(p.rollup(p.project(p.extractTimestamp(rows
+        .map { case (a, u, v, n) => (ts("2024-03-01 12:10:00"), a, u, v, n) }
+        .toDF("ts", "a", "u", "v", "n")))))
+    SegmentSink.writeMicroBatch(path)(
+      batch(("x", "u1", "p", 1.0), ("x", "u1", "q", 2.0), ("y", "u2", "p", 3.0)), 0L)
+    SegmentSink.writeMicroBatch(path)(
+      batch(("x", "u1", "p", 5.0), ("x", "u2", "p", 1.0)), 1L)
+    val raw = spark.read.parquet(path).schema
+    assert(Seq("hu", "pairs", "xpairs", "h").forall(c =>
+      raw(c).dataType == org.apache.spark.sql.types.BinaryType), raw)
+    // x: users {u1, u2}, tuples {(u1,p), (u1,q), (u2,p)}, values {1, 2, 5, 1}
+    // → lower-rank median 1.0; y: the filter admits none of its rows
+    val got = SegmentStore.read(spark, path, skSpec)
+      .select($"a", $"hu", $"pairs", $"xpairs", element_at($"h", 1))
+      .as[(String, Long, Long, Long, Double)].collect().toSet
+    assert(got == Set(("x", 2L, 3L, 3L, 1.0), ("y", 1L, 1L, 0L, 3.0)), got)
+  }
+
   test("footer-merged read of an evolved store matches a mergeSchema read, " +
       "with 0 Spark jobs to build the frame") {
     val path = evolvedStore()

@@ -128,25 +128,26 @@ class StreamingSpec extends SparkSpec {
     assert(e.getMessage.contains("nonexistent_key"))
   }
 
-  test("spec-driven dedupKeys: watermarked mode chains dedup before the agg") {
+  test("spec-driven dedupKeys: a hyperUnique stream collapses redeliveries " +
+      "before the rollup") {
     implicit val sqlCtx = spark.sqlContext
     // keys arrive via tuning (the spec-JSON surface the Daemon loads) — no
-    // call-site parameter; the watermarked path chains
-    // dropDuplicatesWithinWatermark → windowed agg (two stateful operators)
+    // call-site parameter; the stream chains dropDuplicatesWithinWatermark
+    // before the per-batch rollup of the stored HLL sketch
     val wSpec = IngestionSpec(
-      DataSchema("dedup_wm", TimestampSpec("ts"),
+      DataSchema("dedup_hu", TimestampSpec("ts"),
         SpecificDimensions(Seq("id", "etype")),
         Seq(AggregatorSpec("count", "cnt"),
           AggregatorSpec("doubleSum", "total", Some("value")),
-          // a finalized sketch routes the spec to watermarked mode
           AggregatorSpec("hyperUnique", "uv", Some("value"))),
         GranularitySpec(Granularity.Hour, Granularity.Minute)),
       Tuning(windowPeriod = java.time.Duration.ofMinutes(2),
         dedupKeys = Seq("id")))
     val input = MemoryStream[EvD]
-    val tmp = Files.createTempDirectory("graft-dedup-wm").toString
+    val tmp = Files.createTempDirectory("graft-dedup-hu").toString
+    val now = lit(ts("2024-03-01 12:01:00"))
     val ingest = new IngestStream(spark, wSpec, s"$tmp/checkpoint")
-    ingest.start(input.toDF(), s"$tmp/out",
+    ingest.start(input.toDF(), s"$tmp/out", now = now,
       trigger = Trigger.ProcessingTime(50))
 
     input.addData(EvD(ts("2024-03-01 12:00:10"), 1L, "click", 1.0))
@@ -154,55 +155,56 @@ class StreamingSpec extends SparkSpec {
     // redelivery of id=1 in a LATER batch + a genuinely new event
     input.addData(EvD(ts("2024-03-01 12:00:10"), 1L, "click", 1.0),
       EvD(ts("2024-03-01 12:00:40"), 2L, "click", 2.0))
-    ingest.activeQuery.get.processAllAvailable()
-    // advance the watermark past bucket end + windowPeriod → finalize
-    input.addData(EvD(ts("2024-03-01 12:10:00"), 99L, "view", 8.0))
     ingest.flushAndStop()
 
-    val out = spark.read.parquet(s"$tmp/out").filter($"etype" === "click")
-      .select($"id", $"cnt", $"total").as[(String, Long, Double)].collect().toSet
+    val out = ingest.brokerView().filter($"etype" === "click")
+      .select($"id", $"cnt", $"total", $"uv")
+      .as[(String, Long, Double, Long)].collect().toSet
     // without dedup, id=1 would carry cnt=2 total=2.0
-    assert(out == Set(("1", 1L, 1.0), ("2", 1L, 2.0)),
+    assert(out == Set(("1", 1L, 1.0, 1L), ("2", 1L, 2.0, 1L)),
       s"spec-driven dedup must collapse the redelivery: $out")
 
-    // same actionable error as per-batch mode for a key that isn't a dimension
+    // actionable error for a key that isn't a dimension
     val bad = new IngestStream(spark,
       wSpec.copy(tuning = wSpec.tuning.copy(dedupKeys = Seq("no_such_dim"))),
       s"$tmp/checkpoint-bad")
     val e = intercept[IllegalArgumentException] {
-      bad.start(MemoryStream[EvD].toDF(), s"$tmp/out-bad")
+      bad.start(MemoryStream[EvD].toDF(), s"$tmp/out-bad", now = now)
     }
     assert(e.getMessage.contains("no_such_dim"))
   }
 
-  test("watermarked schemaless: raw-ts helper never becomes a dimension") {
+  test("schemaless hyperUnique stream: raw-ts helper never becomes a dimension") {
     implicit val sqlCtx = spark.sqlContext
     val sSpec = IngestionSpec(
-      DataSchema("wm_schemaless", TimestampSpec("ts"),
+      DataSchema("hu_schemaless", TimestampSpec("ts"),
         SchemalessDimensions(),
         Seq(AggregatorSpec("count", "cnt"),
           AggregatorSpec("hyperUnique", "uv", Some("value"))),
         GranularitySpec(Granularity.Hour, Granularity.Minute)),
       Tuning(windowPeriod = java.time.Duration.ofMinutes(2)))
     val input = MemoryStream[Ev]
-    val tmp = Files.createTempDirectory("graft-wm-schemaless").toString
+    val tmp = Files.createTempDirectory("graft-hu-schemaless").toString
     val ingest = new IngestStream(spark, sSpec, s"$tmp/checkpoint")
     ingest.start(input.toDF(), s"$tmp/out",
-      trigger = Trigger.ProcessingTime(50))
+      now = lit(ts("2024-03-01 12:01:00")), trigger = Trigger.ProcessingTime(50))
     // two rows, same minute bucket, same schemaless dim (etype) — must roll
     // up to ONE row; a leaked per-event raw-ts dimension would split them
     input.addData(Ev(ts("2024-03-01 12:00:10"), "click", 1.0),
       Ev(ts("2024-03-01 12:00:40"), "click", 2.0))
     ingest.activeQuery.get.processAllAvailable()
-    input.addData(Ev(ts("2024-03-01 12:10:00"), "view", 8.0))
+    input.addData(Ev(ts("2024-03-01 12:01:30"), "view", 8.0))
     ingest.flushAndStop()
 
-    val out = spark.read.parquet(s"$tmp/out")
-    assert(!out.columns.contains(graft.pipeline.Pipeline.RawTsCol),
-      s"raw-ts helper leaked into the store schema: ${out.columns.toSeq}")
-    val click = out.filter($"etype" === "click")
+    val stored = spark.read.parquet(s"$tmp/out")
+    assert(!stored.columns.contains(graft.pipeline.Pipeline.RawTsCol),
+      s"raw-ts helper leaked into the store schema: ${stored.columns.toSeq}")
+    val view = ingest.brokerView()
+    assert(view.columns.toSet == Set("__time", "etype", "cnt", "uv"),
+      s"broker view columns: ${view.columns.toSeq}")
+    val click = view.filter($"etype" === "click")
       .select($"cnt", $"uv").as[(Long, Long)].collect().toSeq
-    assert(click == Seq((2L, 2L)), s"schemaless watermarked rollup wrong: $click")
+    assert(click == Seq((2L, 2L)), s"schemaless hyperUnique rollup wrong: $click")
   }
 
   test("stream-stream interval join: purchases enriched with prior clicks") {
@@ -282,10 +284,11 @@ class StreamingSpec extends SparkSpec {
     assert(merged == Set(("click", 2L, 3.0), ("view", 1L, 4.0)))
   }
 
-  test("watermarked mode: state-store merge emits each bucket once, finalized") {
+  test("hyperUnique stream: sketch partials from two batches re-merge to " +
+      "one finalized row per bucket") {
     implicit val sqlCtx = spark.sqlContext
-    val wmSpec = IngestionSpec(
-      DataSchema("wm_events", TimestampSpec("ts"),
+    val huSpec = IngestionSpec(
+      DataSchema("hu_events", TimestampSpec("ts"),
         SpecificDimensions(Seq("etype")),
         Seq(AggregatorSpec("count", "cnt"),
           AggregatorSpec("doubleSum", "total", Some("value")),
@@ -293,72 +296,110 @@ class StreamingSpec extends SparkSpec {
         GranularitySpec(Granularity.Hour, Granularity.Minute)),
       Tuning(windowPeriod = java.time.Duration.ofMinutes(2)))
     val input = MemoryStream[Ev]
-    val tmp = Files.createTempDirectory("graft-wm").toString
-    val ingest = new IngestStream(spark, wmSpec, s"$tmp/checkpoint")
+    val tmp = Files.createTempDirectory("graft-hu").toString
+    val ingest = new IngestStream(spark, huSpec, s"$tmp/checkpoint")
     ingest.start(input.toDF(), s"$tmp/out",
-      trigger = Trigger.ProcessingTime(50))
+      now = lit(ts("2024-03-01 12:01:00")), trigger = Trigger.ProcessingTime(50))
 
     // bucket 12:00 gets rows in two separate micro-batches
     input.addData(Ev(ts("2024-03-01 12:00:10"), "click", 1.0))
     ingest.activeQuery.get.processAllAvailable()
     input.addData(Ev(ts("2024-03-01 12:00:40"), "click", 2.0))
     ingest.activeQuery.get.processAllAvailable()
-    // advance watermark past 12:00 + gran + windowPeriod -> bucket finalizes
-    input.addData(Ev(ts("2024-03-01 12:10:00"), "view", 8.0))
+    input.addData(Ev(ts("2024-03-01 12:01:30"), "view", 8.0))
     ingest.activeQuery.get.processAllAvailable()
-    // too-late event (watermark is now 12:08): dropped by the state store,
-    // visible in the lateness accounting
-    input.addData(Ev(ts("2024-03-01 12:00:50"), "click", 99.0))
+    // too late for the window (now − 3 min): dropped and counted
+    input.addData(Ev(ts("2024-03-01 11:58:00"), "click", 99.0))
     ingest.activeQuery.get.processAllAvailable()
-    input.addData(Ev(ts("2024-03-01 12:20:00"), "view", 16.0))
+    input.addData(Ev(ts("2024-03-01 12:02:30"), "view", 16.0))
     ingest.flushAndStop()
-    // lateness accounting: the state-store drop shows up in the SAME
-    // received/sent/dropped surface as start-mode windowFilter drops
     assert(ingest.received == 5)
     assert(ingest.dropped == 1, s"expected the one too-late event dropped, got ${ingest.dropped}")
     assert(ingest.sent == 4)
-    assert(ingest.watermarkDropped == 1L)
 
-    val out = spark.read.parquet(s"$tmp/out")
+    // the store holds one HLL binary partial per batch for the click bucket
+    val stored = spark.read.parquet(s"$tmp/out")
+    assert(stored.schema("approx_vals").dataType ==
+      org.apache.spark.sql.types.BinaryType)
+    assert(stored.filter($"etype" === "click").count() == 2)
+    // …and the read merges them into ONE finalized row for the 12:00 bucket
+    val out = ingest.brokerView()
       .filter($"etype" === "click")
       .select($"cnt", $"total", $"approx_vals").as[(Long, Double, Long)].collect()
-    // exactly ONE finalized row for the 12:00 bucket, merged across batches
     assert(out.toSeq == Seq((2L, 3.0, 2L)))
   }
 
-  test("watermarked mode: future and null timestamps are guarded out " +
-      "(one poison event must not advance the checkpointed watermark)") {
+  test("hyperUnique stream: future and null timestamps drop with the count, " +
+      "and real traffic still lands") {
     implicit val sqlCtx = spark.sqlContext
-    val wmSpec = IngestionSpec(
-      DataSchema("wm_guard", TimestampSpec("ts"),
+    val huSpec = IngestionSpec(
+      DataSchema("hu_guard", TimestampSpec("ts"),
         SpecificDimensions(Seq("etype")),
         Seq(AggregatorSpec("count", "cnt"),
           AggregatorSpec("hyperUnique", "approx_vals", Some("value"))),
         GranularitySpec(Granularity.Hour, Granularity.Minute)),
       Tuning(windowPeriod = java.time.Duration.ofMinutes(2)))
     val input = MemoryStream[Ev]
-    val tmp = Files.createTempDirectory("graft-wm-guard").toString
-    val ingest = new IngestStream(spark, wmSpec, s"$tmp/checkpoint")
+    val tmp = Files.createTempDirectory("graft-hu-guard").toString
+    val ingest = new IngestStream(spark, huSpec, s"$tmp/checkpoint")
     ingest.start(input.toDF(), s"$tmp/out",
-      trigger = Trigger.ProcessingTime(50))
-    // a single year-2255 event: unguarded it would advance the CHECKPOINTED
-    // event-time watermark past all real traffic forever; a null timestamp
-    // would open a never-closing null-window state group
+      now = lit(ts("2024-03-01 12:01:00")), trigger = Trigger.ProcessingTime(50))
+    // a year-2255 event and a null timestamp fall outside [now − w, now + w]
     input.addData(Ev(ts("2255-01-01 00:00:00"), "poison", 1.0))
     ingest.activeQuery.get.processAllAvailable()
     input.addData(Ev(null, "nullts", 1.0))
     ingest.activeQuery.get.processAllAvailable()
-    // real traffic still aggregates and finalizes
+    // real traffic still aggregates and answers
     input.addData(Ev(ts("2024-03-01 12:00:10"), "click", 1.0),
       Ev(ts("2024-03-01 12:00:40"), "click", 2.0))
     ingest.activeQuery.get.processAllAvailable()
-    input.addData(Ev(ts("2024-03-01 12:10:00"), "view", 8.0))
+    input.addData(Ev(ts("2024-03-01 12:01:30"), "view", 8.0))
     ingest.flushAndStop()
     assert(ingest.received == 5, ingest.received)
     assert(ingest.dropped == 2, s"poison+null should drop: ${ingest.dropped}")
-    val out = spark.read.parquet(s"$tmp/out")
-      .filter($"etype" === "click").select($"cnt").as[Long].collect().toSeq
-    assert(out == Seq(2L), s"real bucket must still emit: $out")
+    val out = ingest.brokerView()
+      .select($"etype", $"cnt", $"approx_vals").as[(String, Long, Long)].collect().toSet
+    assert(out == Set(("click", 2L, 2L), ("view", 1L, 1L)), s"real buckets must answer: $out")
+  }
+
+  test("bounded replay of a hyperUnique spec accounts for every event: " +
+      "flushAndStop leaves no bucket unwritten") {
+    implicit val sqlCtx = spark.sqlContext
+    val huSpec = IngestionSpec(
+      DataSchema("hu_replay", TimestampSpec("ts"),
+        SpecificDimensions(Seq("etype")),
+        Seq(AggregatorSpec("count", "cnt"),
+          AggregatorSpec("hyperUnique", "uv", Some("value"))),
+        GranularitySpec(Granularity.Hour, Granularity.Minute)),
+      Tuning(windowPeriod = java.time.Duration.ofMinutes(10)))
+    val input = MemoryStream[Ev]
+    val tmp = Files.createTempDirectory("graft-hu-replay").toString
+    val ingest = new IngestStream(spark, huSpec, s"$tmp/checkpoint")
+    ingest.start(input.toDF(), s"$tmp/out",
+      now = lit(ts("2024-03-01 12:00:00")), trigger = Trigger.ProcessingTime(50))
+    // three batches; the last events sit in the newest buckets, right at
+    // the stop — the buckets a watermark would still be holding open
+    input.addData((0 until 20).map(i =>
+      Ev(ts(f"2024-03-01 11:${50 + i % 10}%02d:00"), if (i % 2 == 0) "click" else "view", i.toDouble)): _*)
+    ingest.activeQuery.get.processAllAvailable()
+    input.addData(Ev(ts("2024-03-01 11:30:00"), "click", 1.0),   // late
+      Ev(ts("2024-03-01 12:05:00"), "click", 2.0),
+      Ev(ts("2024-03-01 12:30:00"), "view", 3.0))                  // future
+    ingest.activeQuery.get.processAllAvailable()
+    input.addData(Ev(ts("2024-03-01 12:09:59"), "view", 4.0),
+      Ev(ts("2024-03-01 12:09:59"), "view", 5.0))
+    ingest.flushAndStop()
+
+    val sent = 20L + 1 + 2
+    assert(ingest.received == 25 && ingest.dropped == 2 && ingest.sent == sent,
+      s"received=${ingest.received} sent=${ingest.sent} dropped=${ingest.dropped}")
+    assert(ingest.received == ingest.sent + ingest.dropped)
+    val view = ingest.brokerView()
+    assert(view.agg(sum($"cnt")).as[Long].head() == sent)
+    // the newest bucket answers with its distinct count
+    val last = view.filter($"__time" === ts("2024-03-01 12:09:00"))
+      .select($"cnt", $"uv").as[(Long, Long)].collect().toSeq
+    assert(last == Seq((2L, 2L)), s"12:09 bucket: $last")
   }
 
   test("start: exactCardinality is unstreamable in either mode - " +
@@ -910,10 +951,9 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[Ev]
     val tmp = Files.createTempDirectory("graft-month").toString
     val ingest = new IngestStream(spark, mSpec, s"$tmp/checkpoint")
-    // router: calendar granularity + STORED sketches → per-batch mode
     val q = ingest.start(input.toDF(), s"$tmp/out",
       now = lit(ts("2024-03-20 12:00:00")), trigger = Trigger.ProcessingTime(50))
-    assert(q.name == "graft-month_events", "calendar spec must take the per-batch path")
+    assert(q.name == "graft-month_events")
     // same MONTH bucket fed from two batches with an overlapping value;
     // multiset for March = {1, 1, 2, 3} → median rank 2 → 1.0, distinct 3
     input.addData(Ev(ts("2024-03-01 10:00:00"), "click", 1.0),
@@ -931,38 +971,63 @@ class StreamingSpec extends SparkSpec {
     assert(got == Seq(("2024-03-01T00.00.00", 4L, 3L, 1.0),
       ("2024-04-01T00.00.00", 1L, 1L, 9.0)), s"month rollup: $got")
 
-    // router: FINALIZED sketch + fixed-width granularity → watermarked mode
-    val wmSpec = mSpec.copy(dataSchema = mSpec.dataSchema.copy(
+    // FINALIZED sketches at MONTH: hyperUnique, filtered(hyperUnique) and
+    // approxHistogram stream too — the store holds their binaries and the
+    // read finalizes them across batches
+    val fSpec = mSpec.copy(dataSchema = mSpec.dataSchema.copy(
+      dataSource = "month_final", dimensionsSpec = SpecificDimensions(Nil),
+      aggregators = Seq(AggregatorSpec("count", "cnt"),
+        AggregatorSpec("hyperUnique", "u", Some("value")),
+        AggregatorSpec("filtered", "fu",
+          filterDimension = Some("etype"), filterValue = Some("click"),
+          aggregator = Some(AggregatorSpec("hyperUnique", "fu", Some("value")))),
+        AggregatorSpec("approxHistogram", "h", Some("value"),
+          probabilities = Seq(0.5)))))
+    val fInput = MemoryStream[Ev]
+    val fIngest = new IngestStream(spark, fSpec, s"$tmp/cp-final")
+    fIngest.start(fInput.toDF(), s"$tmp/out-final",
+      now = lit(ts("2024-03-20 12:00:00")), trigger = Trigger.ProcessingTime(50))
+    // March multiset {1, 2, 1, 3}: 3 distinct, clicks {1, 1, 3} → 2
+    // distinct, median rank 2 → 1.0
+    fInput.addData(Ev(ts("2024-03-01 10:00:00"), "click", 1.0),
+      Ev(ts("2024-03-15 10:00:00"), "view", 2.0))
+    fIngest.activeQuery.get.processAllAvailable()
+    fInput.addData(Ev(ts("2024-03-20 10:00:00"), "click", 1.0),
+      Ev(ts("2024-03-25 10:00:00"), "click", 3.0),
+      Ev(ts("2024-04-02 10:00:00"), "click", 9.0))
+    fIngest.flushAndStop()
+    val fStored = spark.read.parquet(s"$tmp/out-final").schema
+    assert(Seq("u", "fu", "h").forall(c =>
+      fStored(c).dataType == org.apache.spark.sql.types.BinaryType), fStored)
+    val fGot = fIngest.brokerView().orderBy($"__time")
+      .select($"cnt", $"u", $"fu", element_at($"h", 1))
+      .as[(Long, Long, Long, Double)].collect().toSeq
+    assert(fGot == Seq((4L, 3L, 2L, 1.0), (1L, 1L, 1L, 9.0)), s"month finals: $fGot")
+
+    // a custom writer is accepted for a hyperUnique spec (HOUR here): it
+    // receives the stored-form batches and the store answers through it
+    val hSpec = fSpec.copy(dataSchema = fSpec.dataSchema.copy(
       aggregators = Seq(AggregatorSpec("hyperUnique", "u", Some("value"))),
       granularitySpec = GranularitySpec(Granularity.Hour, Granularity.Hour)))
-    val wmIngest = new IngestStream(spark, wmSpec, s"$tmp/cp-wm")
-    val wmQ = wmIngest.start(MemoryStream[Ev].toDF(), s"$tmp/out-wm",
-      trigger = Trigger.ProcessingTime(50))
-    assert(wmQ.name == "graft-wm-month_events")
-    wmIngest.flushAndStop()
-    // the per-batch writer seam does not apply to a watermarked spec
-    val wErr = intercept[IllegalArgumentException] {
-      new IngestStream(spark, wmSpec, s"$tmp/cp-wm-writer").start(MemoryStream[Ev].toDF(),
-        s"$tmp/out-wm-writer", writer = Some((_: org.apache.spark.sql.DataFrame, _: Long) => ()))
-    }
-    assert(wErr.getMessage.contains("watermarked mode"), wErr.getMessage)
+    val written = new java.util.concurrent.atomic.AtomicLong
+    val hInput = MemoryStream[Ev]
+    val hIngest = new IngestStream(spark, hSpec, s"$tmp/cp-writer")
+    hIngest.start(hInput.toDF(), s"$tmp/out-writer",
+      now = lit(ts("2024-03-20 12:00:00")), trigger = Trigger.ProcessingTime(50),
+      writer = Some { (df: org.apache.spark.sql.DataFrame, id: Long) =>
+        written.incrementAndGet()
+        graft.sink.SegmentSink.writeMicroBatch(s"$tmp/out-writer")(df, id)
+      })
+    hInput.addData(Ev(ts("2024-03-20 11:10:00"), "click", 1.0),
+      Ev(ts("2024-03-20 11:20:00"), "click", 2.0),
+      Ev(ts("2024-03-20 11:30:00"), "view", 1.0))
+    hIngest.flushAndStop()
+    assert(written.get > 0, "the custom writer never ran")
+    val hGot = hIngest.brokerView().select($"u").as[Long].collect().toSeq
+    assert(hGot == Seq(2L), s"writer-stored hyperUnique: $hGot")
 
-    // router unwraps `filtered` wrappers: filtered(hyperUnique) needs the
-    // state store exactly like bare hyperUnique
-    val fwSpec = mSpec.copy(dataSchema = mSpec.dataSchema.copy(
-      aggregators = Seq(AggregatorSpec("filtered", "u",
-        filterDimension = Some("etype"), filterValue = Some("click"),
-        aggregator = Some(AggregatorSpec("hyperUnique", "u", Some("value"))))),
-      granularitySpec = GranularitySpec(Granularity.Hour, Granularity.Hour)))
-    val fwIngest = new IngestStream(spark, fwSpec, s"$tmp/cp-fw")
-    val fwQ = fwIngest.start(MemoryStream[Ev].toDF(), s"$tmp/out-fw",
-      trigger = Trigger.ProcessingTime(50))
-    assert(fwQ.name == "graft-wm-month_events",
-      "filtered(finalized sketch) must route to the state store")
-    fwIngest.flushAndStop()
-
-    // router: rollup=false never evaluates aggregators — finalized sketches
-    // in the spec are inert, the raw-append path must start
+    // rollup=false never evaluates aggregators — finalized sketches in the
+    // spec are inert, the raw-append path must start
     val rawSpec = mSpec.copy(dataSchema = mSpec.dataSchema.copy(
       aggregators = Seq(AggregatorSpec("hyperUnique", "u", Some("value"))),
       granularitySpec = GranularitySpec(Granularity.Hour, Granularity.None,
@@ -970,18 +1035,8 @@ class StreamingSpec extends SparkSpec {
     val rawIngest = new IngestStream(spark, rawSpec, s"$tmp/cp-raw")
     val rawQ = rawIngest.start(MemoryStream[Ev].toDF(), s"$tmp/out-raw",
       now = lit(ts("2024-03-20 12:00:00")), trigger = Trigger.ProcessingTime(50))
-    assert(rawQ.name == "graft-month_events", "raw-append spec takes the per-batch path")
+    assert(rawQ.name == "graft-month_events", "raw-append spec starts")
     rawIngest.flushAndStop()
-
-    // router: finalized sketch + calendar granularity = impossible — the
-    // error must name the stored-form fix
-    val badSpec = mSpec.copy(dataSchema = mSpec.dataSchema.copy(
-      aggregators = Seq(AggregatorSpec("approxHistogram", "h", Some("value")))))
-    val err = intercept[IllegalArgumentException] {
-      new IngestStream(spark, badSpec, s"$tmp/cp-bad")
-        .start(MemoryStream[Ev].toDF(), s"$tmp/out-bad")
-    }
-    assert(err.getMessage.contains("histogramSketch"))
   }
 
   test("interval-pruned read + segmentMetadata analog") {
