@@ -14,11 +14,13 @@ import graft.streaming.IngestStream
   * ingest for N dataSources, each declared by a Druid-shaped ingestion-spec
   * JSON file and backed by its own routed streaming query + segment store.
   *
-  * Wiring: per spec file → one [[IngestStream]] (its `start` picks the mode
-  * from the spec) tailing the dataSource's spool dir, all started and
+  * Wiring: per spec file → one [[IngestStream]] (per-batch partials,
+  * merged at read) tailing the dataSource's spool dir, all started and
   * stopped together ([[IngestStream.startAll]] / [[IngestStream.stopAll]])
   * and registered in one [[HttpIngestServer]] routing map, which also
-  * serves each stream's store to the query endpoints. `run` is the testable
+  * serves each stream's store to the query endpoints (a store read installs
+  * [[graft.plans.SegmentPruneRule]], so a query's `intervals` open only the
+  * segments they cover). `run` is the testable
   * core; `main` parses args, opens a [[GraftSession.local]] session (the
   * checksummed local file system: a daemon's store keeps its `.crc`
   * fault-detection files) and blocks until terminated.

@@ -4,14 +4,15 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions, SparkSessionE
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Registration of graft's native Catalyst expressions.
+/** Registration of graft's native Catalyst expressions and of the store's
+  * segment pruner ([[graft.plans.SegmentPruneRule]]).
   *
-  * Two entry points:
+  * Two entry points install the same functions and the same rule:
   *  - [[GraftExtensions]]: `SparkSessionExtensions` provider — enable with
   *    `spark.sql.extensions=graft.functions.GraftExtensions` so every session
-  *    (incl. SQL-only users) gets the functions.
-  *  - [[GraftFunctions.register]]: imperative per-session registration for
-  *    library use.
+  *    (incl. SQL-only users) gets them from its start.
+  *  - [[GraftFunctions.register]]: imperative per-session registration into
+  *    an existing session; every store read calls it.
   */
 class GraftExtensions extends SparkSessionExtensionsProvider {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -379,8 +380,9 @@ object GraftFunctions {
       new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
 
   /** Imperative registration for sessions created without the extension —
-    * graft's native expressions plus the Druid SQL dialect surface.
-    * Idempotent per session. Same-named BUILTINS (Spark 4.1 ships its own
+    * graft's native expressions plus the Druid SQL dialect surface, and the
+    * segment pruner as an extra optimization. Idempotent per session.
+    * Same-named BUILTINS (Spark 4.1 ships its own
     * theta_sketch_agg/theta_union_agg/theta_sketch_estimate with an
     * incompatible sketch encoding) are dropped first and replaced
     * DELIBERATELY — graft's stored sketches must keep resolving to graft's
@@ -397,6 +399,12 @@ object GraftFunctions {
         registry.dropFunction(ident)
         registry.registerFunction(ident, info, builder)
     }
+    // one pruner, bound to this session: a cloned session inherits its
+    // parent's extra optimizations, and with them the parent's pruner
+    spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations
+        .filterNot(_.isInstanceOf[graft.plans.SegmentPruneRule]) :+
+        new graft.plans.SegmentPruneRule(spark)
     registeredSessions.add(spark); ()
   }
 }

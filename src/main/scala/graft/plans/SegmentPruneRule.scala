@@ -12,12 +12,13 @@ import graft.pipeline.Pipeline
 import graft.sink.Footers.Bound
 import graft.sink.SegmentStore
 
-/** Catalyst optimizer rule: AUTOMATIC zone-map segment pruning.
+/** Catalyst optimizer rule: the store's one zone-map and interval pruner.
   *
-  * [[SegmentStore.readPruned]]/[[SegmentStore.readPrunedNumeric]] prune
-  * explicitly — the caller must know about the zone map. This rule closes
-  * the loop for plain `spark.read.parquet(store).filter(...)` users (and
-  * SQL-only sessions via [[graft.functions.GraftExtensions]]): a Filter
+  * [[graft.functions.GraftFunctions.register]] installs it on every session
+  * that reads a store ([[SegmentStore.read]] and the broker's views), and
+  * [[graft.functions.GraftExtensions]] on sessions built with it, so a
+  * broker query, a [[SegmentStore.read]]`.filter(...)` and a plain
+  * `spark.read.parquet(store).filter(...)` all prune alike: a Filter
   * directly over a `segment`-partitioned store whose files' footers bound
   * a predicate column gets `segment IN (admitted…)` injected, which Spark's
   * partition pruning turns into a directory-level scan cut — the same
@@ -27,9 +28,9 @@ import graft.sink.SegmentStore
   * what the scan will read (a file sink's `_spark_metadata` log included);
   * footers are cached, so planning launches no Spark job.
   *
-  * Soundness: a conjunct `dim = v` / numeric range only ever EXCLUDES
-  * segments whose merged [min, max] cannot contain matching rows; segments
-  * without a bound for the column are kept (the admissions are
+  * Soundness: a conjunct `dim = v` or a string or numeric range only ever
+  * EXCLUDES segments whose merged [min, max] cannot contain matching rows;
+  * segments without a bound for the column are kept (the admissions are
   * conservative). Only top-level AND conjuncts are consulted. A conjunct
   * that is itself a string disjunction — `dim IN (a,b,…)` (or its optimized
   * InSet form) or `dim = a OR dim = b` on ONE column, both common shapes of
@@ -48,11 +49,10 @@ class SegmentPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
       (rel.relation, segmentAttr(rel)) match {
         case (hfs: HadoopFsRelation, Some(seg)) =>
           admitted(hfs, cond) match {
+            // an empty IN admits nothing and, like any IN, constrains
+            // `segment`: the rewrite stays a fixed point in a batch of its own
             case Some(segs) =>
-              val extra =
-                if (segs.isEmpty) Literal.FalseLiteral
-                else In(seg, segs.map(s => Literal.create(s, StringType)))
-              Filter(And(cond, extra), rel)
+              Filter(And(cond, In(seg, segs.map(s => Literal.create(s, StringType)))), rel)
             case None => f
           }
         case _ => f
@@ -90,25 +90,11 @@ class SegmentPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * at planning, like the broker's segment timeline). */
   private def admitted(hfs: HadoopFsRelation, cond: Expression): Option[Seq[String]] = {
     val conjuncts = splitAnd(cond)
-    val stringEq = conjuncts.collect {
-      case EqualTo(a: AttributeReference, Literal(v, StringType)) if v != null =>
-        (a.name, v.toString)
-      case EqualTo(Literal(v, StringType), a: AttributeReference) if v != null =>
-        (a.name, v.toString)
-      // the filter DSL compiles selector/equality to `<=>` (never-NULL
-      // contract): with a NON-NULL literal its admission set is the same
-      // as EqualTo's (a null dim value matches neither, and zone-map
-      // ranges never cover nulls) — without this, native-query selector
-      // filters over store reads would silently skip pruning
-      case EqualNullSafe(a: AttributeReference, Literal(v, StringType))
-          if v != null => (a.name, v.toString)
-      case EqualNullSafe(Literal(v, StringType), a: AttributeReference)
-          if v != null => (a.name, v.toString)
-    }
+    val stringRanges = collectStringRanges(conjuncts)
     val stringIn = collectStringDisjunctions(conjuncts)
     val numericBounds = collectNumericBounds(conjuncts)
     val tsBounds = collectTsBounds(conjuncts)
-    if (stringEq.isEmpty && stringIn.isEmpty && numericBounds.isEmpty &&
+    if (stringRanges.isEmpty && stringIn.isEmpty && numericBounds.isEmpty &&
         tsBounds.isEmpty)
       return None // nothing answerable — zero listing or footer cost
 
@@ -122,10 +108,12 @@ class SegmentPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
     def admit(ok: Map[String, Bound] => Boolean): Set[String] =
       zones.collect { case (seg, z) if ok(z) => seg }.toSet
     val lists =
-      stringEq.map { case (d, v) => admit(z => SegmentStore.admitsRange(z.get(d), v, v)) } ++
+      stringRanges.map { case (d, lo, hi) =>
+        admit(z => SegmentStore.admitsRange(z.get(d), lo, hi)) } ++
       // disjunction: union of per-value admissions (each conservative)
       stringIn.map { case (d, vs) =>
-        admit(z => vs.exists(v => SegmentStore.admitsRange(z.get(d), v, v))) } ++
+        admit(z => vs.exists(v =>
+          SegmentStore.admitsRange(z.get(d), Some(v), Some(v)))) } ++
       numericBounds.map { case (c, lo, hi) =>
         admit(z => SegmentStore.admitsNumeric(z.get(c), lo, hi)) } ++
       // parse dir names in the zone they were WRITTEN under (the sink's
@@ -160,7 +148,10 @@ class SegmentPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
     }.toSet)
   }
 
-  /** [lo, hi] micros over the bucket column from timestamp comparisons. */
+  /** [lo, hi] micros over the bucket column from timestamp comparisons.
+    * Micros are integral, so a strict bound tightens by one: `ts < b`
+    * (the end of a Druid interval `a/b`) is `ts <= b - 1`, and the chunk
+    * starting at `b` is not admitted. */
   private def collectTsBounds(conjuncts: Seq[Expression]): Option[(Long, Long)] = {
     def tsAttr(e: Expression): Boolean = e match {
       case a: AttributeReference =>
@@ -171,6 +162,9 @@ class SegmentPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case v: java.lang.Long if l.dataType == TimestampType => Some(v)
       case _ => None
     }
+    // saturating, so an extreme literal never wraps into a wrong bound
+    def below(v: Long): Long = if (v == Long.MinValue) v else v - 1
+    def above(v: Long): Long = if (v == Long.MaxValue) v else v + 1
     var lo = Long.MinValue; var hi = Long.MaxValue; var seen = false
     conjuncts.foreach {
       case EqualTo(e, l: Literal) if tsAttr(e) =>
@@ -180,22 +174,54 @@ class SegmentPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case GreaterThanOrEqual(e, l: Literal) if tsAttr(e) =>
         micros(l).foreach { v => lo = math.max(lo, v); seen = true }
       case GreaterThan(e, l: Literal) if tsAttr(e) =>
-        micros(l).foreach { v => lo = math.max(lo, v); seen = true }
+        micros(l).foreach { v => lo = math.max(lo, above(v)); seen = true }
       case LessThanOrEqual(e, l: Literal) if tsAttr(e) =>
         micros(l).foreach { v => hi = math.min(hi, v); seen = true }
       case LessThan(e, l: Literal) if tsAttr(e) =>
-        micros(l).foreach { v => hi = math.min(hi, v); seen = true }
+        micros(l).foreach { v => hi = math.min(hi, below(v)); seen = true }
       case GreaterThanOrEqual(l: Literal, e) if tsAttr(e) =>
         micros(l).foreach { v => hi = math.min(hi, v); seen = true }
       case GreaterThan(l: Literal, e) if tsAttr(e) =>
-        micros(l).foreach { v => hi = math.min(hi, v); seen = true }
+        micros(l).foreach { v => hi = math.min(hi, below(v)); seen = true }
       case LessThanOrEqual(l: Literal, e) if tsAttr(e) =>
         micros(l).foreach { v => lo = math.max(lo, v); seen = true }
       case LessThan(l: Literal, e) if tsAttr(e) =>
-        micros(l).foreach { v => lo = math.max(lo, v); seen = true }
+        micros(l).foreach { v => lo = math.max(lo, above(v)); seen = true }
       case _ => ()
     }
     if (seen) Some((lo, hi)) else None
+  }
+
+  /** Per-conjunct [lo, hi] over a string column, None for an open end:
+    * equality is [v, v] and a one-sided comparison bounds one end (a strict
+    * bound widens to inclusive, which only admits more). The filter DSL
+    * compiles selector/equality to `<=>` (never-NULL contract): with a
+    * NON-NULL literal its admission set is the same as `=`'s (a null dim
+    * value matches neither, and zone-map ranges never cover nulls). */
+  private def collectStringRanges(conjuncts: Seq[Expression])
+      : Seq[(String, Option[String], Option[String])] = {
+    conjuncts.collect {
+      case EqualTo(a: AttributeReference, Str(v)) => (a.name, Some(v), Some(v))
+      case EqualTo(Str(v), a: AttributeReference) => (a.name, Some(v), Some(v))
+      case EqualNullSafe(a: AttributeReference, Str(v)) => (a.name, Some(v), Some(v))
+      case EqualNullSafe(Str(v), a: AttributeReference) => (a.name, Some(v), Some(v))
+      case GreaterThanOrEqual(a: AttributeReference, Str(v)) => (a.name, Some(v), None)
+      case GreaterThan(a: AttributeReference, Str(v)) => (a.name, Some(v), None)
+      case LessThanOrEqual(a: AttributeReference, Str(v)) => (a.name, None, Some(v))
+      case LessThan(a: AttributeReference, Str(v)) => (a.name, None, Some(v))
+      case GreaterThanOrEqual(Str(v), a: AttributeReference) => (a.name, None, Some(v))
+      case GreaterThan(Str(v), a: AttributeReference) => (a.name, None, Some(v))
+      case LessThanOrEqual(Str(v), a: AttributeReference) => (a.name, Some(v), None)
+      case LessThan(Str(v), a: AttributeReference) => (a.name, Some(v), None)
+    }
+  }
+
+  /** A non-null string literal's value. */
+  private object Str {
+    def unapply(e: Expression): Option[String] = e match {
+      case Literal(v, StringType) if v != null => Some(v.toString)
+      case _ => None
+    }
   }
 
   private def splitAnd(e: Expression): Seq[Expression] = e match {
@@ -211,10 +237,6 @@ class SegmentPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * dropped them — simplest sound rule: skip). */
   private def collectStringDisjunctions(
       conjuncts: Seq[Expression]): Seq[(String, Seq[String])] = {
-    def strLit(e: Expression): Option[String] = e match {
-      case Literal(v, StringType) if v != null => Some(v.toString)
-      case _ => None
-    }
     def orLeaves(e: Expression): Seq[Expression] = e match {
       case Or(l, r) => orLeaves(l) ++ orLeaves(r)
       case other    => Seq(other)
@@ -222,22 +244,22 @@ class SegmentPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
     conjuncts.flatMap {
       case In(a: AttributeReference, vs)
           if a.dataType == StringType && vs.nonEmpty &&
-            vs.forall(strLit(_).isDefined) =>
-        Some(a.name -> vs.flatMap(strLit))
+            vs.forall(Str.unapply(_).isDefined) =>
+        Some(a.name -> vs.flatMap(Str.unapply))
       case InSet(a: AttributeReference, hset)
           if a.dataType == StringType && hset.nonEmpty && !hset.contains(null) =>
         Some(a.name -> hset.toSeq.map(_.toString))
       case o @ Or(_, _) =>
         val eqs = orLeaves(o).map {
           case EqualTo(a: AttributeReference, l: Literal)
-              if a.dataType == StringType => strLit(l).map(a.name -> _)
+              if a.dataType == StringType => Str.unapply(l).map(a.name -> _)
           case EqualTo(l: Literal, a: AttributeReference)
-              if a.dataType == StringType => strLit(l).map(a.name -> _)
+              if a.dataType == StringType => Str.unapply(l).map(a.name -> _)
           // `<=>` with a non-null literal — same admission as EqualTo
           case EqualNullSafe(a: AttributeReference, l: Literal)
-              if a.dataType == StringType => strLit(l).map(a.name -> _)
+              if a.dataType == StringType => Str.unapply(l).map(a.name -> _)
           case EqualNullSafe(l: Literal, a: AttributeReference)
-              if a.dataType == StringType => strLit(l).map(a.name -> _)
+              if a.dataType == StringType => Str.unapply(l).map(a.name -> _)
           case _ => None
         }
         if (eqs.forall(_.isDefined) &&

@@ -78,7 +78,7 @@ object SegmentSink {
 
   /** Batch append, partitioned by segment bucket (expects SegmentCol
     * present): one action. Parquet writes each column's per-row-group
-    * min/max into the file footers, and [[SegmentStore.pruneSegments]]
+    * min/max into the file footers, and [[graft.plans.SegmentPruneRule]]
     * turns a dim predicate into a segment list from them BEFORE the scan,
     * extending partition pruning beyond the time key.
     */

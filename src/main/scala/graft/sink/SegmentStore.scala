@@ -29,7 +29,9 @@ import graft.sink.Footers.{Bound, DoubleBound, LongBound, StrBound}
   *
   * Scale: the merge is a groupBy on (bucket, dims) over already-reduced rows —
   * input cardinality is segments × dims × batches, orders of magnitude below
-  * raw events; partition pruning on `segment=` dirs applies before the scan.
+  * raw events. Every read installs [[graft.plans.SegmentPruneRule]] on its
+  * session, so a query's interval and dim predicates cut `segment=` dirs
+  * before the scan.
   */
 object SegmentStore {
 
@@ -51,6 +53,21 @@ object SegmentStore {
   def stored(spec: IngestionSpec): IngestionSpec =
     spec.copy(dataSchema = spec.dataSchema.copy(
       aggregators = spec.dataSchema.aggregators.map(stored)))
+
+  /** Rejects a rollup spec no read could merge, before a writer writes: a
+    * per-batch finalized `exactCardinality` does not re-merge, so the store
+    * would ingest fine and every read would throw in [[mergeColumn]]. */
+  def requireStorable(spec: IngestionSpec): Unit = {
+    def exactIn(a: AggregatorSpec): Boolean =
+      a.aggType == "exactCardinality" || a.aggregator.exists(exactIn)
+    require(!(spec.dataSchema.granularitySpec.rollup &&
+        spec.dataSchema.aggregators.exists(exactIn)),
+      "exactCardinality cannot stream: per-batch finalized distinct counts " +
+        s"don't re-merge at read (aggregators ${spec.dataSchema.aggregators
+          .filter(exactIn).map(a => s"${a.name}:${a.aggType}").mkString(",")}). " +
+        "Use hyperUnique (an estimate, stored as a mergeable HLL sketch) or " +
+        "hllSketch.")
+  }
 
   def mergeColumn(spec: AggregatorSpec, finalizeSketches: Boolean = true): Column =
     stored(spec).aggType match {
@@ -120,32 +137,19 @@ object SegmentStore {
     * rollup (one row per bucket × dims). The footer-merged schema
     * ([[Footers.schema]], what `mergeSchema` infers, without its Spark job)
     * tolerates schema evolution across chunks (new dims appear as nulls in
-    * old segments — SURVEY §2.9 schema-evolution row).
-    */
-  def read(spark: SparkSession, path: String, spec: IngestionSpec,
-      baseFilter: DataFrame => DataFrame = identity,
-      finalizeSketches: Boolean = true): DataFrame = {
-    graft.functions.GraftFunctions.register(spark) // sketch merge functions
-    val df = baseFilter(open(spark, path))
-    mergePartials(df, spec, finalizeSketches)
-  }
-
-  /** The stored rows of `paths` under their footer-merged schema: 0 Spark
-    * jobs to build. */
-  private[graft] def open(spark: SparkSession, paths: String*): DataFrame =
-    spark.read.schema(Footers.schema(spark, paths: _*)).parquet(paths: _*)
-
-  /** Shared partial→final merge for [[read]] and [[readUnion]] (one
-    * definition so the dim-classification and implicit-count rules cannot
-    * silently diverge — review finding r7):
+    * old segments — SURVEY §2.9 schema-evolution row). Filters on the
+    * result prune segments through the session's
+    * [[graft.plans.SegmentPruneRule]]. The merge:
     *  - raw-append store (rollup=false): rows were written unmodified, the
     *    spec's aggregator columns were never materialized — nothing to
     *    merge;
     *  - an aggregator-less rollup spec writes Pipeline.rollup's implicit
     *    count column `rows` — its re-merge is a sum (and it must not be
-    *    mistaken for a dimension). */
-  private def mergePartials(df: DataFrame, spec: IngestionSpec,
-      finalizeSketches: Boolean): DataFrame = {
+    *    mistaken for a dimension).
+    */
+  def read(spark: SparkSession, path: String, spec: IngestionSpec,
+      finalizeSketches: Boolean = true): DataFrame = {
+    val df = open(spark, path)
     if (!spec.dataSchema.granularitySpec.rollup) return df.drop("__batch_id")
     val implicitRows = spec.dataSchema.aggregators.isEmpty
     val dimNames = df.columns.toSeq.filterNot { c =>
@@ -160,46 +164,23 @@ object SegmentStore {
       .agg(merges.head, merges.tail: _*)
   }
 
-  /** Segments whose zone map admits `dim = value` (min ≤ value ≤ max). A
-    * segment with no bound for `dim` is kept (schema evolution: the dim may
-    * not exist in old chunks).
-    */
-  def pruneSegments(spark: SparkSession, path: String, dim: String,
-      value: String): Seq[String] =
-    pruneSegmentsRange(spark, path, dim, value, value)
-
-  /** Range form: segments whose zone-map interval [lo, hi] overlaps
-    * [lower, upper] (dim BETWEEN predicates). String-typed: only string
-    * bounds answer (lexicographic min/max is sound there); a numeric
-    * column queried through this form has none → kept conservatively (use
-    * [[pruneSegmentsNumericRange]] instead). Footers only, no Spark job.
-    */
-  def pruneSegmentsRange(spark: SparkSession, path: String, dim: String,
-      lower: String, upper: String): Seq[String] =
-    zoneMaps(spark, path).collect {
-      case (seg, z) if admitsRange(z.get(dim), lower, upper) => seg
-    }
-
-  /** Numeric range pruning: segments whose typed min/max overlaps
-    * [lower, upper]. Long-family bounds compare in exact long space
-    * (predicate bounds floor/ceil'd — no 2⁵³ double-rounding false
-    * exclusions); double-family bounds compare in Spark's double order. A
-    * segment with no numeric bound for the column (evolved schema, string
-    * column) is kept conservatively. Footers only, no Spark job.
-    */
-  def pruneSegmentsNumericRange(spark: SparkSession, path: String, column: String,
-      lower: Double, upper: Double): Seq[String] =
-    zoneMaps(spark, path).collect {
-      case (seg, z) if admitsNumeric(z.get(column), lower, upper) => seg
-    }
+  /** The stored rows of the store at `path` under their footer-merged
+    * schema: 0 Spark jobs to build. Registers graft's functions (the sketch
+    * merges) and the segment pruner on the session first, so every store
+    * read prunes. */
+  private[graft] def open(spark: SparkSession, path: String): DataFrame = {
+    graft.functions.GraftFunctions.register(spark)
+    spark.read.schema(Footers.schema(spark, path)).parquet(path)
+  }
 
   /** Whether a segment whose zone map gives `b` for a column can hold a
-    * string in [lower, upper]; true without a string bound. */
-  private[graft] def admitsRange(b: Option[Bound], lower: String,
-      upper: String): Boolean = b match {
+    * string in [lower, upper] (None: that end is open); true without a
+    * string bound. */
+  private[graft] def admitsRange(b: Option[Bound], lower: Option[String],
+      upper: Option[String]): Boolean = b match {
     case Some(StrBound(lo, hi)) =>
-      UTF8String.fromString(upper).compareTo(lo) >= 0 &&
-        UTF8String.fromString(lower).compareTo(hi) <= 0
+      upper.forall(UTF8String.fromString(_).compareTo(lo) >= 0) &&
+        lower.forall(UTF8String.fromString(_).compareTo(hi) <= 0)
     case _ => true
   }
 
@@ -249,71 +230,12 @@ object SegmentStore {
       .map(_.stripPrefix(s"${Pipeline.SegmentCol}=")).toSeq.sorted
   }
 
-  /** [[read]] restricted to the segments the zone-map admits for
-    * `dim = value` — the predicate turns into partition pruning on the
-    * `segment=` directory key, so excluded segments are never listed or
-    * scanned. Driver state is the segment list (bounded by time chunks,
-    * not data).
-    */
-  def readPruned(spark: SparkSession, path: String, spec: IngestionSpec,
-      dim: String, value: String): DataFrame = {
-    val segs = pruneSegments(spark, path, dim, value)
-    read(spark, path, spec, df =>
-      df.filter(col(Pipeline.SegmentCol).isin(segs: _*) && col(dim) === value))
-  }
-
-  /** [[read]] restricted to segments the NUMERIC zone-map admits for
-    * `column BETWEEN lower AND upper`, with the row-level predicate applied
-    * on the stored rows. Row semantics: sound for numeric dimension columns
-    * and for raw-append (isRollup=false) stores, where stored rows are the
-    * queryable values. For per-batch ROLLUP stores note the row filter sees
-    * partial metric values, not the merged final — filter after [[read]]
-    * when the predicate targets merged metrics (the segment-level prune is
-    * then still a valid superset, since every partial lies within the
-    * segment's bounds).
-    */
-  def readPrunedNumeric(spark: SparkSession, path: String, spec: IngestionSpec,
-      column: String, lower: Double, upper: Double): DataFrame = {
-    val segs = pruneSegmentsNumericRange(spark, path, column, lower, upper)
-    read(spark, path, spec, df =>
-      df.filter(col(Pipeline.SegmentCol).isin(segs: _*) &&
-        col(column) >= lit(lower) && col(column) <= lit(upper)))
-  }
-
-  /** Interval-restricted read — the Druid query `intervals` clause
-    * (every Druid query carries one). Segment dir names are
-    * chronologically sortable (`yyyy-MM-dd'T'HH.mm.ss`), so the interval
-    * becomes a string range filter on the partition key: excluded time
-    * chunks are pruned before the scan, no zone-map needed for the time
-    * dimension. Rolled rows carry their queryGranularity BUCKET timestamp,
-    * so (as in Druid) interval resolution is the bucket: any bucket
-    * intersecting [from, to) is returned whole.
-    */
-  def readInterval(spark: SparkSession, path: String, spec: IngestionSpec,
-      from: java.sql.Timestamp, to: java.sql.Timestamp): DataFrame = {
-    val gran = spec.dataSchema.granularitySpec
-    // rolled rows carry their queryGranularity BUCKET timestamp, so the
-    // lower bound truncates to the bucket (Druid's interval-resolution
-    // rule); raw-append rows (rollup=false) keep their UNtruncated event
-    // time, so the raw bound applies — a truncated bound would return rows
-    // before `from` (review finding r7)
-    val fromBucket =
-      if (!gran.rollup) from
-      else java.sql.Timestamp.from(gran.queryGranularity
-        .truncateInstant(from.toInstant, writerZone(spark, path)))
-    read(spark, path, spec, df =>
-      df.filter(col(Pipeline.SegmentCol) >=
-          chunkName(spark, path, gran.segmentGranularity, from) &&
-        col(Pipeline.SegmentCol) <= writerFmt(spark, path).format(to))
-        .filter(col(Pipeline.TsCol) >= lit(fromBucket) && col(Pipeline.TsCol) < lit(to)))
-  }
-
   /** Session-zone scaffolding shared by every chunk-name comparison
-    * ([[readInterval]]/[[applyRetention]]/[[killInterval]]): segment dir
-    * names were produced by date_format + date_trunc under the SESSION
-    * timezone, so bounds must render and truncate the same way — one
-    * definition, not three copies that can silently diverge (review
-    * finding r7). */
+    * ([[applyRetention]]/[[killInterval]] and the prune rule's time
+    * admission): segment dir names were produced by date_format +
+    * date_trunc under the SESSION timezone, so bounds must render and
+    * truncate the same way — one definition, not copies that can silently
+    * diverge (review finding r7). */
   private def sessionZone(spark: SparkSession): java.time.ZoneId =
     java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone",
       java.util.TimeZone.getDefault.getID))
@@ -451,21 +373,6 @@ object SegmentStore {
         s"$path/${Pipeline.SegmentCol}=$seg"), true)
     }
     killed
-  }
-
-  /** Union-datasource read — the Druid `union` datasource: one logical
-    * rollup over several stores sharing a spec (e.g. per-topic stores from
-    * [[graft.sources.KafkaRouter]] queried as one). Partials from every
-    * store re-merge in the same groupBy, so the result is identical to
-    * having ingested into a single store.
-    */
-  def readUnion(spark: SparkSession, paths: Seq[String], spec: IngestionSpec,
-      finalizeSketches: Boolean = true): DataFrame = {
-    require(paths.nonEmpty, "readUnion needs at least one store path")
-    graft.functions.GraftFunctions.register(spark)
-    val parts = paths.map(p => open(spark, p).drop("__batch_id"))
-    mergePartials(parts.reduce(_ unionByName (_, allowMissingColumns = true)),
-      spec, finalizeSketches)
   }
 
   /** Compaction: rewrite per-batch partials as finals, one pass per store —

@@ -50,6 +50,8 @@ object IndexTask {
     val spec = Option(root.get("spec")).getOrElse(
       throw new IllegalArgumentException("task needs a spec"))
     val ingestion = SpecLoader.fromJson(spec.toString)
+    // before the replace below deletes the dataSource's current store
+    graft.sink.SegmentStore.requireStorable(ingestion)
     val ds = ingestion.dataSchema.dataSource
     val io = Option(spec.get("ioConfig")).getOrElse(
       throw new IllegalArgumentException("task spec needs an ioConfig"))

@@ -56,18 +56,7 @@ final class IngestStream(
       now: Column = current_timestamp(),
       trigger: Trigger = Trigger.AvailableNow(),
       writer: Option[(DataFrame, Long) => Unit] = None): StreamingQuery = {
-    // per-batch finalized distinct counts cannot re-merge
-    // (SegmentStore.mergeColumn rejects them — the store would ingest fine
-    // and throw on every read)
-    def exactIn(a: graft.config.AggregatorSpec): Boolean =
-      a.aggType == "exactCardinality" || a.aggregator.exists(exactIn)
-    require(!(spec.dataSchema.granularitySpec.rollup &&
-        spec.dataSchema.aggregators.exists(exactIn)),
-      "exactCardinality cannot stream: per-batch finalized distinct counts " +
-        s"don't re-merge at read (aggregators ${spec.dataSchema.aggregators
-          .filter(exactIn).map(a => s"${a.name}:${a.aggType}").mkString(",")}). " +
-        "Use hyperUnique (an estimate, stored as a mergeable HLL sketch) or " +
-        "hllSketch.")
+    graft.sink.SegmentStore.requireStorable(spec)
     val q = perBatch(source, outputPath, now, writer)
       .option("checkpointLocation", checkpointDir).trigger(trigger).start()
     query = Some(q)

@@ -1463,6 +1463,108 @@ class HttpIngestSpec extends SparkSpec {
     } finally server.stop()
   }
 
+  test("index task with an exactCardinality metric fails before it replaces " +
+      "the dataSource's store") {
+    spark.version // force the shared session so handler threads see a default
+    val tmp = Files.createTempDirectory("graft-index-ec").toString
+    Files.createDirectories(Paths.get(s"$tmp/spool"))
+    val server = new HttpIngestServer(s"$tmp/spool",
+      indexTaskRoot = Some(s"$tmp/tasks"))
+    val port = server.start()
+    try {
+      def task(metric: String) =
+        s"""{"type": "index_parallel", "spec": {
+             "dataSchema": {"dataSource": "ec_batch",
+               "timestampSpec": {"column": "ts", "format": "auto"},
+               "dimensionsSpec": {"dimensions": ["etype"]},
+               "metricsSpec": [{"type": "count", "name": "cnt"}$metric],
+               "granularitySpec": {"segmentGranularity": "DAY",
+                                   "queryGranularity": "DAY"}},
+             "ioConfig": {"type": "index_parallel",
+               "inputSource": {"type": "inline", "data": "2024-03-01 01:00:00,click,u1\\n2024-03-01 02:00:00,click,u2"},
+               "inputFormat": {"type": "csv", "columns": ["ts", "etype", "user"]}}}}"""
+      def status(body: String): String = {
+        val id = "index_graft_[0-9a-f]+".r.findFirstIn(body).get
+        val (sc, sb) = get(port, s"/druid/indexer/v1/task/$id/status")
+        assert(sc == 200, sb)
+        sb
+      }
+      val sql = """{"query": "SELECT SUM(cnt) AS n FROM ec_batch"}"""
+      val (c1, b1) = post(port, "/druid/indexer/v1/task", task(""))
+      assert(c1 == 200 && status(b1).contains("\"status\":\"SUCCESS\""), b1)
+      assert(post(port, "/druid/v2/sql", sql) == (200, """[{"n":2}]"""))
+      // a replace task whose store no read could merge: rejected with the
+      // store-form message before the current store is deleted
+      val (c2, b2) = post(port, "/druid/indexer/v1/task", task(
+        """, {"type": "exactCardinality", "name": "users", "fieldName": "user"}"""))
+      assert(c2 == 200, b2)
+      val s2 = status(b2)
+      assert(s2.contains("\"status\":\"FAILED\"") &&
+        s2.contains("exactCardinality cannot stream") &&
+        s2.contains("users:exactCardinality"), s2)
+      assert(post(port, "/druid/v2/sql", sql) == (200, """[{"n":2}]"""))
+    } finally server.stop()
+  }
+
+  test("Daemon broker: an interval query scans only its hour's segment dir") {
+    val tmp = Files.createTempDirectory("graft-daemon-prune").toString
+    val spec = graft.config.SpecLoader.fromJson(
+      """{"dataSchema": {"dataSource": "hours_ds",
+            "parser": {"parseSpec": {
+              "timestampSpec": {"column": "ts", "format": "auto"},
+              "dimensionsSpec": {"dimensions": ["etype"]}}},
+            "metricsSpec": [{"type": "count", "name": "cnt"}],
+            "granularitySpec": {"segmentGranularity": "HOUR", "queryGranularity": "HOUR"}},
+           "tuning": {"windowPeriod": "PT2H"}}""")
+    val schema = StructType(Seq(StructField("ts", StringType),
+      StructField("etype", StringType), StructField("value", DoubleType)))
+    val handle = graft.Daemon.run(spark, tmp, schema, Seq(spec),
+      trigger = Trigger.ProcessingTime(50),
+      now = lit(Timestamp.valueOf("2024-03-01 12:30:00")))
+    // the segments every query over the store scanned
+    val scans = new java.util.concurrent.LinkedBlockingQueue[Set[String]]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
+        val stores = qe.sparkPlan.collect {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec
+              if s.relation.location.rootPaths.exists(_.toString.contains("/stores/")) => s
+        }
+        if (stores.nonEmpty) scans.put(SparkSpec.scannedSegments(qe.sparkPlan))
+      }
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    try {
+      val (pc, pb) = post(handle.port, "/v1/post/hours_ds",
+        """[{"ts":"2024-03-01 11:10:00","etype":"c","value":1.0},
+            {"ts":"2024-03-01 12:10:00","etype":"c","value":1.0},
+            {"ts":"2024-03-01 12:20:00","etype":"d","value":1.0},
+            {"ts":"2024-03-01 13:10:00","etype":"c","value":1.0}]""")
+      assert(pc == 200 && pb == """{"result":{"received":4,"sent":4}}""", pb)
+      val store = s"$tmp/stores/hours_ds"
+      assert(graft.sink.SegmentStore.listSegmentDirs(spark, store).size == 3)
+      spark.listenerManager.register(listener)
+      val (qc, qb) = post(handle.port, "/druid/v2",
+        """{"queryType": "timeseries", "dataSource": "hours_ds", "granularity": "all",
+            "intervals": ["2024-03-01T12:00:00Z/2024-03-01T13:00:00Z"],
+            "aggregations": [{"type": "longSum", "name": "n", "fieldName": "cnt"}]}""")
+      assert(qc == 200, qb)
+      val scanned = scans.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+      assert(scanned == Set("2024-03-01T12.00.00"), s"scanned: $scanned")
+      // the answer is the unfiltered read's rows inside the interval
+      val (lo, hi) = (Timestamp.valueOf("2024-03-01 12:00:00"),
+        Timestamp.valueOf("2024-03-01 13:00:00"))
+      val expected = handle.streams("hours_ds").brokerView()
+        .select($"__time", $"cnt").as[(Timestamp, Long)].collect()
+        .collect { case (t, n) if !t.before(lo) && t.before(hi) => n }.sum
+      assert(expected == 2L && qb.contains(s"\"n\":$expected"), qb)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      handle.close()
+    }
+  }
+
   test("JSON batch-ingestion task API: index_parallel submit/status, SQL + " +
       "native queries over the store, append re-merge, sys.tasks, failure") {
     spark.version // force the shared session so handler threads see a default

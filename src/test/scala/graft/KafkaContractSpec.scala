@@ -208,7 +208,7 @@ class KafkaContractSpec extends SparkSpec {
     assert(got == Seq((3L, 2L)), s"12:00 bucket: $got")
   }
 
-  test("router: an exactCardinality route is rejected with the mode router's message") {
+  test("router: an exactCardinality route is rejected with the store-form message") {
     implicit val sqlCtx = spark.sqlContext
     val tmp = Files.createTempDirectory("graft-kafka-ec").toString
     val ecSpec = spec.copy(dataSchema = spec.dataSchema.copy(dataSource = "ec_kafka",

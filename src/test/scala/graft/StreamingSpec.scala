@@ -402,8 +402,7 @@ class StreamingSpec extends SparkSpec {
     assert(last == Seq((2L, 2L)), s"12:09 bucket: $last")
   }
 
-  test("start: exactCardinality is unstreamable in either mode - " +
-      "a loud rejection naming the metric and the fixes, no listener left") {
+  test("start: an exactCardinality rollup is rejected with its fixes; no listener left") {
     implicit val sqlCtx = spark.sqlContext
     // per-batch finalized distinct counts don't re-merge at read, and
     // Structured Streaming rejects COUNT DISTINCT in stateful aggregation -
@@ -901,10 +900,14 @@ class StreamingSpec extends SparkSpec {
     assert(left == Set(("click", 2L), ("view", 3L)))
 
     // union datasource: second store shares a (bucket, dim) with the first —
-    // partials re-merge across stores exactly as within one store
+    // the broker's `union` merges the stores' rows as one store's would
     mk(s"$tmp/b", "click", "2024-03-01 12:00:00", 10L)
-    val union = graft.sink.SegmentStore.readUnion(spark,
-      Seq(s"$tmp/a", s"$tmp/b"), rSpec)
+    val union = graft.queries.DruidQueryCompiler.compile(
+      """{"queryType": "groupBy", "granularity": "all", "dimensions": ["etype"],
+          "dataSource": {"type": "union", "dataSources": ["a", "b"]},
+          "aggregations": [{"type": "longSum", "name": "cnt", "fieldName": "cnt"}]}""",
+      ds => graft.sink.SegmentStore.read(spark, s"$tmp/$ds", rSpec)
+        .withColumnRenamed(graft.pipeline.Pipeline.TsCol, "__time"))
       .select($"etype", $"cnt").as[(String, Long)].collect().toSet
     assert(union == Set(("click", 12L), ("view", 3L)), s"union: $union")
   }
@@ -937,7 +940,7 @@ class StreamingSpec extends SparkSpec {
       .select($"cnt").as[Long].collect().toSeq == Seq(1L))
   }
 
-  test("MONTH granularity sketch rollup streams via the routed per-batch path") {
+  test("MONTH granularity sketch rollup streams as per-batch partials") {
     implicit val sqlCtx = spark.sqlContext
     val mSpec = IngestionSpec(
       DataSchema("month_events", TimestampSpec("ts"),
@@ -1053,16 +1056,19 @@ class StreamingSpec extends SparkSpec {
       Ev(ts("2024-03-01 12:20:00"), "view", 4.0))    // segment 12:00
     ingest.flushAndStop()
 
-    // interval resolution = queryGranularity bucket (Druid semantics on
-    // rolled data): [12:05, 12:15) intersects the whole 12:00 hour bucket,
-    // so both its rows return; the 11:00 bucket is excluded
-    val got = graft.sink.SegmentStore.readInterval(spark, s"$tmp/out", spec,
-      ts("2024-03-01 12:05:00"), ts("2024-03-01 12:15:00"))
-      .select($"etype", $"cnt").as[(String, Long)].collect().toSet
-    assert(got == Set(("click", 1L), ("view", 1L)))
+    // an interval is the broker's `__ts ∈ [start, end)` on the rolled
+    // bucket timestamps: [12:00, 13:00) scans only the 12:00 segment dir
+    def during(from: String, to: String) =
+      graft.sink.SegmentStore.read(spark, s"$tmp/out", spec)
+        .filter($"__ts" >= ts(from) && $"__ts" < ts(to))
+    val hour = during("2024-03-01 12:00:00", "2024-03-01 13:00:00")
+    assert(SparkSpec.scannedSegments(hour) == Set("2024-03-01T12.00.00"))
+    assert(hour.select($"etype", $"cnt").as[(String, Long)].collect().toSet ==
+      Set(("click", 1L), ("view", 1L)))
+    // a mid-bucket interval holds no bucket timestamp, so no row
+    assert(during("2024-03-01 12:05:00", "2024-03-01 12:15:00").count() == 0)
     // interval spanning everything returns the full rollup
-    assert(graft.sink.SegmentStore.readInterval(spark, s"$tmp/out", spec,
-      ts("2024-03-01 00:00:00"), ts("2024-03-02 00:00:00")).count() == 3)
+    assert(during("2024-03-01 00:00:00", "2024-03-02 00:00:00").count() == 3)
 
     val meta = graft.sink.SegmentStore.metadata(spark, s"$tmp/out")
       .orderBy($"segment")
@@ -1108,32 +1114,23 @@ class StreamingSpec extends SparkSpec {
     input.addData(Ev(ts("2024-03-01 12:10:00"), "zulu", 2.0))
     ingest.flushAndStop()
 
-    assert(graft.sink.SegmentStore.read(spark, s"$tmp/out", spec).count() == 2)
+    def read(store: String) = graft.sink.SegmentStore.read(spark, s"$tmp/$store", spec)
+    assert(read("out").count() == 2)
 
-    assert(graft.sink.SegmentStore.pruneSegments(spark, s"$tmp/out", "etype", "alpha")
-      == Seq("2024-03-01T11.00.00"))
-    // physical proof: the admitted-segment filter readPruned applies turns
-    // into partition pruning — only one directory is scanned (checked on the
-    // pre-aggregation scan; the merged read's agg plan is AQE-wrapped)
-    val admitted = graft.sink.SegmentStore.pruneSegments(spark, s"$tmp/out", "etype", "alpha")
-    val base = spark.read.parquet(s"$tmp/out").filter($"segment".isin(admitted: _*))
-    val scan = base.queryExecution.executedPlan.collectLeaves().collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }
-    assert(scan.isDefined)
-    assert(scan.get.selectedPartitions.partitionCount == 1,
-      s"expected 1 zone-map-admitted partition, scanned ${scan.get.selectedPartitions.partitionCount}")
-    val pruned = graft.sink.SegmentStore.readPruned(spark, s"$tmp/out", spec,
-      "etype", "alpha")
+    // a dim predicate on the merged read prunes through the session's rule:
+    // only the segment dir whose zone map admits the value is scanned
+    val pruned = read("out").filter($"etype" === "alpha")
+    assert(SparkSpec.scannedSegments(pruned) == Set("2024-03-01T11.00.00"))
     assert(pruned.select($"etype", $"cnt").as[(String, Long)].collect().toSeq
       == Seq(("alpha", 1L)))
 
     // range predicates use interval overlap: ["a","b"] touches only the
     // alpha segment, ["alpha","zzz"] touches both
-    assert(graft.sink.SegmentStore.pruneSegmentsRange(spark, s"$tmp/out", "etype", "a", "b")
-      == Seq("2024-03-01T11.00.00"))
-    assert(graft.sink.SegmentStore.pruneSegmentsRange(spark, s"$tmp/out", "etype", "alpha", "zzz")
-      == Seq("2024-03-01T11.00.00", "2024-03-01T12.00.00"))
+    assert(SparkSpec.scannedSegments(read("out")
+      .filter($"etype" >= "a" && $"etype" <= "b")) == Set("2024-03-01T11.00.00"))
+    assert(SparkSpec.scannedSegments(read("out")
+      .filter($"etype" >= "alpha" && $"etype" <= "zzz")) ==
+      Set("2024-03-01T11.00.00", "2024-03-01T12.00.00"))
 
     // conservative fallback: a segment whose files carry no bound for the
     // column is kept — here a dim added after the first two segments were
@@ -1143,13 +1140,15 @@ class StreamingSpec extends SparkSpec {
       .toDF(graft.pipeline.Pipeline.TsCol, "etype", "region", "cnt", "total",
         graft.pipeline.Pipeline.SegmentCol)
     graft.sink.SegmentSink.writeMicroBatch(s"$tmp/out")(evolved, 99L)
-    assert(graft.sink.SegmentStore.pruneSegments(spark, s"$tmp/out", "region", "zz")
-      == Seq("2024-03-01T11.00.00", "2024-03-01T12.00.00"))
+    val noRegion = read("out").filter($"region" === "zz")
+    assert(SparkSpec.scannedSegments(noRegion) ==
+      Set("2024-03-01T11.00.00", "2024-03-01T12.00.00"))
+    assert(noRegion.count() == 0)
 
     // the compacted store's own footers carry its zone map
     graft.sink.SegmentStore.compact(spark, s"$tmp/out", spec, s"$tmp/compacted")
-    assert(graft.sink.SegmentStore.pruneSegments(spark, s"$tmp/compacted", "etype", "zulu")
-      == Seq("2024-03-01T12.00.00"))
+    assert(SparkSpec.scannedSegments(read("compacted").filter($"etype" === "zulu"))
+      == Set("2024-03-01T12.00.00"))
   }
 
   test("NUMERIC zone-map prunes segments on a metric range predicate") {
@@ -1165,33 +1164,22 @@ class StreamingSpec extends SparkSpec {
     input.addData(Ev(ts("2024-03-01 12:10:00"), "zulu", 100.0))
     ingest.flushAndStop()
 
+    // metric predicates filter the stored partials: a plain read of the
+    // store, pruned by the rule every store read installs on the session
+    graft.functions.GraftFunctions.register(spark)
+    def stored(c: String, from: Any, to: Any) =
+      spark.read.parquet(s"$tmp/out").filter(col(c) >= lit(from) && col(c) <= lit(to))
     // double-family bounds: total BETWEEN [0, 10] admits only the 11:00
     // segment — a string zone-map could NOT say this ("100.0" < "2.0" lex)
-    assert(graft.sink.SegmentStore.pruneSegmentsNumericRange(
-      spark, s"$tmp/out", "total", 0.0, 10.0) == Seq("2024-03-01T11.00.00"))
+    val low = stored("total", 0.0, 10.0)
+    assert(SparkSpec.scannedSegments(low) == Set("2024-03-01T11.00.00"))
+    assert(low.select($"etype", $"cnt").as[(String, Long)].collect().toSeq ==
+      Seq(("alpha", 1L)))
     // long-family bounds (cnt is LongType): both segments carry cnt=1
-    assert(graft.sink.SegmentStore.pruneSegmentsNumericRange(
-      spark, s"$tmp/out", "cnt", 1.0, 1.0).size == 2)
+    assert(SparkSpec.scannedSegments(stored("cnt", 1L, 1L)).size == 2)
     // disjoint range admits nothing
-    assert(graft.sink.SegmentStore.pruneSegmentsNumericRange(
-      spark, s"$tmp/out", "total", 500.0, 900.0).isEmpty)
-    // a column with no numeric stats rows is kept conservatively
-    assert(graft.sink.SegmentStore.pruneSegmentsNumericRange(
-      spark, s"$tmp/out", "etype", 0.0, 1.0).size == 2)
-
-    // physical proof: the admitted list turns into partition pruning — one
-    // directory scanned (pre-aggregation scan, as in the string spec)
-    val segs = graft.sink.SegmentStore.pruneSegmentsNumericRange(
-      spark, s"$tmp/out", "total", 0.0, 10.0)
-    val base = spark.read.parquet(s"$tmp/out").filter($"segment".isin(segs: _*))
-    val scan = base.queryExecution.executedPlan.collectLeaves().collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }
-    assert(scan.isDefined && scan.get.selectedPartitions.partitionCount == 1,
-      s"expected 1 admitted partition, got ${scan.map(_.selectedPartitions.partitionCount)}")
-    val got = graft.sink.SegmentStore.readPrunedNumeric(spark, s"$tmp/out", spec,
-      "total", 0.0, 10.0).select($"etype", $"cnt").as[(String, Long)].collect().toSeq
-    assert(got == Seq(("alpha", 1L)))
+    val none = stored("total", 500.0, 900.0)
+    assert(SparkSpec.scannedSegments(none).isEmpty && none.count() == 0)
   }
 
   test("SegmentPruneRule: a PLAIN filter over a store auto-prunes via the footers") {
@@ -1211,9 +1199,12 @@ class StreamingSpec extends SparkSpec {
         case f: org.apache.spark.sql.execution.FileSourceScanExec => f
       }.get
 
-    // the SAME read through a session WITHOUT the rule scans both segments
+    // an unfiltered read scans both segments; on the shared session, where
+    // register installed the rule, the filtered read scans one
+    assert(scanOf(spark.read.parquet(s"$tmp/out")).selectedPartitions.partitionCount == 2)
+    graft.functions.GraftFunctions.register(spark)
     assert(scanOf(spark.read.parquet(s"$tmp/out").filter($"etype" === "alpha"))
-      .selectedPartitions.partitionCount == 2)
+      .selectedPartitions.partitionCount == 1)
 
     org.apache.spark.sql.SparkSession.clearActiveSession()
     org.apache.spark.sql.SparkSession.clearDefaultSession()
@@ -1224,8 +1215,8 @@ class StreamingSpec extends SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     try {
-      // string dim equality: no readPruned call, no segment predicate — the
-      // optimizer injects the admitted-segment IN from the footers
+      // string dim equality: no segment predicate — the optimizer injects
+      // the admitted-segment IN from the footers
       val q1 = s2.read.parquet(s"$tmp/out").filter(col("etype") === "alpha")
       assert(scanOf(q1).selectedPartitions.partitionCount == 1,
         "auto-prune must cut the scan to the admitted segment dir")
@@ -1267,6 +1258,14 @@ class StreamingSpec extends SparkSpec {
       val q6 = s2.read.parquet(s"$tmp/out")
         .filter(col(graft.pipeline.Pipeline.TsCol) < lit(ts("2024-03-01 10:00:00")))
       assert(q6.count() == 0)
+      // a half-open interval [11:00, 12:00) ends where the 12:00 chunk
+      // starts: that chunk cannot match, so one dir is scanned, not two
+      val q6h = s2.read.parquet(s"$tmp/out")
+        .filter(col(graft.pipeline.Pipeline.TsCol) >= lit(ts("2024-03-01 11:00:00")) &&
+          col(graft.pipeline.Pipeline.TsCol) < lit(ts("2024-03-01 12:00:00")))
+      assert(scanOf(q6h).selectedPartitions.partitionCount == 1,
+        "the chunk starting at a strict upper bound must not be scanned")
+      assert(q6h.select($"etype").collect().map(_.getString(0)).toSeq == Seq("alpha"))
 
       // a NEW segment appearing must be admitted — a stale IN list would
       // silently drop the new chunk's rows
